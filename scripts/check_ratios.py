@@ -13,7 +13,8 @@ Accepts any of the three bench shapes: bench_full.json
 envelope ({"parsed": <driver line>}). Queries folded into the driver
 line's "fast" bucket carry no per-query time there — run against
 bench_full.json for full coverage (a note reports how many were
-skipped).
+skipped). A "queries" map that comes with a "fast" bucket is a Bench
+summary line in seconds, not bench_full.json, and is rejected.
 
 The aggregate 2x gate is the driver's; this makes it bind per query so a
 single regression can't hide inside the total. Queries where DuckDB
@@ -49,6 +50,12 @@ def main():
         bench = bench["parsed"]
     unbenched = 0
     if "queries" in bench:          # bench_full.json: seconds, every query
+        if "fast" in bench:
+            # a Bench summary line keeps only its slow queries there;
+            # read as full coverage, the "fast" ones would go unreported
+            sys.exit(f"{bench_path}: a \"queries\" map with a \"fast\" "
+                     "bucket is a Bench summary line, not bench_full.json; "
+                     "pass bench_full.json for per-query coverage")
         sp = bench["queries"]
     elif "queries_ms" in bench:     # driver line: ms ints + "fast" bucket
         sp = {n: ms / 1000.0 for n, ms in bench["queries_ms"].items()}

@@ -374,8 +374,9 @@ object Dispatch {
   }
 
   /** Trailing-range rolling aggregate, tier chosen from the data:
-    * plain keyed window below [[HotKeyShare]] concentration, the
-    * span-block decomposition above (bit-equal, spec-pinned). */
+    * plain keyed window below [[HotKeyShare]] concentration; above it,
+    * for an integral ts, the halo fold over (key, span block): one
+    * exchange, bit-equal to the window on integral values (spec-pinned). */
   def rollingAggAuto(df: DataFrame, keyCol: String, tsCol: String,
                      valueCol: String, span: Long,
                      hotKeyShare: Double = HotKeyShare,
@@ -383,7 +384,8 @@ object Dispatch {
     val st = stats.getOrElse(keyStats(df, Seq(keyCol)))
     val tier = chooseEventsTier(st, hotKeyShare)
     logDecision("rollingAgg", tier, st)
-    if (tier == Skewed && span >= 1)
+    if (tier == Skewed && span >= 1 && graft.ops.Events.isIntegral(
+        df.schema(tsCol).dataType))
       graft.ops.Events.rollingAggSkewed(df, keyCol, tsCol, valueCol, span)
     else graft.ops.Events.rollingAgg(df, keyCol, tsCol, valueCol, span)
   }

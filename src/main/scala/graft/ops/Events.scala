@@ -1,8 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import scala.collection.mutable.ArrayBuffer
 
 /** Event-stream operators Spark lacks as built-ins, composed from
   * keyed windows so they keep Catalyst's planning (per the
@@ -270,76 +273,167 @@ object Events {
         col("roll_sum").cast("double") / col("roll_n"))
   }
 
-  /** [[rollingAgg]] for the DOUBLE-DIGIT-fraction hot-key regime — the
-    * escalation path the r13 skew probe left documented. The plain
-    * operator's one Exchange partitions by key alone, so a key holding
-    * 30% of a 100 TB corpus sorts 30 TB on one task. This variant
-    * decomposes the trailing range frame by span-width TIME BLOCKS
-    * (`b = floor(ts/span)`): a row's window `[ts-span, ts]` provably
-    * spans at most its own block and the previous one (the cut
-    * `ts-span` always lands in block b-1), so
+  /** [[rollingAgg]] for the DOUBLE-DIGIT-fraction hot-key regime. The
+    * plain operator's one Exchange partitions by key alone, so a key
+    * holding 30% of a 100 TB corpus sorts 30 TB on one task. This
+    * variant partitions by (key, span-width TIME BLOCK
+    * `b = floor(ts/span)`) instead. A row's frame `[ts-span, ts]` lies
+    * in its own block and the one before, so every row travels to its
+    * own block and, when it has a ts and a value, as a HALO copy to
+    * block b+1. The plan is one hash
+    * Exchange on (key, block), one sort on (key, block, ts) and one
+    * streaming fold ([[trailingFold]]): per equal-ts run (RANGE peers)
+    * it absorbs the whole run before emitting any of it, evicts
+    * ts < t - span and emits the block's own rows only. That is O(n)
+    * per task, where the window's sliding frame re-sums its buffer.
     *
-    *   result = prefix-in-own-block ⊕ suffix-of-previous-block-at-cut
-    *
-    * Term 1 is a RANGE window over partition (key, block). Term 2
-    * plants one tagged cut row per DISTINCT (key, ts) into partition
-    * (key, block(ts-span)) and reads "aggregate of data rows with
-    * ts >= cut" off ONE descending RANGE window (cut rows carry null
-    * values, so they never contaminate the aggregate; RANGE peers make
-    * ties at the cut inclusive, matching the plain frame's closed
-    * lower bound). The terms recombine with a null-safe add keyed on
-    * (key, ts). Every partition is bounded by the hot key's rows per
-    * span of TIME, not its corpus share — a key must concentrate its
-    * entire volume inside one span window before any task sees it all,
-    * and then the plain frame would buffer the same rows. Cost: ~5
-    * exchanges vs the plain operator's 1, all keyed by (key, block) or
-    * (key, ts) — the price of skew immunity; use [[rollingAgg]] below
-    * double-digit key concentration. Output is bit-identical
-    * (EventsSpec law) for integral `tsCol`/`valueCol`; null `tsCol`
-    * rows are undefined in both variants (the range frame itself has
-    * no null-ts contract). */
+    * Every partition is bounded by the hot key's rows in two spans of
+    * TIME, not by its corpus share: no exchange is keyed by the bare
+    * key. The price is the halo, which shuffles those rows twice (copies
+    * carry only key, ts and value), so use [[rollingAgg]] below
+    * double-digit key concentration. Columns and types equal
+    * [[rollingAgg]]'s; integral values are bit-identical (EventsSpec
+    * law), null keys form one group like the window's null partition,
+    * and null-ts rows frame only each other, as in the RANGE frame.
+    * `tsCol` must be integral. */
   def rollingAggSkewed(df: DataFrame, keyCol: String, tsCol: String,
                        valueCol: String, span: Long): DataFrame = {
     require(span >= 1, "span must be >= 1 (rollingAgg covers span=0)")
+    require(isIntegral(df.schema(tsCol).dataType),
+      s"'$tsCol' must be integral for the skewed tier")
     def idiv(a: Column, b: Long): Column = call_function("div", a, lit(b))
-    def floorDiv(x: Column): Column = {
-      val xl = x.cast("long")
-      when(xl >= 0, idiv(xl, span)).otherwise(-idiv(-xl + (span - 1), span))
-    }
-    val vType = df.schema(valueCol).dataType
-    val tType = df.schema(tsCol).dataType
-    // term 1: same-block prefix, partition (key, block)
-    val w1 = Window.partitionBy(col(keyCol), floorDiv(col(tsCol)))
-      .orderBy(col(tsCol).asc)
-      .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    val t1 = df.withColumn("__n1", count(col(valueCol)).over(w1))
-      .withColumn("__s1", sum(col(valueCol)).over(w1))
-    // term 2: previous-block suffix at the cut, one row per distinct
-    // (key, ts); data rows tag 0 under their own block, cut rows tag 1
-    // under block(ts-span) carrying the original ts for the join back
-    val data = df.select(col(keyCol).as("__k"),
-      floorDiv(col(tsCol)).as("__b"), col(tsCol).as("__t"),
-      col(valueCol).as("__v"), lit(null).cast(tType).as("__qts"))
-    val cuts = df.select(col(keyCol), col(tsCol)).distinct()
-      .select(col(keyCol).as("__k"),
-        floorDiv(col(tsCol) - span).as("__b"),
-        (col(tsCol) - span).as("__t"),
-        lit(null).cast(vType).as("__v"), col(tsCol).as("__qts"))
-    val w2 = Window.partitionBy(col("__k"), col("__b"))
-      .orderBy(col("__t").desc)
-      .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    val t2 = data.unionByName(cuts)
-      .withColumn("__n2", count(col("__v")).over(w2))
-      .withColumn("__s2", sum(col("__v")).over(w2))
-      .filter(col("__qts").isNotNull)
-      .select(col("__k"), col("__qts"), col("__n2"), col("__s2"))
-    t1.join(t2, t1(keyCol) <=> t2("__k") && t1(tsCol) === t2("__qts"))
-      .withColumn("roll_n", col("__n1") + col("__n2"))
-      .withColumn("roll_sum",
-        coalesce(col("__s1") + col("__s2"), col("__s1"), col("__s2")))
+    val t = col(tsCol).cast("long")
+    val b = when(t >= 0, idiv(t, span)).otherwise(-idiv(-t + (span - 1), span))
+    // __o = 0: the row in its own block; 1: its halo copy in the next
+    // block, made only for a row that enters frames (a null ts has a
+    // null block, a null value adds nothing)
+    val frameCols = Set(keyCol, tsCol, valueCol)
+    val copied = t.isNotNull && col(valueCol).isNotNull
+    val halo = df.select(df.columns.map(col) :+
+        posexplode(when(copied, array(b, b + 1)).otherwise(array(b)))
+          .as(Seq("__o", "__b")): _*)
+      .select(df.columns.map(c =>
+        if (frameCols(c)) col(c) else when(col("__o") === 0, col(c)).as(c)) ++
+        Seq(col("__o"), col("__b")): _*)
+    val sumType = df.select(sum(col(valueCol))).schema.head.dataType
+    val (lift, plus) = sumOps(sumType)
+    val outSchema = StructType(df.schema.fields ++ Seq(
+      StructField("roll_n", LongType, nullable = false),
+      StructField("roll_sum", sumType)))
+    val (kI, tI, vI) = (df.columns.indexOf(keyCol),
+      df.columns.indexOf(tsCol), df.columns.indexOf(valueCol))
+    val nCols = df.columns.length
+    halo.repartition(col(keyCol), col("__b"))
+      .sortWithinPartitions(col(keyCol), col("__b"), col(tsCol))
+      .mapPartitions(trailingFold(_, kI, tI, vI, nCols, span, lift, plus))(
+        Encoders.row(outSchema))
       .withColumn("roll_mean",
         col("roll_sum").cast("double") / col("roll_n"))
-      .drop("__n1", "__s1", "__k", "__qts", "__n2", "__s2")
+  }
+
+  private[graft] def isIntegral(t: DataType): Boolean =
+    Seq(ByteType, ShortType, IntegerType, LongType).contains(t)
+
+  /** Lift of an input value into `sum`'s result type, and its add. */
+  private def sumOps(sumType: DataType): (Any => Any, (Any, Any) => Any) =
+    sumType match {
+      case LongType => (v => v.asInstanceOf[Number].longValue,
+        (x, y) => x.asInstanceOf[Long] + y.asInstanceOf[Long])
+      case DoubleType => (v => v.asInstanceOf[Number].doubleValue,
+        (x, y) => x.asInstanceOf[Double] + y.asInstanceOf[Double])
+      case _: DecimalType => (v => v, (x, y) =>
+        x.asInstanceOf[java.math.BigDecimal].add(y.asInstanceOf[java.math.BigDecimal]))
+      case other => throw new IllegalArgumentException(
+        s"rollingAggSkewed sums numeric values, not $other")
+    }
+
+  /** [[rollingAggSkewed]]'s fold over one task's halo rows sorted by
+    * (key, block, ts); `nCols` is the input width, followed by `__o`
+    * and `__b`. Each group (key, block) starts an empty frame. */
+  private def trailingFold(rows: Iterator[Row], kI: Int, tI: Int, vI: Int,
+                           nCols: Int, span: Long, lift: Any => Any,
+                           plus: (Any, Any) => Any): Iterator[Row] = {
+    val in = rows.buffered
+    val frame = new FrameQueue(plus)
+    var key: Any = null
+    var block: Any = null
+    def sameKey(a: Any): Boolean = (a, key) match {
+      case (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.equals(x, y)
+      case _ => java.util.Objects.equals(a, key)
+    }
+    def inGroup(r: Row): Boolean = sameKey(r.get(kI)) && r.get(nCols + 1) == block
+    def run(): Iterator[Row] = {
+      val head = in.head
+      if (!inGroup(head)) {
+        frame.clear(); key = head.get(kI); block = head.get(nCols + 1)
+      }
+      val ts = head.get(tI)
+      val t = if (ts == null) 0L else ts.asInstanceOf[Number].longValue
+      val own = ArrayBuffer.empty[Row]
+      while (in.hasNext && inGroup(in.head) && in.head.get(tI) == ts) {
+        val r = in.next()
+        if (!r.isNullAt(vI)) frame.push(t, lift(r.get(vI)))
+        if (r.getInt(nCols) == 0) own += r
+      }
+      // the closed lower bound t - span; below Long.MinValue nothing
+      // leaves, and a null-ts group never evicts
+      if (ts != null && t >= Long.MinValue + span) frame.evictBefore(t - span)
+      val (n, s) = (frame.count, frame.sum)
+      own.iterator.map(r => Row.fromSeq(r.toSeq.take(nCols) ++ Seq(n, s)))
+    }
+    Iterator.continually(()).takeWhile(_ => in.hasNext).flatMap(_ => run())
+  }
+
+  /** FIFO of a frame's non-null (ts, value) pairs with an amortized O(1)
+    * sum that never subtracts, so an evicted double never cancels into
+    * the result: pushes go to `back` under one running sum; `front`
+    * holds the oldest pairs, each with the sum of itself and every
+    * newer pair in `front`, and is refilled from `back` when empty. */
+  private final class FrameQueue(plus: (Any, Any) => Any) {
+    private val backTs = ArrayBuffer.empty[Long]
+    private val backV = ArrayBuffer.empty[Any]
+    private var backSum: Any = null
+    private var frontTs = Array.emptyLongArray
+    private var frontSum = Array.empty[Any]
+    private var lo = 0
+
+    def count: Long = frontTs.length - lo + backTs.length
+
+    def sum: Any =
+      if (lo == frontTs.length) backSum
+      else if (backSum == null) frontSum(lo)
+      else plus(frontSum(lo), backSum)
+
+    def push(ts: Long, v: Any): Unit = {
+      backTs += ts; backV += v
+      backSum = if (backSum == null) v else plus(backSum, v)
+    }
+
+    def evictBefore(lower: Long): Unit = {
+      if (lo == frontTs.length && backTs.nonEmpty) flip()
+      while (lo < frontTs.length && frontTs(lo) < lower) {
+        lo += 1
+        if (lo == frontTs.length && backTs.nonEmpty) flip()
+      }
+    }
+
+    private def flip(): Unit = {
+      frontTs = backTs.toArray
+      frontSum = new Array[Any](frontTs.length)
+      var acc: Any = null
+      var i = frontTs.length - 1
+      while (i >= 0) {
+        acc = if (acc == null) backV(i) else plus(backV(i), acc)
+        frontSum(i) = acc
+        i -= 1
+      }
+      lo = 0; backTs.clear(); backV.clear(); backSum = null
+    }
+
+    def clear(): Unit = {
+      frontTs = Array.emptyLongArray; frontSum = Array.empty[Any]; lo = 0
+      backTs.clear(); backV.clear(); backSum = null
+    }
   }
 
   /** Interval (range) join WITHOUT an equi-key requirement: every left

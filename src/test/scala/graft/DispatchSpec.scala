@@ -151,6 +151,8 @@ class DispatchSpec extends SparkTestBase {
     Dispatch.scanAuto(boom, Seq("g"), "v", "ffill", "id", stats = Some(uni))
     Dispatch.rollingAggAuto(boom, "g", "ts", "v", span = 10,
       stats = Some(uni))
+    // the skew tier itself is lazy too: string keys, double values
+    graft.ops.Events.rollingAggSkewed(boom, "g", "ts", "v", 10)
     Dispatch.sessionizeAuto(boom, "g", "ts", "tie", gap = 10,
       span = Some(100), stats = Some(uni))
     Dispatch.asofJoinAuto(boom, boom, Seq("g"), "ts", "ts", Seq("v"),
@@ -292,6 +294,10 @@ class DispatchSpec extends SparkTestBase {
         .collect().map(_.toSeq)
     assert(canon(Dispatch.rollingAggAuto(events, "k", "ts", "v", span = 600))
       === canon(graft.ops.Events.rollingAgg(events, "k", "ts", "v", 600)))
+    // a fractional ts stays on the plain tier instead of failing
+    val dts = events.withColumn("ts", col("ts").cast("double"))
+    assert(canon(Dispatch.rollingAggAuto(dts, "k", "ts", "v", span = 600))
+      === canon(graft.ops.Events.rollingAgg(dts, "k", "ts", "v", 600)))
 
     def canonS(d: org.apache.spark.sql.DataFrame) =
       d.orderBy("k", "ts", "tie").select("k", "ts", "tie", "session_id")

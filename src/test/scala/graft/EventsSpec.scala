@@ -165,23 +165,46 @@ class EventsSpec extends SparkTestBase {
   test("rollingAggSkewed ≡ rollingAgg: bit-equal on random data with " +
     "ties, null values, negative ts, across span widths (r14 skew " +
     "escalation)") {
+    // also null keys and null ts: the fold's group and run boundaries
+    // must match the window's null partition and null-ts peers
     val rnd = new scala.util.Random(42)
     val rows = (0 until 400).map { i =>
-      val ts = rnd.nextInt(400).toLong - 200L   // negatives + many ties
+      // negatives + many ties
+      val ts: java.lang.Long =
+        if (rnd.nextInt(20) == 0) null else rnd.nextInt(400).toLong - 200L
+      val k: java.lang.Long =
+        if (rnd.nextInt(8) == 0) null else rnd.nextInt(3).toLong
       val v: java.lang.Long =
         if (rnd.nextInt(10) == 0) null else rnd.nextInt(100).toLong
-      (rnd.nextInt(3).toLong, i.toLong, ts, v)
+      (k, i.toLong, ts, v)
     }
     val df = rows.toDF("k", "id", "ts", "v")
     for (span <- Seq(1L, 7L, 100L, 1000L)) {
-      val want = Events.rollingAgg(df, "k", "ts", "v", span)
+      val wantDf = Events.rollingAgg(df, "k", "ts", "v", span)
+      val gotDf = Events.rollingAggSkewed(df, "k", "ts", "v", span)
+      assert(gotDf.schema === wantDf.schema, s"span=$span")
+      val want = wantDf
         .select("k", "id", "ts", "v", "roll_n", "roll_sum", "roll_mean")
         .collect().map(_.toSeq).sortBy(_.toString)
-      val got = Events.rollingAggSkewed(df, "k", "ts", "v", span)
+      val got = gotDf
         .select("k", "id", "ts", "v", "roll_n", "roll_sum", "roll_mean")
         .collect().map(_.toSeq).sortBy(_.toString)
       assert(got === want, s"span=$span")
     }
+  }
+
+  test("rollingAggSkewed: a double frame sum never cancels an evicted " +
+    "value into the result") {
+    // 1e20 leaves the frame of ts 25 ([5, 25]); a running sum that
+    // subtracts it would read (1e20 + 1.0) - 1e20 = 0.0
+    val df = Seq((1L, 0L, 1e20), (1L, 25L, 1.0), (1L, 26L, 2.0))
+      .toDF("k", "ts", "v")
+    def sums(d: org.apache.spark.sql.DataFrame) =
+      d.orderBy("ts").select("roll_sum").as[Double].collect().toSeq
+    val want = sums(Events.rollingAgg(df, "k", "ts", "v", span = 20L))
+    assert(want === Seq(1e20, 1.0, 3.0))
+    assert(sums(Events.rollingAggSkewed(df, "k", "ts", "v", span = 20L)) ===
+      want)
   }
 
   test("rollingAggSkewed: no partition keyed by the bare key — every " +
@@ -189,12 +212,14 @@ class EventsSpec extends SparkTestBase {
     "contract)") {
     val df = (0 until 100).map(i => (i % 3L, i.toLong, i.toLong * 5, 1L))
       .toDF("k", "id", "ts", "v")
-    val plan = Events.rollingAggSkewed(df, "k", "ts", "v", span = 50L)
-      .queryExecution.executedPlan.toString
+    val skewed = Events.rollingAggSkewed(df, "k", "ts", "v", span = 50L)
+    val plan = skewed.queryExecution.executedPlan.toString
     // plain rollingAgg partitions hashpartitioning(k#..., n); the
     // skewed variant must never plan a single-column key partition
     val bareKey = "hashpartitioning\\(k#\\d+, \\d+\\)".r
     assert(bareKey.findFirstIn(plan).isEmpty, plan)
+    // and it moves the rows once: the (key, block) halo exchange
+    assert(graft.api.Layout.shuffleExchanges(skewed) === 1, plan)
   }
 
   test("plan pinning: event operators run exactly one hash Exchange") {
@@ -276,6 +301,11 @@ class EventsSpec extends SparkTestBase {
     }
     intercept[IllegalArgumentException] {
       Events.rollingAgg(df, "k", "ts", "v", span = -1L)
+    }
+    // the skewed fold's block and frame arithmetic is integral
+    intercept[IllegalArgumentException] {
+      Events.rollingAggSkewed(df.withColumn("ts", col("ts").cast("double")),
+        "k", "ts", "v", span = 10L)
     }
     intercept[IllegalArgumentException] {
       Events.sessionizeSkewed(df, "k", "ts", "id", gap = -1L, span = 10L)
