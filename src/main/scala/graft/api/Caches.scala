@@ -5,9 +5,12 @@ import org.apache.spark.sql.DataFrame
 /** Lifecycle for checkpoint-backed results.
   *
   * Iterative operators ([[graft.ops.Dedup.connectedComponents]],
+  * [[graft.ops.Web.domainRank]],
   * [[graft.ops.Similarity.refineCentroids]]) return DataFrames backed
-  * by `localCheckpoint()` blocks — that materialization is what makes
-  * the fixed-point loop's result reusable without rerunning it. The
+  * by one `localCheckpoint()` pin each — that materialization is what
+  * makes the fixed-point loop's result reusable without rerunning it
+  * (connectedComponents' driver solve on integral ids returns a local
+  * relation instead, for which `release` is a no-op). The
   * blocks live in the block manager until the backing RDD is
   * garbage-collected on the driver AND ContextCleaner runs, so a
   * long-lived session issuing many such calls can accumulate dead

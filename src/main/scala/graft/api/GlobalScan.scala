@@ -70,7 +70,8 @@ object GlobalScan {
     // passes, and pass 2 additionally allocated Seq+Row per row and
     // re-encoded everything through createDataFrame — three per-row
     // costs on the full-corpus pass that carry no information (the
-    // long is the same bits either way; ProbeMain prices the ceiling).
+    // long is the same bits either way; the probe `graft.ProbeMain` at
+    // commit 9cd4386 prices the ceiling).
     val totals = parted.queryExecution.toRdd
       .mapPartitionsWithIndex { (pid, it) =>
         var s = 0L

@@ -29,8 +29,7 @@ private[graft] object TempFunctions {
   def withTempFunction[T](spark: SparkSession, prefix: String,
                           builder: Seq[Expression] => Expression)(use: String => T): T = {
     val fn = s"${prefix}_${fnId.incrementAndGet()}"
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
+    val reg = org.apache.spark.sql.GraftSqlBridge.functionRegistry(spark)
     reg.createOrReplaceTempFunction(fn, builder, "built-in")
     try use(fn)
     finally reg.dropFunction(FunctionIdentifier(fn))

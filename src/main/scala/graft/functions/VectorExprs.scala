@@ -957,8 +957,7 @@ object VectorExprs {
 
   def ensureRegistered(spark: SparkSession): Unit =
     if (registered.put(spark, java.lang.Boolean.TRUE) == null) {
-      val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        .sessionState.functionRegistry
+      val reg = org.apache.spark.sql.GraftSqlBridge.functionRegistry(spark)
       functionBuilders.foreach { case (name, builder) =>
         reg.createOrReplaceTempFunction(name, builder, "built-in")
       }

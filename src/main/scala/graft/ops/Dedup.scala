@@ -935,7 +935,7 @@ object Dedup {
     * iterative fixed-point is the one shape where Catalyst re-planning
     * is pure overhead — each round re-ran AQE planning + per-exchange
     * stage sync + codegen on a plan whose data is a few labels per
-    * node, costing ~0.45s/round regardless of size (measured: the
+    * node, costing ~0.45s/round regardless of size (measured: a
     * DataFrame loop at 3.7s vs 1.2s for this loop on the same sf0.1
     * graph, identical labels; disabling AQE instead made it 21s —
     * 32-partition shuffles per tiny stage). With a single reused
@@ -946,13 +946,23 @@ object Dedup {
     * Partition count inherits from the (AQE-coalesced) edge
     * materialization, so it self-scales with the pair graph.
     *
-    * The result is materialized via `localCheckpoint()` (2 longs per
+    * ONE LOOP FOR EVERY ID TYPE: the loop and the driver union-find run
+    * on long ids only. Integral ids are cast to long. Any other
+    * orderable id type is factorized first (flox's factorize step):
+    * one Spark sort of the distinct ids + `zipWithIndex` gives dense
+    * long codes in Spark's own order, so the min code of a component
+    * is its min id as Spark orders it (strings compare as UTF-8 bytes,
+    * like `least`/`min`), whichever solve runs; two lookups into the
+    * persisted code table decode the labels.
+    *
+    * The result is materialized via `localCheckpoint()` (2 ids per
     * clustered node — at 100 TB that is the near-dup cluster membership
     * table, well under shuffle scale), after which every loop-interval
-    * RDD cache is released — repeated calls in a long-lived session
-    * leave nothing persisted but the returned checkpoint blocks. Those
-    * blocks free when the result is GC'd; to free them deterministically
-    * after the result is consumed, call [[graft.api.Caches.release]].
+    * cache (and the code table) is released — repeated calls in a
+    * long-lived session leave nothing persisted but the returned
+    * checkpoint blocks. Those blocks free when the result is GC'd; to
+    * free them deterministically after the result is consumed, call
+    * [[graft.api.Caches.release]].
     *
     * ADAPTIVE: once the (always-materialized-anyway) edge relation is
     * counted, graphs at or under `spark.graft.cc.localEdgeThreshold`
@@ -960,18 +970,18 @@ object Dedup {
     * instead of the loop — the broadcast-join-threshold pattern applied
     * to an iterative fixed point, removing ~0.3-0.5s of job latency per
     * round when the whole graph is a few KB. Production-scale graphs
-    * always exceed the gate and take the distributed loop.
+    * always exceed the gate and take the distributed loop. Integral ids
+    * solved locally come back as a driver-local relation (no pin).
     *
     * EAGER: construction runs the whole fixed-point loop as Spark jobs
-    * (both paths — the RDD loop's per-round actions and the DataFrame
-    * loop's per-round checkpoints), and `failOnNonConvergence` throws at
-    * construction time, not first action. Callers building plans
-    * without executing them still pay the loop here — by design: an
-    * iterative fixed point cannot be expressed as one lazy plan.
+    * (the factorize sort, the loop's per-round actions, the result
+    * pin), and `failOnNonConvergence` throws at construction time, not
+    * first action. Callers building plans without executing them still
+    * pay the loop here — by design: an iterative fixed point cannot be
+    * expressed as one lazy plan.
     *
-    * @param edges DataFrame with two id columns (undirected edges);
-    *              integral id types run the RDD loop, other types fall
-    *              back to an equivalent DataFrame loop
+    * @param edges DataFrame with two id columns (undirected edges) of
+    *              any orderable type; null endpoints are dropped
     * @param failOnNonConvergence throw instead of warn when maxIter is
     *              hit with labels still moving — survivor-selection
     *              callers use this so over-split clusters can't silently
@@ -982,15 +992,45 @@ object Dedup {
                           srcCol: String = "id_a", dstCol: String = "id_b",
                           maxIter: Int = 20,
                           failOnNonConvergence: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.types._
     require(maxIter >= 1, "maxIter must be >= 1")
-    val idType = edges.schema(srcCol).dataType
-    val integral = idType match {
-      case _: org.apache.spark.sql.types.ByteType | _: org.apache.spark.sql.types.ShortType |
-           _: org.apache.spark.sql.types.IntegerType | _: org.apache.spark.sql.types.LongType => true
-      case _ => false
+    def pinned(out: DataFrame)(free: => Unit): DataFrame = {
+      val pin = out.localCheckpoint()
+      free
+      pin
     }
-    if (integral) ccRdd(edges, srcCol, dstCol, maxIter, failOnNonConvergence)
-    else ccDataFrame(edges, srcCol, dstCol, maxIter, failOnNonConvergence)
+    edges.schema(srcCol).dataType match {
+      case idType @ (ByteType | ShortType | IntegerType | LongType) =>
+        val (labels, release) = ccLong(
+          edges.select(col(srcCol).cast("long").as("src"),
+            col(dstCol).cast("long").as("dst")),
+          maxIter, failOnNonConvergence)
+        val out = labels.select(col("id").cast(idType).as("id"),
+          col("label").cast(idType).as("label"))
+        release.fold(out)(r => pinned(out)(r()))
+      case _ =>
+        val spark = edges.sparkSession
+        val ids = edges.select(col(srcCol).as("id"))
+          .union(edges.select(col(dstCol).as("id")))
+          .na.drop().distinct().orderBy("id")
+        val dict = spark.createDataFrame(
+            ids.rdd.zipWithIndex().map { case (r, code) =>
+              org.apache.spark.sql.Row(r.get(0), code) },
+            ids.schema.add("code", LongType, nullable = false))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        def side(code: String, id: String) =
+          dict.select(col("code").as(code), col("id").as(id))
+        val coded = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
+          .join(side("src", "__src"), "__src")
+          .join(side("dst", "__dst"), "__dst")
+          .select("src", "dst")
+        val (labels, release) = ccLong(coded, maxIter, failOnNonConvergence)
+        val out = labels
+          .join(side("id", "__id"), "id")
+          .join(side("label", "__label"), "label")
+          .select(col("__id").as("id"), col("__label").as("label"))
+        pinned(out) { release.foreach(_()); dict.unpersist(false) }
+    }
   }
 
   /** Size gate for the driver-local component solve: a near-dup pair
@@ -1008,10 +1048,9 @@ object Dedup {
 
   /** Driver union-find (path compression + min-id relabel) over a
     * collected edge list — only ever called under [[localEdgeThreshold]]. */
-  private def localComponents[T](pairs: Array[(T, T)])
-                                (implicit ord: Ordering[T]): Seq[(T, T)] = {
-    val parent = scala.collection.mutable.HashMap.empty[T, T]
-    def find(x: T): T = {
+  private def localComponents(pairs: Array[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
       var r = x
       while (parent(r) != r) r = parent(r)
       var c = x
@@ -1024,10 +1063,10 @@ object Dedup {
       val ra = find(a); val rb = find(b)
       if (ra != rb) parent(rb) = ra
     }
-    val minOf = scala.collection.mutable.HashMap.empty[T, T]
+    val minOf = scala.collection.mutable.HashMap.empty[Long, Long]
     parent.keysIterator.foreach { n =>
       val r = find(n)
-      minOf.update(r, minOf.get(r).fold(n)(ord.min(_, n)))
+      minOf.update(r, minOf.get(r).fold(n)(math.min(_, n)))
     }
     parent.keysIterator.map(n => (n, minOf(find(n)))).toSeq
   }
@@ -1046,17 +1085,20 @@ object Dedup {
     }
   }
 
-  /** RDD fixed-point loop for integral ids (see connectedComponents). */
-  private def ccRdd(edges: DataFrame, srcCol: String, dstCol: String,
-                    maxIter: Int, strict: Boolean): DataFrame = {
+  /** The component solve over long ids (see connectedComponents):
+    * `edges` has long columns `src`, `dst`. Returns (id, label) longs
+    * and, when the distributed loop ran, the release of the loop
+    * caches those labels are computed from — the caller pins its final
+    * form first. The driver solve's labels are a local relation and
+    * come back with no release. */
+  private def ccLong(edges: DataFrame, maxIter: Int,
+                     strict: Boolean): (DataFrame, Option[() => Unit]) = {
     import org.apache.spark.HashPartitioner
     import org.apache.spark.storage.StorageLevel
     val spark = edges.sparkSession
     import spark.implicits._
-    val idType = edges.schema(srcCol).dataType
-    val symDf = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .union(edges.select(col(dstCol).cast("long"), col(srcCol).cast("long")))
+    val symDf = edges.select("src", "dst")
+      .union(edges.select("dst", "src"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
     val symRdd = symDf.rdd.map(r => (r.getLong(0), r.getLong(1)))
@@ -1065,11 +1107,10 @@ object Dedup {
     val edgeCount = adj.count() // materialize the upstream pair pipeline exactly once
     if (edgeCount <= localEdgeThreshold(spark)) {
       val out = localComponents(adj.collect()).toDF("id", "label")
-        .select(col("id").cast(idType).as("id"), col("label").cast(idType).as("label"))
       adj.unpersist(false)
       org.slf4j.LoggerFactory.getLogger(getClass).info(
         s"connectedComponents solved locally ($edgeCount directed edges <= threshold)")
-      return out
+      return (out, None)
     }
     // seed with min(id, neighbors): one reduceByKey on the cached
     // adjacency = the first propagation round without its join
@@ -1092,9 +1133,8 @@ object Dedup {
         .map { case (lab, (id, lab2)) => (id, math.min(lab, lab2)) }
         .partitionBy(part)
     }
-    // seed = ccDataFrame's initialization plus a free half-round (min
-    // over neighbors, no jump); it does NOT count against maxIter, so
-    // both paths run the same number of budgeted propagation rounds
+    // the seed is a free half-round (min over neighbors, no jump); it
+    // does NOT count against maxIter
     var rounds = 0
     var converged = false
     while (!converged && rounds < maxIter) {
@@ -1115,69 +1155,11 @@ object Dedup {
       rounds += steps
     }
     finishConvergence(converged, rounds, maxIter, strict)
-    // materialize the result as checkpoint blocks, then release every
-    // loop cache: without this, each connectedComponents call would
-    // leave its final labels RDD persisted forever (no handle escapes)
-    val out = labels.toDF("id", "label")
-      .select(col("id").cast(idType).as("id"), col("label").cast(idType).as("label"))
-      .localCheckpoint()
-    labels.unpersist(false)
-    adj.unpersist(false)
-    out
-  }
-
-  /** DataFrame fallback for non-integral id types (string fingerprints
-    * etc.) — same algorithm, lineage cut by localCheckpoint per round. */
-  private def ccDataFrame(edges: DataFrame, srcCol: String, dstCol: String,
-                          maxIter: Int, strict: Boolean): DataFrame = {
-    val spark = edges.sparkSession
-    val sym = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-      .distinct()
-      .localCheckpoint()
-    val idType = sym.schema("src").dataType
-    val edgeCount = sym.count()
-    if (edgeCount <= localEdgeThreshold(spark) &&
-        idType == org.apache.spark.sql.types.StringType) {
-      import spark.implicits._
-      val pairs = sym.as[(String, String)].collect()
-      val out = localComponents(pairs).toDF("id", "label")
-      org.slf4j.LoggerFactory.getLogger(getClass).info(
-        s"connectedComponents solved locally ($edgeCount directed edges <= threshold)")
-      return out
-    }
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint()
-    val labelType = labels.schema("label").dataType
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val neighbor = sym
-        .join(labels.withColumnRenamed("id", "dst"), Seq("dst"))
-        .select(col("src").as("id"), col("label"),
-          lit(null).cast(labelType).as("__old"))
-      // carry each node's previous label through the min-aggregation
-      // (every id has exactly ONE self row, so max(__old) recovers it):
-      // the convergence probe becomes a cheap scan of the checkpointed
-      // result instead of a per-round join job
-      val self = labels.select(col("id"), col("label"),
-        col("label").as("__old"))
-      val m = self.union(neighbor)
-        .groupBy("id").agg(min("label").as("label"), max("__old").as("__old"))
-      val updated = m.join(
-          m.select(col("id").as("label"), col("label").as("__jl")),
-          Seq("label"), "left")
-        .select(col("id"), coalesce(col("__jl"), col("label")).as("label"),
-          col("__old"))
-        .localCheckpoint()
-      val changed = updated.filter(col("label") < col("__old")).limit(1).count()
-      labels = updated.select("id", "label")
-      converged = changed == 0
-      iter += 1
-    }
-    finishConvergence(converged, iter, maxIter, strict)
-    labels
+    // without the release, each connectedComponents call would leave
+    // its final labels RDD persisted forever (no handle escapes)
+    val done = labels
+    (done.toDF("id", "label"),
+      Some(() => { done.unpersist(false); adj.unpersist(false) }))
   }
 
   /** Near-duplicate CLUSTERS, not just pairs: LSH candidates verified by

@@ -952,140 +952,80 @@ object Web {
     *
     * Cross-engine-exact by construction (the quality classifier's
     * trainCertified trick): every per-edge contribution AND every new
-    * rank snaps to an exact 2⁻²⁰ multiple (floor), so the aggregation
-    * sums exact dyadic doubles — associative, order-independent,
-    * engine-independent — and the whole trajectory is certifiable
-    * against an unrolled SQL replica with NO float tolerance.
+    * rank snaps to an exact 2⁻²⁰ multiple (floor, [[snapChecked]]), so
+    * the aggregation sums exact dyadic doubles — associative,
+    * order-independent, engine-independent — and the whole trajectory
+    * is certifiable against an unrolled SQL replica with NO float
+    * tolerance.
     *
-    * Scale: edges checkpoint once (reused every round); each
-    * round is ONE shuffle (the contribution aggregation on dst) plus
-    * an edges⋈ranks equi-join where ranks is |V|-bounded (domains,
-    * not pages — millions, not billions; broadcastable by AQE);
-    * lineage is cut per round so the plan stays flat at any iteration
-    * count.
+    * Shape: an RDD fixed-point loop (the connectedComponents
+    * precedent — per-round Catalyst re-planning + a per-round
+    * checkpoint job is pure overhead for a fixed point). The adjacency
+    * (src, (dst, outdeg)) is partitioned once and cached; each round
+    * is join → map → reduceByKey → leftOuterJoin, all on the SAME
+    * partitioner (narrow against the cache), with NO per-round action
+    * — the whole loop materializes as one job at the final
+    * `localCheckpoint`, the result's one pin (free it with
+    * [[graft.api.Caches.release]]). Ranks are |V|-bounded (domains,
+    * not pages — millions, not billions).
     *
-    * Checkpoint durability (r18 verdict #5): the default
-    * `localCheckpoint` is EXECUTOR-MEMORY-resident and not
-    * fault-tolerant — on a real cluster one lost executor kills the
-    * job mid-iteration. `reliable = true` routes every per-round cut
-    * through `Dataset.checkpoint` (HDFS/object-store files under
+    * Node keys are the column's external values (`Row.get`), so the
+    * loop groups by JVM equality. Binary, floating-point, nested and
+    * non-binary-collated string node types are refused up front: for
+    * those, JVM equality differs from Spark's grouping. Null endpoints
+    * (a schemeless/garbage URL upstream yields a null domain) cannot
+    * vote or be ranked and are dropped.
+    *
+    * Checkpoint durability: `localCheckpoint` blocks are
+    * EXECUTOR-MEMORY-resident and not fault-tolerant — on a real
+    * cluster one lost executor kills the job mid-iteration.
+    * `reliable = true` persists each round's ranks, marks them for a
+    * reliable `checkpoint()` (files under
     * `spark.sparkContext.setCheckpointDir`, which must be set — a
-    * missing dir is refused up front, not at iteration 1's write):
-    * each round then restarts from durable files instead of
-    * recomputing, at the price of one write+read of |E| (once) and
-    * |V| (per round) — the right trade for a 100-TB-cluster run,
-    * priced in DESIGN. Same values bit-for-bit either way (WebSpec
-    * law: the snapped trajectory does not depend on how lineage is
-    * cut). */
+    * missing dir is refused up front, not at round 1's write) and
+    * materializes them, so a lost executor replays from the last
+    * round's files: one durable write+read of |V| per round, the
+    * right trade for a 100-TB-cluster run. Same values bit-for-bit
+    * either way (WebSpec law: the snapped trajectory does not depend
+    * on how lineage is cut). */
   def domainRank(edges: DataFrame, srcCol: String, dstCol: String,
                  iterations: Int, damping: Double = 0.85,
                  reliable: Boolean = false): DataFrame = {
+    import org.apache.spark.HashPartitioner
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import org.apache.spark.storage.StorageLevel
     require(iterations >= 1 && iterations <= 100,
       s"iterations must be in [1,100], got $iterations")
     require(damping > 0.0 && damping < 1.0,
       s"damping must be in (0,1), got $damping")
+    val spark = edges.sparkSession
     if (reliable)
-      require(edges.sparkSession.sparkContext.getCheckpointDir.nonEmpty,
+      require(spark.sparkContext.getCheckpointDir.nonEmpty,
         "domainRank(reliable = true) needs " +
           "spark.sparkContext.setCheckpointDir(...) — reliable " +
           "checkpoints are files under that directory")
-    // The default (localCheckpoint-lineage, string-keyed) path runs the
-    // RDD loop below (r22 — the connectedComponents precedent: a
-    // fixed-point is the one shape where per-round Catalyst re-planning
-    // + a per-round checkpoint job is pure overhead; the RDD loop is
-    // ONE job whose cached adjacency joins NARROW every round). The
-    // DataFrame loop remains for reliable=true (durable per-round
-    // checkpoint FILES — the 100-TB-cluster posture) and for
-    // non-string node types; WebSpec's reliable≡local law now
-    // cross-checks the two implementations bit-for-bit, which the
-    // exact-dyadic snap arithmetic guarantees: every summed term is an
-    // exact 2^-20 multiple, so sums are order-independent, and the
-    // per-row ops (divide, multiply, add, floor) are identical
-    // correctly-rounded IEEE ops in both loops.
-    val stringKeys =
-      edges.schema(srcCol).dataType == org.apache.spark.sql.types.StringType &&
-      edges.schema(dstCol).dataType == org.apache.spark.sql.types.StringType
-    if (!reliable && stringKeys)
-      return domainRankRdd(edges, srcCol, dstCol, iterations, damping)
-    def cut(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
-    val snapUnit = lit(1048576.0) // 2^20
-    // grid-clearance guard (r22, the trainCertified posture): a value
-    // within 1e-9 of a floor boundary (in the scaled domain, grid step
-    // 1.0) is refused LOUDLY — engines computing 1 ulp apart could
-    // floor to different grid cells and silently diverge from the
-    // oracle. Values exactly ON the boundary are fine (identical
-    // doubles floor identically); cross-engine jitter for these exact
-    // dyadic sums is 0-1 ulp (~1e-16 relative), so 1e-9 gives ~7
-    // decades of margin while firing spuriously with probability
-    // ~2e-9 per snapped value.
-    def snap(c: Column): Column = {
-      val scaled = c * snapUnit
-      val frac = scaled - floor(scaled)
-      when(frac === 0.0 || (frac > 1e-9 && frac < lit(1.0) - lit(1e-9)),
-        floor(scaled) / snapUnit)
-        .otherwise(raise_error(concat(
-          lit("domainRank grid-clearance guard: a rank term sits within " +
-            "1e-9 of a 2^-20 floor boundary — cross-engine rounding " +
-            "could diverge; change damping/iterations (value "),
-          c.cast("string"), lit(")"))))
+    val pairs = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    // one node type for both endpoints, by Spark's own union coercion
+    val nodeType = pairs.select("src").union(pairs.select("dst"))
+      .schema.head.dataType
+    val jvmEquality = nodeType match {
+      case BinaryType | FloatType | DoubleType | _: ArrayType | _: MapType |
+           _: StructType | VariantType => false
+      case s: StringType => s == StringType
+      case _ => true
     }
-    // null endpoints (a schemeless/garbage URL upstream yields a null
-    // domain) cannot vote or be ranked — drop them here rather than
-    // letting a null node ride the joins as a phantom vertex
-    val e = cut(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .na.drop())
-    val nodes = cut(e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node")))
-      .distinct())
-    val esd = cut(
-      e.join(e.groupBy("src").agg(count(lit(1)).as("__deg")), "src"))
-    var ranks = nodes.select(col("node"), lit(1.0).as("rank"))
-    for (_ <- 1 to iterations) {
-      val contrib = esd
-        .join(ranks, esd("src") === ranks("node"))
-        .select(col("dst").as("node"),
-          snap(col("rank") / col("__deg")).as("__c"))
-      val summed = contrib.groupBy("node").agg(sum("__c").as("__s"))
-      ranks = cut(nodes.join(summed, Seq("node"), "left")
-        .select(col("node"),
-          snap(lit(1.0 - damping) +
-            lit(damping) * coalesce(col("__s"), lit(0.0))).as("rank")))
-    }
-    ranks
-  }
-
-  /** The default-path RDD fixed-point loop for [[domainRank]] (r22):
-    * same recurrence, same 2^-20 floor snap, same grid-clearance
-    * guard, bit-identical values (exact-dyadic summation is
-    * order-independent; per-row IEEE ops identical) — WebSpec pins the
-    * equality against the DataFrame loop via the reliable≡local law.
-    * Shape: the adjacency (src, (dst, outdeg)) is partitioned once and
-    * cached; each round is join → map → reduceByKey → leftOuterJoin,
-    * all on the SAME partitioner (narrow against the cache), with NO
-    * per-round action or checkpoint — the whole loop materializes as
-    * one job at the final localCheckpoint, so per-round cost is three
-    * small shuffles instead of Catalyst re-plan + checkpoint job. */
-  private def domainRankRdd(edges: DataFrame, srcCol: String,
-                            dstCol: String, iterations: Int,
-                            damping: Double): DataFrame = {
-    import org.apache.spark.HashPartitioner
-    import org.apache.spark.storage.StorageLevel
-    val spark = edges.sparkSession
-    import spark.implicits._
-    def snapChecked(x: Double): Double = {
-      val scaled = x * 1048576.0
-      val fl = math.floor(scaled)
-      val frac = scaled - fl
-      // same guard and thresholds as the DataFrame path's snap()
-      require(frac == 0.0 || (frac > 1e-9 && frac < 1.0 - 1e-9),
-        s"domainRank grid-clearance guard: a rank term sits within " +
-          s"1e-9 of a 2^-20 floor boundary — cross-engine rounding " +
-          s"could diverge; change damping/iterations (value $x)")
-      fl / 1048576.0
-    }
-    val eRdd = edges.select(col(srcCol).as("_1"), col(dstCol).as("_2"))
-      .na.drop().as[(String, String)].rdd
+    require(jvmEquality, s"domainRank: node type ${nodeType.simpleString} " +
+      "is not supported — its JVM equality differs from Spark grouping")
+    // keys are typed Any; tagging string keys as String lets Spark pick
+    // Kryo for the string-keyed shuffles, as it does for a String-typed
+    // loop (other node types take the default serializer)
+    implicit val nodeTag: scala.reflect.ClassTag[Any] =
+      if (nodeType == StringType) scala.reflect.ClassTag(classOf[String])
+      else scala.reflect.ClassTag.Any
+    val eRdd = pairs
+      .select(col("src").cast(nodeType), col("dst").cast(nodeType))
+      .na.drop().rdd.map(r => (r.get(0), r.get(1)))
     val part = new HashPartitioner(math.max(eRdd.getNumPartitions, 1))
     val e = eRdd.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
     val deg = e.mapValues(_ => 1L).reduceByKey(part, _ + _)
@@ -1100,17 +1040,56 @@ object Web {
         case (_, ((dst, dg), rank)) => (dst, snapChecked(rank / dg))
       }
       val summed = contrib.reduceByKey(part, _ + _)
+      val prev = ranks
       ranks = nodes.leftOuterJoin(summed, part).mapValues {
         case (_, so) => snapChecked(oneMinusD + damping * so.getOrElse(0.0))
+      }
+      if (reliable) {
+        ranks.persist(StorageLevel.MEMORY_AND_DISK)
+        ranks.checkpoint()
+        ranks.count()
+        prev.unpersist(false)
       }
     }
     // one materializing pin (the CC convention): construction runs the
     // loop's job here; loop caches release afterwards
-    val out = ranks.toDF("node", "rank").localCheckpoint()
+    val out = spark.createDataFrame(ranks.map { case (n, r) => Row(n, r) },
+        StructType(Seq(StructField("node", nodeType),
+          StructField("rank", DoubleType, nullable = false))))
+      .localCheckpoint()
+    ranks.unpersist(false)
     esd.unpersist(false)
     nodes.unpersist(false)
     e.unpersist(false)
     out
+  }
+
+  /** Ulps of clearance [[snapChecked]] demands between a scaled value
+    * and a grid boundary: at least the 1-ulp cross-engine jitter of
+    * these exact-dyadic sums, with headroom for a binade edge, where
+    * the ulp halves. */
+  private val GuardUlps = 4
+
+  /** Floor `x` onto the 2^-20 grid behind the grid-clearance guard
+    * (the trainCertified posture): a scaled value within [[GuardUlps]]
+    * ulps of a floor boundary (grid step 1.0) is refused LOUDLY —
+    * engines computing 1 ulp apart could floor to different grid cells
+    * and silently diverge from the oracle. Values exactly ON the
+    * boundary are fine (identical doubles floor identically). The
+    * margin scales with the value, so a legal term far from its
+    * boundary passes at any magnitude (an out-degree of 3e9 leaves
+    * ~1e6 ulps of room), while a term 1 ulp off a boundary throws at
+    * any magnitude. */
+  private[graft] def snapChecked(x: Double): Double = {
+    val scaled = x * 1048576.0
+    val fl = math.floor(scaled)
+    val frac = scaled - fl
+    val margin = GuardUlps * math.ulp(scaled)
+    require(frac == 0.0 || (frac > margin && 1.0 - frac > margin),
+      s"domainRank grid-clearance guard: a rank term sits within " +
+        s"$GuardUlps ulps of a 2^-20 floor boundary — cross-engine " +
+        s"rounding could diverge; change damping/iterations (value $x)")
+    fl / 1048576.0
   }
 
   /** Crawl-budget allocation: per-domain budgets ∝ rank^(1/T) — the

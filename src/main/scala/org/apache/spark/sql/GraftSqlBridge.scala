@@ -2,23 +2,35 @@ package org.apache.spark.sql
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.types.StructType
 
-/** Narrow bridge into `private[sql]` Spark surface (hence this file's
-  * package): `internalCreateDataFrame` wraps an `RDD[InternalRow]` as a
-  * DataFrame WITHOUT the external-Row round trip that
-  * `spark.createDataFrame(rdd, schema)` pays (per row: InternalRow →
-  * external Row conversion in the producer, then a full
-  * CatalystTypeConverters re-encode back to InternalRow in the
-  * consumer). graft.api.GlobalScan's second pass produces rows that are
-  * already internal; re-encoding them was pure per-row overhead on the
-  * 100 TB pass (guide §4 — keep the hot path on codegen-native
-  * representations). Used ONLY for that; everything else goes through
-  * the public API.
+/** The one bridge into `private[sql]` Spark surface (hence this file's
+  * package): every graft use of Spark internals goes through here, so a
+  * Spark upgrade that moves them breaks in one place
+  * (`ExtensionsSpec` calls every method below).
+  *
+  *  - `internalCreateDataFrame` wraps an `RDD[InternalRow]` as a
+  *    DataFrame WITHOUT the external-Row round trip that
+  *    `spark.createDataFrame(rdd, schema)` pays (per row: InternalRow →
+  *    external Row conversion in the producer, then a full
+  *    CatalystTypeConverters re-encode back to InternalRow in the
+  *    consumer). graft.api.GlobalScan's second pass produces rows that
+  *    are already internal; re-encoding them was pure per-row overhead
+  *    on the 100 TB pass (guide §4 — keep the hot path on
+  *    codegen-native representations).
+  *  - `functionRegistry` is the session's function registry, where the
+  *    codegen'd kernel expressions (graft.functions) register under
+  *    `call_function` names.
   */
 object GraftSqlBridge {
+  private def classic(spark: SparkSession) =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+
   def internalCreateDataFrame(spark: SparkSession, rdd: RDD[InternalRow],
                               schema: StructType): DataFrame =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema, isStreaming = false)
+    classic(spark).internalCreateDataFrame(rdd, schema, isStreaming = false)
+
+  def functionRegistry(spark: SparkSession): FunctionRegistry =
+    classic(spark).sessionState.functionRegistry
 }

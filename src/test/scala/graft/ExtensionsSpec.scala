@@ -319,4 +319,32 @@ class ExtensionsSpec extends SparkTestBase {
       spark.catalog.dropTempView("rjf_r")
     }
   }
+
+  test("GraftSqlBridge: every bridged Spark-internal call works on this " +
+    "Spark — an upgrade that moves one fails here, in one place") {
+    import org.apache.spark.sql.GraftSqlBridge
+    import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+    import org.apache.spark.sql.catalyst.expressions.{Add, Expression}
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    // internalCreateDataFrame: internal rows in, the same values out
+    val schema = StructType(Seq(StructField("k", StringType),
+      StructField("v", LongType, nullable = false)))
+    val rows = spark.sparkContext.parallelize(Seq(("a", 1L), ("b", 2L)), 2)
+      .map { case (k, v) => InternalRow(UTF8String.fromString(k), v) }
+    val df = GraftSqlBridge.internalCreateDataFrame(spark, rows, schema)
+    assert(df.schema === schema)
+    assert(df.as[(String, Long)].collect().sorted.toSeq ===
+      Seq(("a", 1L), ("b", 2L)))
+    // functionRegistry: a registered builder resolves through
+    // call_function, and dropping it unregisters it
+    val reg = GraftSqlBridge.functionRegistry(spark)
+    val fn = "graft_bridge_probe_add"
+    reg.createOrReplaceTempFunction(fn,
+      (e: Seq[Expression]) => Add(e(0), e(1)), "built-in")
+    try assert(spark.range(3).select(call_function(fn, col("id"), lit(10L)))
+      .as[Long].collect().toSeq === Seq(10L, 11L, 12L))
+    finally reg.dropFunction(FunctionIdentifier(fn))
+    assert(!reg.functionExists(FunctionIdentifier(fn)))
+  }
 }

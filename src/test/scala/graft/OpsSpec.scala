@@ -807,6 +807,19 @@ class OpsSpec extends SparkTestBase {
           concat(lit("n"), col("id_b")).as("id_b")))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(localStr === want.map { case (k, v) => s"n$k" -> s"n$v" })
+    // ids compare as Spark orders them (UTF-8 bytes, like least/min),
+    // not as JVM strings (UTF-16): U+FFFD (EF BF BD) < U+1F600 (F0 ..)
+    // in UTF-8 though its UTF-16 unit FFFD sorts after the surrogate
+    // D83D — the label must not depend on which solve runs
+    val (rep, emoji) = ("\uFFFD", "\uD83D\uDE00")
+    val pair = Seq((emoji, rep)).toDF("id_a", "id_b")
+    def labelsOf() = Dedup.connectedComponents(pair)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val wantPair = Map(rep -> rep, emoji -> rep)
+    assert(labelsOf() === wantPair)
+    spark.conf.set("spark.graft.cc.localEdgeThreshold", "0")
+    try assert(labelsOf() === wantPair)
+    finally spark.conf.unset("spark.graft.cc.localEdgeThreshold")
   }
 
   test("nearDupGroups clusters transitively; dropNearDups keeps min id + singletons") {
@@ -976,19 +989,25 @@ class OpsSpec extends SparkTestBase {
 
   test("Caches.release frees an iterative result's checkpoint blocks") {
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    // force the distributed loop — the local-solve path has no
-    // checkpoint blocks to release (that's its point)
-    spark.conf.set("spark.graft.cc.localEdgeThreshold", "0")
-    val labels =
-      try Dedup.connectedComponents(edges)
-      finally spark.conf.unset("spark.graft.cc.localEdgeThreshold")
-    assert(labels.count() === 5)
-    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(added.nonEmpty) // the localCheckpoint blocks
-    graft.api.Caches.release(labels)
-    val after = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(after.isEmpty, s"still persisted: $after")
+    // string ids add the factorize step: its code table must not
+    // outlive the call either
+    val strEdges = edges.select(concat(lit("n"), col("id_a")).as("id_a"),
+      concat(lit("n"), col("id_b")).as("id_b"))
+    for (e <- Seq(edges, strEdges)) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      // force the distributed loop — the integral local-solve path has
+      // no checkpoint blocks to release (that's its point)
+      spark.conf.set("spark.graft.cc.localEdgeThreshold", "0")
+      val labels =
+        try Dedup.connectedComponents(e)
+        finally spark.conf.unset("spark.graft.cc.localEdgeThreshold")
+      assert(labels.count() === 5)
+      val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(added.nonEmpty) // the localCheckpoint blocks
+      graft.api.Caches.release(labels)
+      val after = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(after.isEmpty, s"still persisted: $after")
+    }
   }
 
   test("Lloyd refinement keeps a total 1:1 assignment and is order-stable") {

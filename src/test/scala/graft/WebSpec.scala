@@ -287,6 +287,53 @@ class WebSpec extends SparkTestBase {
     assert(files > 1, "reliable mode must write checkpoint files")
   }
 
+  test("domainRank grid-clearance guard is measured in ulps: a legal " +
+    "term at out-degree 3e9 passes, a term 1 ulp off a boundary throws " +
+    "at any magnitude") {
+    // rank (dg + 1)·2^-20 over out-degree dg: the scaled contribution is
+    // 1 + 1/dg, ~1.5e6 ulps clear of the boundary at 1.0 (a 1e-9
+    // absolute clearance refused it: its fraction is 3.3e-10)
+    val dg = 3e9
+    val rank = (dg + 1) / 1048576.0
+    assert(Web.snapChecked(rank / dg) === 1.0 / 1048576.0)
+    // one ulp either side of a grid boundary, at ranks whose scaled ulp
+    // exceeds 1e-9 (ulp(2^23) = 1.86e-9) — a 1e-9 clearance let these
+    // pass; the ulp margin refuses them
+    for (boundary <- Seq(8.0, 16.0, 1024.0);
+         x <- Seq(math.nextUp(boundary), math.nextDown(boundary))) {
+      val e = intercept[IllegalArgumentException](Web.snapChecked(x))
+      assert(e.getMessage.contains("grid-clearance guard"), s"$x")
+      // ON the boundary is exact, never refused
+      assert(Web.snapChecked(boundary) === boundary)
+    }
+  }
+
+  test("domainRank keys on any node type whose JVM equality is Spark's " +
+    "grouping; binary, floating-point and nested node types are refused " +
+    "up front") {
+    val named = Seq(("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"),
+      ("c", "d")).toDF("src", "dst")
+    val byName = Web.domainRank(named, "src", "dst", 3)
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    // the same graph on long nodes ranks identically, and the node
+    // column keeps its type
+    val id = Map("a" -> 1L, "b" -> 2L, "c" -> 3L, "d" -> 4L)
+    val numbered = named.as[(String, String)].collect()
+      .map { case (s, d) => (id(s), id(d)) }.toSeq.toDF("src", "dst")
+    val byId = Web.domainRank(numbered, "src", "dst", 3)
+    assert(byId.schema("node").dataType === org.apache.spark.sql.types.LongType)
+    assert(byId.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap ===
+      byName.map { case (n, r) => id(n) -> r })
+    for (bad <- Seq(col("src").cast("binary"), col("src").cast("double"),
+                    array(col("src")), struct(col("src")))) {
+      val e = intercept[IllegalArgumentException] {
+        Web.domainRank(named.select(bad.as("src"), bad.as("dst")),
+          "src", "dst", 1)
+      }
+      assert(e.getMessage.contains("not supported"), e.getMessage)
+    }
+  }
+
   test("crawlBudgetsDf ≡ crawlBudgets (Map form) bit-exactly — " +
     "integral and non-integral 1/T, zero-rank domains, partition-" +
     "invariant; plan's only join is the broadcast 1-row total") {
