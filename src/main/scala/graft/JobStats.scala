@@ -79,20 +79,7 @@ object JobStats {
         catch { case e: Throwable =>
           System.err.println(s"[jobstats] $name: $e"); false }
       val wall = (System.nanoTime() - t0) / 1e9
-      // listener bus drains asynchronously; poll until the counters go
-      // quiet (two consecutive 150 ms samples unchanged, 3 s cap) — a
-      // fixed sleep let straggling onTaskEnd events bleed into the
-      // NEXT run's counters on a stalling box (r21 review find)
-      locally {
-        var prev = (-1, -1L)
-        var stable = 0
-        var waited = 0
-        while (stable < 2 && waited < 3000) {
-          Thread.sleep(150); waited += 150
-          val cur = (tasks.get, taskMs.get)
-          if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-        }
-      }
+      drainListener()
       println(f"""{"query":"$name","run":$r,"sec":$wall%.3f,""" +
         s""""jobs":${jobs.get},"stages":${stages.get},"tasks":${tasks.get},""" +
         s""""task_ms":${taskMs.get},"gc_ms":${gcMs.get},""" +

@@ -25,10 +25,12 @@ import org.apache.spark.sql.functions._
   *    the registered domain).
   *  - [[dropBlockedHosts]] never LIKE-scans: the host explodes into
   *    its ≤ maxSuffixLabels dot-suffixes (a bounded ×k flatmap) and
-  *    the match is an EQUI-join against the blocklist. Below
-  *    `spark.graft.web.blocklistBroadcastThreshold` entries the join
-  *    collapses further to a map-only `arrays_overlap` against a
+  *    the match is an EQUI-join against the blocklist. At or under
+  *    `spark.graft.web.blocklistBroadcastThreshold` distinct entries
+  *    the join collapses to a map-only `arrays_overlap` against a
   *    plan-literal set — zero shuffle, the q_bloom_decontam posture.
+  *    The tier is decided from one read of at most threshold + 1 raw
+  *    entries, so a small blocklist runs no job at construction.
   *
   * Canonicalization contract (deterministic, idempotent — WebSpec
   * pins canon∘canon = canon):
@@ -264,11 +266,12 @@ object Web {
     * lowercased entries.
     *
     * Never a LIKE scan: the host's bounded suffix set is matched by
-    * EQUALITY. Two tiers, size-gated like Dedup's broadcasts:
-    *  - blocklist count ≤ `spark.graft.web.blocklistBroadcastThreshold`
-    *    (default 1000): collect to a plan-literal array and filter
-    *    with `arrays_overlap` — map-only, no shuffle, pushes past
-    *    column pruning. The default is deliberately SMALL:
+    * EQUALITY. Two tiers, gated on the count of distinct normalized,
+    * non-empty entries against
+    * `spark.graft.web.blocklistBroadcastThreshold` (default 1000):
+    *  - at or under it: a sorted plan-literal array, filtered with
+    *    `arrays_overlap` — map-only, no shuffle, pushes past column
+    *    pruning. The default is deliberately SMALL:
     *    ArraysOverlap hashes the smaller side (the ≤10 suffixes) and
     *    iterates the literal, so a 100k-entry literal would cost 10⁵
     *    comparisons per corpus row on the scan path — far past the
@@ -277,11 +280,18 @@ object Web {
     *    (broadcast-eligible under AQE) to get blocked ids, then LEFT
     *    ANTI on `idCol` — corpus rows never fan out through a shuffle
     *    wider than ×maxSuffixLabels, and only ids travel.
+    * The gate costs no aggregate job in the common case: one read of
+    * at most threshold + 1 raw entries decides it. When they all fit,
+    * the driver dedupes them, checks their depth and builds the
+    * literal — no job for a local `Seq(...).toDF` blocklist (Catalyst
+    * folds it into a LocalRelation), one bounded scan for a table.
+    * Only a blocklist with more raw rows than the threshold pays an
+    * exact distinct count, which also serves the refusal below.
     * Entries with more labels than `maxSuffixLabels` cannot match the
-    * generated suffixes and are refused loudly rather than silently
-    * ignored. Entries normalize like hosts ([[normalizeHost]] — a
-    * UT1-style `www.badsite.com` row must block the www-stripped
-    * host). A null-URL row matches nothing and is KEPT, identically
+    * generated suffixes and are refused at construction, on both
+    * tiers, rather than silently ignored. Entries normalize like
+    * hosts ([[normalizeHost]] — a UT1-style `www.badsite.com` row
+    * must block the www-stripped host). A null-URL row matches nothing and is KEPT, identically
     * in both tiers. */
   def dropBlockedHosts(df: DataFrame, urlCol: String, idCol: String,
                        blocked: DataFrame,
@@ -298,39 +308,52 @@ object Web {
     // still block the normalized host
     val entries = blocked
       .select(normalizeHost(col(dcol)).as("__bl_domain"))
-      .na.drop().filter(length(col("__bl_domain")) > 0).distinct()
-    // one aggregate job decides BOTH gates (count for the broadcast
-    // tier, max label depth for the matchability refusal); the job
-    // that names an offending entry runs only on the failure path
-    val stats = entries.agg(
-      count(lit(1)).as("n"),
-      max(size(split(col("__bl_domain"), "\\."))).as("max_labels")).head()
-    val n = stats.getLong(0)
-    val maxLabelsSeen = if (stats.isNullAt(1)) 0 else stats.getInt(1)
-    if (maxLabelsSeen > maxSuffixLabels) {
-      val offender = entries
-        .filter(size(split(col("__bl_domain"), "\\.")) > maxSuffixLabels)
-        .limit(1).collect().head.getString(0)
+      .na.drop().filter(length(col("__bl_domain")) > 0)
+    val distinctEntries = entries.distinct()
+    def refuse(offender: String): Nothing =
       throw new IllegalArgumentException(
         s"blocklist entry '$offender' has more than " +
           s"maxSuffixLabels=$maxSuffixLabels labels and could never match " +
           "a generated host suffix — raise maxSuffixLabels")
-    }
+    // raw rows that fit under the threshold bound their distinct set
+    // too, so the tier, the refusal and the literal need nothing more
+    val cap = math.max(0L, math.min(threshold, Int.MaxValue - 1L)).toInt
+    val raw = entries.limit(cap + 1).collect().map(_.getString(0))
+    val literal: Option[Array[String]] =
+      if (raw.length <= cap) {
+        val set = raw.distinct.sorted
+        // String.split(_, -1) counts labels as Spark's split does
+        set.find(_.split("\\.", -1).length > maxSuffixLabels).foreach(refuse)
+        Some(set).filter(_.length <= threshold)
+      } else {
+        // more raw rows than the threshold: duplicates may still bring
+        // the distinct count under it, so count exactly; the same
+        // aggregate names the smallest unmatchable entry, if any
+        val stats = distinctEntries.agg(count(lit(1)),
+          min(when(size(split(col("__bl_domain"), "\\.")) > maxSuffixLabels,
+            col("__bl_domain")))).head()
+        if (!stats.isNullAt(1)) refuse(stats.getString(1))
+        if (stats.getLong(0) <= threshold)
+          Some(distinctEntries.collect().map(_.getString(0)).sorted)
+        else None
+      }
     val sufs = hostSuffixes(hostOf(col(urlCol)), maxSuffixLabels)
-    if (n <= threshold) {
-      // map-only tier: the blocklist is a plan literal; arrays_overlap
+    literal match {
+      // map-only tier: the blocklist is a plan literal, sorted so the
+      // plan does not depend on row order; arrays_overlap
       // short-circuits per row, no join, no shuffle
-      val set = entries.collect().map(_.getString(0))
-      if (set.isEmpty) df
-      // coalesce: a null URL yields null suffixes → null predicate —
-      // KEEP the row, matching the join tier's anti-join semantics
-      else df.filter(coalesce(!arrays_overlap(sufs,
-        array(set.map(lit(_)).toIndexedSeq: _*)), lit(true)))
-    } else {
-      val blockedIds = df.select(col(idCol), explode(sufs).as("__suf"))
-        .join(entries, col("__suf") === col("__bl_domain"), "left_semi")
-        .select(idCol).distinct()
-      df.join(blockedIds, Seq(idCol), "left_anti")
+      case Some(set) =>
+        if (set.isEmpty) df
+        // coalesce: a null URL yields null suffixes → null predicate —
+        // KEEP the row, matching the join tier's anti-join semantics
+        else df.filter(coalesce(!arrays_overlap(sufs,
+          array(set.map(lit(_)).toIndexedSeq: _*)), lit(true)))
+      case None =>
+        val blockedIds = df.select(col(idCol), explode(sufs).as("__suf"))
+          .join(distinctEntries, col("__suf") === col("__bl_domain"),
+            "left_semi")
+          .select(idCol).distinct()
+        df.join(blockedIds, Seq(idCol), "left_anti")
     }
   }
 

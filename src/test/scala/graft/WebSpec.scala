@@ -1,6 +1,11 @@
 package graft
 
+import java.nio.file.Files
+
 import graft.ops.Web
+import org.apache.spark.JobCount
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
 
 /** Laws for the URL/domain curation family (ops/Web.scala). */
@@ -105,42 +110,80 @@ class WebSpec extends SparkTestBase {
   private def blocklist = Seq("Src3-News.COM.", "blogspot.co.uk",
     "cdn.media.src5-news.com", "www.badsite.com").toDF("domain")
 
+  private val thresholdKey = "spark.graft.web.blocklistBroadcastThreshold"
+
+  /** Survivors of [[Web.dropBlockedHosts]] and whether its plan joins,
+    * at one blocklist threshold (None: the default). */
+  private def blockRun(bl: DataFrame, threshold: Option[Long],
+                       maxSuffixLabels: Int = 10): (Seq[Long], Boolean) = {
+    threshold.foreach(t => spark.conf.set(thresholdKey, t.toString))
+    try {
+      val out = Web.dropBlockedHosts(blFixture, "url", "doc_id", bl,
+        maxSuffixLabels)
+      val joins = out.queryExecution.optimizedPlan
+        .collectFirst { case j: Join => j }.isDefined
+      (out.select("doc_id").as[Long].collect().toSeq.sorted, joins)
+    } finally spark.conf.unset(thresholdKey)
+  }
+
   test("dropBlockedHosts: suffix semantics respect label boundaries; " +
     "map-only tier and join tier agree; map tier has no join in plan") {
-    def survivors(threshold: Long): Seq[Long] = {
-      spark.conf.set("spark.graft.web.blocklistBroadcastThreshold",
-        threshold.toString)
-      try Web.dropBlockedHosts(blFixture, "url", "doc_id", blocklist)
-        .select("doc_id").as[Long].collect().toSeq.sorted
-      finally spark.conf
-        .unset("spark.graft.web.blocklistBroadcastThreshold")
+    // 8 raw rows, the same 4 distinct normalized entries as blocklist:
+    // exact repeats and a denormalized twin of each kind
+    val repeated = blocklist.union(Seq("src3-news.com", "Src3-News.COM.",
+      "blogspot.co.uk", "WWW.BADSITE.COM").toDF("domain"))
+    // (blocklist, threshold, literal tier expected): the gate counts
+    // DISTINCT normalized entries, 4 in both lists — literal at
+    // threshold 4 (entries = threshold), join at threshold 3 (entries
+    // = threshold + 1); raw rows over the threshold whose distinct set
+    // fits stay literal
+    val cases = Seq(
+      (blocklist, 100000L, true), (blocklist, 4L, true),
+      (blocklist, 3L, false), (blocklist, 0L, false),
+      (repeated, 100000L, true), (repeated, 7L, true),
+      (repeated, 4L, true), (repeated, 3L, false))
+    cases.foreach { case (bl, threshold, literal) =>
+      val (kept, joins) = blockRun(bl, Some(threshold))
+      // 7 (null URL) survives in BOTH tiers — the r18 review's tier-
+      // divergence find; 8 is blocked by the www-prefixed entry
+      assert(kept === Seq(4L, 5L, 7L), s"threshold=$threshold")
+      // plan law: under the gate the filter is map-only — no join node
+      assert(joins === !literal, s"threshold=$threshold")
     }
-    val mapTier = survivors(100000L)
-    val joinTier = survivors(0L)
-    // 7 (null URL) survives in BOTH tiers — the r18 review's tier-
-    // divergence find; 8 is blocked by the www-prefixed entry
-    assert(mapTier === Seq(4L, 5L, 7L))
-    assert(joinTier === mapTier)
-    // plan law: under the gate the filter is map-only — no join node
-    spark.conf.set("spark.graft.web.blocklistBroadcastThreshold", "100000")
-    try {
-      val plan = Web.dropBlockedHosts(blFixture, "url", "doc_id", blocklist)
-        .queryExecution.executedPlan.toString
-      assert(!plan.toLowerCase.contains("join"),
-        s"map tier must not join:\n$plan")
-    } finally spark.conf
-      .unset("spark.graft.web.blocklistBroadcastThreshold")
   }
 
   test("dropBlockedHosts refuses a blocklist entry longer than " +
     "maxSuffixLabels instead of silently never matching it") {
-    val longEntry = Seq((1 to 12).map(i => s"x$i").mkString("."))
-      .toDF("domain")
-    val e = intercept[IllegalArgumentException] {
-      Web.dropBlockedHosts(blFixture, "url", "doc_id", longEntry,
-        maxSuffixLabels = 10)
+    val long = (1 to 12).map(i => s"x$i").mkString(".")
+    val longEntry = Seq(long).toDF("domain")
+    // the default gate (literal tier) and threshold 0 (join tier) both
+    // refuse at construction and name the entry
+    Seq(None, Some(0L)).foreach { threshold =>
+      val e = intercept[IllegalArgumentException] {
+        blockRun(longEntry, threshold, maxSuffixLabels = 10)
+      }
+      assert(e.getMessage.contains("maxSuffixLabels"), s"threshold=$threshold")
+      assert(e.getMessage.contains(long), s"threshold=$threshold")
     }
-    assert(e.getMessage.contains("maxSuffixLabels"))
+  }
+
+  test("dropBlockedHosts decides its tier without construction jobs: " +
+    "none over a local blocklist, one bounded scan over a table") {
+    val sc = spark.sparkContext
+    val docs = blFixture
+    val (_, localJobs) = JobCount(sc) {
+      Web.dropBlockedHosts(docs, "url", "doc_id", blocklist)
+    }
+    assert(localJobs === 0)
+    val dir = Files.createTempDirectory("graft_blocklist").resolve("bl")
+    blocklist.coalesce(1).write.parquet(dir.toString)
+    val table = spark.read.parquet(dir.toString)
+    val (out, tableJobs) = JobCount(sc) {
+      Web.dropBlockedHosts(docs, "url", "doc_id", table)
+    }
+    assert(tableJobs <= 1)
+    assert(out.select("doc_id").as[Long].collect().toSeq.sorted ===
+      Seq(4L, 5L, 7L))
   }
 
   test("dropDuplicateUrls keeps the best capture per canonical URL " +
