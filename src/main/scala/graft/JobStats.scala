@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Run queries under a SparkListener that counts jobs / stages / tasks
@@ -44,28 +44,15 @@ object JobStats {
         }
       }
     })
-    // poll until the listener counters go quiet (two consecutive 150 ms
-    // samples unchanged, 3 s cap) — a fixed sleep let straggling
-    // onTaskEnd events bleed into the NEXT run's counters on a stalling
-    // box (r21 review find)
-    def drainListener(): Unit = {
-      var prev = (-1, -1L)
-      var stable = 0
-      var waited = 0
-      while (stable < 2 && waited < 3000) {
-        Thread.sleep(150); waited += 150
-        val cur = (tasks.get, taskMs.get)
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-      }
-    }
     try {
       spark.read.parquet(s"$sfDir/lineitem.parquet")
         .groupBy("l_returnflag").count()
         .write.format("noop").mode("overwrite").save()
     } catch { case e: Throwable => System.err.println(s"[jobstats] warmup: $e") }
-    // drain once after warmup too (r21 ADVICE): without it, warmup
-    // straggler onTaskEnd events bled into the FIRST measured run
-    drainListener()
+    // exact drain (every event posted so far is delivered) after the
+    // warmup and after each run: no straggling onTaskEnd bleeds into
+    // the next run's counters
+    GraftSqlBridge.drainListenerBus(spark.sparkContext)
     for (name <- names; r <- 1 to repeat) {
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
@@ -79,7 +66,7 @@ object JobStats {
         catch { case e: Throwable =>
           System.err.println(s"[jobstats] $name: $e"); false }
       val wall = (System.nanoTime() - t0) / 1e9
-      drainListener()
+      GraftSqlBridge.drainListenerBus(spark.sparkContext)
       println(f"""{"query":"$name","run":$r,"sec":$wall%.3f,""" +
         s""""jobs":${jobs.get},"stages":${stages.get},"tasks":${tasks.get},""" +
         s""""task_ms":${taskMs.get},"gc_ms":${gcMs.get},""" +

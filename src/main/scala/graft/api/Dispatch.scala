@@ -26,7 +26,8 @@ import org.apache.spark.sql.functions._
   *     a result — only a plan.
   *
   * Thresholds are the measured crossover points from the r12–r14
-  * probes, overridable per call:
+  * probes (the `graft.*Probe` mains at commit 316cdc8), overridable
+  * per call:
   *
   *   - [[MegaGroupRows]] (default 8M): above this estimated max group
   *     size, buffered exact quantiles (one sorted buffer per group)

@@ -589,8 +589,9 @@ case class BloomContainsBinaryBc(
   * every later STREAMING TRIGGER, each of which re-plans and
   * re-serializes its task binary — ships only the handle. The
   * plan-constant variant re-serializes the full filter into each
-  * trigger's task binary: measured (StreamBloomProbe) that is the real
-  * per-trigger cost at 100 MB+ filters, before driver memory hurts.
+  * trigger's task binary: measured (`graft.StreamBloomProbe` at commit
+  * 316cdc8) that is the real per-trigger cost at 100 MB+ filters,
+  * before driver memory hurts.
   * Size-gated dispatch lives in [[graft.ops.Dedup.bloomKeyFilterCol]];
   * semantics (no false negatives, fpp false positives) are identical
   * to the literal variant — same probe hash, same filter bits. */

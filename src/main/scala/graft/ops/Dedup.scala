@@ -620,9 +620,10 @@ object Dedup {
     // spark.sql.optimizer.runtime.bloomFilter.maxNumBits cap (2^26 =
     // 8 MiB) silently UNDERSIZES the filter past ~4M keys — measured
     // 14% over-drop at 8M keys where the requested fpp=0.001 promises
-    // 0.4% (StreamBloomProbe found it). treeAggregate honors the
-    // requested sizing at any key count; the merge fan-in bounds
-    // per-step traffic to O(log partitions) filter copies.
+    // 0.4% (`graft.StreamBloomProbe` at commit 316cdc8 found it).
+    // treeAggregate honors the requested sizing at any key count; the
+    // merge fan-in bounds per-step traffic to O(log partitions) filter
+    // copies.
     val keys = requireCfg(index, cfg)
       .select("band_key").distinct().localCheckpoint()
     val n = math.max(keys.count(), 1L)

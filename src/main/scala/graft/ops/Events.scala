@@ -133,13 +133,13 @@ object Events {
     * non-null (the plain operator's null-ts carry semantics don't
     * decompose; left-null-ts rows still match nothing backward /
     * everything-earliest forward, mirroring the plain pass). Cost: ~5
-    * exchanges vs 1. Measured honestly (SkewProbe, 10M events, 30% on
-    * one user): the plain union-window is a single O(n) carry pass, so
-    * it does NOT cliff at probe scale (the skewed variant's extra
-    * exchanges cost more there); its wall is the one-TASK sort/memory
-    * bound when the hot key's rows stop fitting an executor — the
-    * regime this decomposition exists for. Use [[asofJoin]] whenever
-    * the hottest key fits a task. */
+    * exchanges vs 1. Measured honestly (`graft.SkewProbe` at commit
+    * 316cdc8, 10M events, 30% on one user): the plain union-window is
+    * a single O(n) carry pass, so it does NOT cliff at probe scale
+    * (the skewed variant's extra exchanges cost more there); its wall
+    * is the one-TASK sort/memory bound when the hot key's rows stop
+    * fitting an executor — the regime this decomposition exists for.
+    * Use [[asofJoin]] whenever the hottest key fits a task. */
   def asofJoinSkewed(left: DataFrame, right: DataFrame, keys: Seq[String],
                      leftTs: String, rightTs: String, payload: Seq[String],
                      span: Long, prefix: String = "asof_",
@@ -523,13 +523,13 @@ object Events {
     * table — one row per active block, so the key-wide window is
     * bounded by the time range over span, never by the key's corpus
     * share. Bit-equal to [[sessionize]] (EventsSpec fuzz); ts must be
-    * non-null. ~4 exchanges vs 1. Measured honestly (SkewProbe, 10M
-    * events, 30% on one user): plain sessionize is a single O(n)
-    * lag+sum pass, so it does NOT cliff at probe scale (6.0 s vs
-    * 6.3 s skewed — parity); its wall is the one-TASK sort/memory
-    * bound when a key's rows stop fitting an executor (30% of 100 TB
-    * on one task), which is exactly what the block partition removes.
-    * Use [[sessionize]] whenever the hottest key fits a task. */
+    * non-null. ~4 exchanges vs 1. Measured honestly (`graft.SkewProbe`
+    * at commit 316cdc8, 10M events, 30% on one user): plain sessionize
+    * is a single O(n) lag+sum pass, so it does NOT cliff at probe
+    * scale (6.0 s vs 6.3 s skewed — parity); its wall is the one-TASK
+    * sort/memory bound when a key's rows stop fitting an executor (30%
+    * of 100 TB on one task), which is exactly what the block partition
+    * removes. Use [[sessionize]] whenever the hottest key fits a task. */
   def sessionizeSkewed(df: DataFrame, keyCol: String, tsCol: String,
                        tieCol: String, gap: Long, span: Long): DataFrame = {
     require(gap >= 0, "gap must be >= 0")

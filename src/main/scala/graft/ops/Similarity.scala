@@ -818,18 +818,20 @@ object Similarity {
       .join(hinted, Seq("id_corpus"))
       .withColumn("__nc", norm(col("__vc")))
     // batch vectors re-attached ONCE for the exact verify — a map-only
-    // derivation off the batch (never the index), candidate-id-pruned
-    // and broadcast under the same gate as the sliver ids so the
-    // pair-sized side is never shuffled by the attach join (the §8
-    // "attach the plan without sneaking the shuffle back in" rule)
+    // derivation off the batch (never the index), always pruned to the
+    // candidate batch ids (above the gate too: only candidates enter
+    // the attach join) and broadcast under the same gate as the sliver
+    // ids so the pair-sized side is never shuffled by the attach join
+    // (the §8 "attach the plan without sneaking the shuffle back in"
+    // rule)
     val bVecs0 = e.select(col("__id").as("id_batch"),
       col("__v").as("__vb"), col("__n").as("__nb"))
+    val batchIds = cand.select("id_batch").distinct()
     val bVecs =
       if (nCandIds <= thresholdRows)
-        broadcast(bVecs0.join(
-          broadcast(cand.select("id_batch").distinct()),
-          Seq("id_batch"), "left_semi"))
-      else bVecs0
+        broadcast(bVecs0.join(broadcast(batchIds), Seq("id_batch"),
+          "left_semi"))
+      else bVecs0.join(batchIds, Seq("id_batch"), "left_semi")
     // cand/pinnedIds checkpoints stay pinned while the result is
     // consumed (they are sliver-sized); release with
     // [[graft.api.Caches.release]] once done, the semanticNearDupPairs

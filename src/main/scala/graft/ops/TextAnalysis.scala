@@ -243,9 +243,10 @@ object TextAnalysis {
     // shuffle on the doc key, but the window exec's full sort of every
     // (doc, term) row by score is replaced by per-doc sorts of
     // doc-length-bounded term lists — measured 0.54 s → 0.49 s warm at
-    // sf0.1 (r15 PinAttackProbe). The struct sorts ascending on
-    // (−tfidf, term) ≡ (tfidf DESC, term ASC), the window's exact
-    // order (negation is injective on the strictly positive scores).
+    // sf0.1 (r15 `graft.PinAttackProbe`, kept at commit 316cdc8). The
+    // struct sorts ascending on (−tfidf, term) ≡ (tfidf DESC, term
+    // ASC), the window's exact order (negation is injective on the
+    // strictly positive scores).
     // The dfreq side stays an UNHINTED equi-join: a forced broadcast
     // measured faster still (0.41 s) but collects the corpus
     // VOCABULARY — unbounded at 100 TB (Heaps' law) — rejected; AQE

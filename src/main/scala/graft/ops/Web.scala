@@ -241,10 +241,11 @@ object Web {
     * k-BOUNDED heap aggregation ([[Selection.topKPerGroupBounded]]):
     * a mega-domain holding 10% of the crawl costs O(k) state per
     * stage, not a full window sort of its rows on one task. Priced
-    * honestly (WebScaleProbe act f): the heap pays ~1.8× CPU locally
-    * vs Tungsten's window sort — it is chosen for the DISTRIBUTION
-    * property (no unbounded single-task sort when one registered
-    * domain holds 10⁸ rows), which is what a cap exists for. */
+    * honestly (`graft.WebScaleProbe` act f at commit 316cdc8): the
+    * heap pays ~1.8× CPU locally vs Tungsten's window sort — it is
+    * chosen for the DISTRIBUTION property (no unbounded single-task
+    * sort when one registered domain holds 10⁸ rows), which is what a
+    * cap exists for. */
   def capPerDomain(df: DataFrame, urlCol: String, scoreCol: String,
                    tieCol: String, k: Int,
                    suffixes: Seq[String] = DefaultPublicSuffixes,

@@ -1,14 +1,16 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.types.StructType
 
-/** The one bridge into `private[sql]` Spark surface (hence this file's
-  * package): every graft use of Spark internals goes through here, so a
-  * Spark upgrade that moves them breaks in one place
-  * (`ExtensionsSpec` calls every method below).
+/** The one bridge into Spark's `private[sql]` and `private[spark]`
+  * surface (hence this file's package, which reaches both): every graft
+  * use of Spark internals goes through here, so a Spark upgrade that
+  * moves them breaks in one place (`ExtensionsSpec` calls every method
+  * below).
   *
   *  - `internalCreateDataFrame` wraps an `RDD[InternalRow]` as a
   *    DataFrame WITHOUT the external-Row round trip that
@@ -22,6 +24,9 @@ import org.apache.spark.sql.types.StructType
   *  - `functionRegistry` is the session's function registry, where the
   *    codegen'd kernel expressions (graft.functions) register under
   *    `call_function` names.
+  *  - `drainListenerBus` blocks until the `private[spark]` listener bus
+  *    has delivered every event posted so far, so counters fed by a
+  *    `SparkListener` are exact once it returns (no sleep-polling).
   */
 object GraftSqlBridge {
   private def classic(spark: SparkSession) =
@@ -33,4 +38,7 @@ object GraftSqlBridge {
 
   def functionRegistry(spark: SparkSession): FunctionRegistry =
     classic(spark).sessionState.functionRegistry
+
+  def drainListenerBus(sc: SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

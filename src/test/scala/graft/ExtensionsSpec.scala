@@ -346,5 +346,22 @@ class ExtensionsSpec extends SparkTestBase {
       .as[Long].collect().toSeq === Seq(10L, 11L, 12L))
     finally reg.dropFunction(FunctionIdentifier(fn))
     assert(!reg.functionExists(FunctionIdentifier(fn)))
+    // drainListenerBus: once it returns, a listener has seen every
+    // event of the jobs that already ran — the count is exact
+    val sc = spark.sparkContext
+    GraftSqlBridge.drainListenerBus(sc)
+    val ends = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobEnd(
+          e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        ends.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.parallelize(1 to 10, 2).count() // one job each
+      sc.parallelize(1 to 10, 2).count()
+      GraftSqlBridge.drainListenerBus(sc)
+      assert(ends.get === 2)
+    } finally sc.removeSparkListener(l)
   }
 }

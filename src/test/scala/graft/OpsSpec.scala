@@ -438,6 +438,22 @@ class OpsSpec extends SparkTestBase {
       "vec_id", "embedding", idxPq, corpus0, "vec_id", "embedding",
       cents, cb, m, k2, threshold = 0.95))
     assert(viaPq === exact, s"pq=$viaPq exact=$exact")
+    // above the id broadcast gate (threshold 0) the pairs are the same,
+    // and the attach join still takes only the candidate batch vectors:
+    // the plan prunes them with a LeftSemi join on id_batch
+    try {
+      spark.conf.set("spark.graft.dedup.idBroadcastThreshold", "0")
+      val above = Similarity.semanticNearDupsAgainstIndexPq(batch2,
+        "vec_id", "embedding", idxPq, corpus0, "vec_id", "embedding",
+        cents, cb, m, k2, threshold = 0.95)
+      assert(pairSet(above) === exact)
+      val plan = above.queryExecution.optimizedPlan
+      import org.apache.spark.sql.catalyst.plans.LeftSemi
+      import org.apache.spark.sql.catalyst.plans.logical.Join
+      assert(plan.collect { case j: Join if j.joinType == LeftSemi &&
+          j.condition.exists(_.references.exists(_.name == "id_batch")) =>
+        j }.nonEmpty, plan)
+    } finally spark.conf.unset("spark.graft.dedup.idBroadcastThreshold")
     // delta parity WITHOUT any calibration step: survivor (0.6, 0.8)
     // reconstructs to (1, 1) — a large error (diagnostic max > 0.1)
     // that a margin calibrated on corpus0 alone (max err ≈ 1e-9, the

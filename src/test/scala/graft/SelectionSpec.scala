@@ -632,6 +632,67 @@ class SelectionSpec extends SparkTestBase {
     }
   }
 
+  test("writeShards under a real cancel: the write throws, the output is " +
+    "the previous commit or none, and a plain rerun restores the golden " +
+    "manifest") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.GraftSqlBridge
+    val d = (1L to 120L).map(i =>
+      (i, Seq.fill((i % 6 + 1).toInt)("w").mkString(" "))).toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft_cancel").toString
+    val mf = java.nio.file.Paths.get(dir, "_MANIFEST.json")
+    def manifest() = new String(java.nio.file.Files.readAllBytes(mf), "UTF-8")
+    val sc = spark.sparkContext
+    val group = s"graft-cancel-${java.util.UUID.randomUUID()}"
+    val fired = new java.util.concurrent.atomic.AtomicBoolean
+    // the kill: the first job of the group cancels the group. Future
+    // jobs are cancelled too, so the write throws even when that first
+    // job finishes before the cancel reaches the scheduler.
+    val killer = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            group == e.properties.getProperty("spark.jobGroup.id") &&
+            fired.compareAndSet(false, true))
+          sc.cancelJobGroupAndFutureJobs(group)
+    }
+    try {
+      ops.Selection.writeShards(d, "text", "doc_id", 3, dir)
+      val golden = manifest()
+      sc.addSparkListener(killer)
+      val thrown = new java.util.concurrent.atomic.AtomicReference[Throwable]
+      val writer = new Thread(() => {
+        sc.setJobGroup(group, "writeShards under a cancel",
+          interruptOnCancel = true)
+        try ops.Selection.writeShards(d, "text", "doc_id", 3, dir)
+        catch { case t: Throwable => thrown.set(t) }
+      })
+      writer.start()
+      writer.join()
+      GraftSqlBridge.drainListenerBus(sc)
+      assert(fired.get, "no job of the cancelled group started")
+      assert(thrown.get != null, "the cancelled write must throw")
+      // wherever the cancel landed: the previous commit verifies and is
+      // byte-identical, or the directory reads as never committed
+      scala.util.Try(ops.Selection.verifyShards(spark, dir)) match {
+        case scala.util.Success(_) =>
+          assert(manifest() === golden)
+        case scala.util.Failure(e) =>
+          assert(e.isInstanceOf[IllegalArgumentException] &&
+            e.getMessage.contains("never committed"), e)
+      }
+      // the restart: a plain rerun converges to the golden commit
+      ops.Selection.writeShards(d, "text", "doc_id", 3, dir)
+      assert(manifest() === golden)
+      ops.Selection.verifyShards(spark, dir)
+    } finally {
+      sc.removeSparkListener(killer)
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
+      }
+      rm(new java.io.File(dir))
+    }
+  }
+
   test("repetitionSignals: repetitive text scores high, varied text low") {
     val d = Seq(
       (1L, "spam spam spam spam spam spam"),

@@ -3,13 +3,14 @@ package org.apache.spark
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftSqlBridge
 
-/** Jobs started while `body` runs. Lives in `org.apache.spark` for the
-  * listener bus: draining it before and after (no sleeps) keeps every
-  * job event in the count it belongs to. */
+/** Jobs started while `body` runs. Draining the listener bus before and
+  * after (`GraftSqlBridge.drainListenerBus`, no sleeps) keeps every job
+  * event in the count it belongs to. */
 object JobCount {
   def apply[T](sc: SparkContext)(body: => T): (T, Int) = {
-    sc.listenerBus.waitUntilEmpty()
+    GraftSqlBridge.drainListenerBus(sc)
     val jobs = new AtomicInteger
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -18,7 +19,7 @@ object JobCount {
     sc.addSparkListener(listener)
     try {
       val out = body
-      sc.listenerBus.waitUntilEmpty()
+      GraftSqlBridge.drainListenerBus(sc)
       (out, jobs.get)
     } finally sc.removeSparkListener(listener)
   }
