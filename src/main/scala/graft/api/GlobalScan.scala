@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField}
 
@@ -28,7 +28,15 @@ import org.apache.spark.sql.types.{LongType, StructField}
   * what the result reads from, so the scan's input is materialized
   * exactly once. EAGER, like `Dedup.connectedComponents`: construction
   * runs the checkpoint + pass-1 jobs. Checkpoint blocks free when the
-  * result is GC'd, or deterministically via [[Caches.release]].
+  * result is GC'd, or deterministically via [[Caches.release]] (the
+  * result records the pin its second pass reads).
+  *
+  * Every pass runs on InternalRow (`queryExecution.toRdd`, output
+  * through one UnsafeProjection): the long-typed scans never leave it,
+  * and the carry scans convert only the value column and the carried
+  * state to external values, which is what their folds take. The grouped
+  * tiers key rows by their float-normalized group columns, so groups
+  * are exactly the window tier's (every NaN one group, −0.0 ≡ 0.0).
   *
   * At 100 TB: one full shuffle (range exchange), one materialization to
   * executor memory/disk, one map-only pass — no further shuffles and no
@@ -113,6 +121,7 @@ object GlobalScan {
         proj(joined(r, extra)): org.apache.spark.sql.catalyst.InternalRow
       }
     }
+    Caches.readsThrough(outRdd, parted)
     org.apache.spark.sql.GraftSqlBridge.internalCreateDataFrame(
       spark, outRdd, outSchema)
   }
@@ -263,23 +272,25 @@ object GlobalScan {
       s"custom scan '$scanName' declares no associative binary_op " +
         "(ScanSpec.fold); only the window tier (GroupByScan) can run it"))
     val ord = if (spec.reverse) order.map(_.desc) else order
-    def runTo(out: String): DataFrame = {
-      val raw = groupedCarryScan(df, groupCols, ord, valueCol, out, fold,
-        spec.foldOutType, spec.combine.getOrElse(fold))
-      spec.outFinalize.map(f => raw.withColumn(out, f(col(out))))
-        .getOrElse(raw)
+    def runTo(out: String): (DataFrame, DataFrame) = {
+      val (raw, pinned) = carryPinned(df, groupCols, ord, valueCol, out,
+        fold, spec.foldOutType, spec.combine.getOrElse(fold))
+      (spec.outFinalize.map(f => raw.withColumn(out, f(col(out))))
+        .getOrElse(raw), pinned)
     }
     spec.finish match {
-      case None => runTo(outCol)
+      case None => runTo(outCol)._1
       case Some(fin) =>
         require(!df.columns.contains("__run") && !df.columns.exists(
           c => c.startsWith("__w_") || c == "__whole"),
           "input already has __run/__whole/__w_* columns")
-        val raw = runTo("__run")
+        val (raw, pinned) = runTo("__run")
         // whole-group operand: the same agg as the window tier's
         // unbounded frame, via groupBy (mergeable partial aggregation)
+        // over the carry's pin, so `df` is read once and the result
+        // holds no plan of the caller's for Caches.release to touch
         val wkeys = groupCols.map(c => s"__w_$c")
-        val whole = df.groupBy(groupCols.map(col): _*)
+        val whole = pinned.groupBy(groupCols.map(col): _*)
           .agg(spec.agg(col(valueCol)).as("__whole"))
           .toDF(wkeys :+ "__whole": _*)
         // null-safe equality: null group keys are a group in both the
@@ -380,7 +391,27 @@ object GlobalScan {
                                outCol: String,
                                fold: (Any, Any) => Any,
                                outType: Option[org.apache.spark.sql.types.DataType] = None,
-                               combine0: (Any, Any) => Any = null): DataFrame = {
+                               combine0: (Any, Any) => Any = null): DataFrame =
+    carryPinned(df, groupCols, order, valueCol, outCol, fold, outType,
+      combine0)._1
+
+  /** [[groupedCarryScan]] plus the pinned, range-partitioned input it
+    * read (the same rows and columns as `df`), for callers that need a
+    * second pass over the input without re-reading `df`. Both passes run
+    * on InternalRow, like [[groupedRunning]]: group keys are copied
+    * [[groupKeys]] UnsafeRows, and only the value column and the state
+    * cross to external values, through one converter each per
+    * partition, so `fold` and `combine` (and the registered
+    * [[graft.aggs.CustomScans]] folds) keep their external-value
+    * contract. */
+  private def carryPinned(df: DataFrame, groupCols: Seq[String],
+                          order: Seq[Column], valueCol: String,
+                          outCol: String,
+                          fold: (Any, Any) => Any,
+                          outType: Option[org.apache.spark.sql.types.DataType],
+                          combine0: (Any, Any) => Any): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection, UnsafeRow}
     val combine: (Any, Any) => Any =
       if (combine0 != null) combine0 else fold
     require(groupCols.nonEmpty, "groupCols must be non-empty")
@@ -392,33 +423,38 @@ object GlobalScan {
       .repartitionByRange(spark.sessionState.conf.numShufflePartitions, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
       .localCheckpoint() // pin sampled range boundaries between passes
-    def gkey(r: Row): Seq[Any] = gIdx.map(i => r.get(i))
+    val schema = parted.schema
+    val vType = schema(vIdx).dataType
+    val sType = outType.getOrElse(vType)
+    def valueOf(toScala: Any => Any)(r: InternalRow): Any =
+      if (r.isNullAt(vIdx)) null else toScala(r.get(vIdx, vType))
     // pass 1: per partition — first/last group keys and each boundary
     // segment's folded state (null = segment holds no value)
-    val bounds = parted.rdd.mapPartitionsWithIndex { (pid, it) =>
+    val bounds = parted.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
       if (it.isEmpty) Iterator.empty
       else {
+        val keyOf = groupKeys(schema, gIdx)
+        val v = valueOf(CatalystTypeConverters.createToScalaConverter(vType)) _
         val first = it.next()
-        val fk = gkey(first)
-        var fState: Any = fold(null, first.get(vIdx))
+        val fk = keyOf(first).copy()
+        var fState: Any = fold(null, v(first))
         var lk = fk
         var lState: Any = fState
         var sawOther = false
         it.foreach { r =>
-          val k = gkey(r)
-          val v = r.get(vIdx)
+          val k = keyOf(r)
           if (k == lk) {
-            lState = fold(lState, v)
+            lState = fold(lState, v(r))
             if (!sawOther) fState = lState
-          } else { sawOther = true; lk = k; lState = fold(null, v) }
+          } else { sawOther = true; lk = k.copy(); lState = fold(null, v(r)) }
         }
         Iterator((pid, fk, fState, lk, lState))
       }
     }.collect().sortBy(_._1)
     // chain carries: group g entering partition p from the left carries
     // g's folded state over partitions < p
-    val carries = scala.collection.mutable.Map.empty[(Int, Seq[Any]), Any]
-    var carryKey: Seq[Any] = null
+    val carries = scala.collection.mutable.Map.empty[(Int, UnsafeRow), Any]
+    var carryKey: UnsafeRow = null
     var carryVal: Any = null
     bounds.foreach { case (pid, fk, fState, lk, lState) =>
       if (carryKey != null && carryKey == fk && carryVal != null)
@@ -440,24 +476,53 @@ object GlobalScan {
       carryVal = out
     }
     val bc = spark.sparkContext.broadcast(carries.toMap)
-    val outRdd = parted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var cur: Seq[Any] = null
+    // pass 2: map-only — the fold replayed from each carried-in state,
+    // the input row and the state emitted as one UnsafeRow
+    val outRdd = parted.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
+      val keyOf = groupKeys(schema, gIdx)
+      val v = valueOf(CatalystTypeConverters.createToScalaConverter(vType)) _
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(sType)
+      val proj = UnsafeProjection.create(schema.fields.zipWithIndex.map {
+        case (f, i) => BoundReference(i, f.dataType, f.nullable)
+      } :+ BoundReference(schema.length, sType, nullable = true))
+      val joined = new JoinedRow
+      val extra = new GenericInternalRow(1)
+      var cur: UnsafeRow = null
       var state: Any = null
       it.map { r =>
-        val k = gkey(r)
-        if (k != cur) {
-          cur = k
-          state = bc.value.getOrElse((pid, k), null)
+        val k = keyOf(r)
+        if (cur == null || k != cur) {
+          cur = k.copy()
+          state = bc.value.getOrElse((pid, cur), null)
         }
-        state = fold(state, r.get(vIdx))
-        Row.fromSeq(r.toSeq :+ state)
+        state = fold(state, v(r))
+        extra.update(0, toCatalyst(state))
+        proj(joined(r, extra)): InternalRow
       }
     }
     val outSchema = org.apache.spark.sql.types.StructType(
-      df.schema.fields :+
-        StructField(outCol, outType.getOrElse(df.schema(valueCol).dataType),
-          nullable = true))
-    spark.createDataFrame(outRdd, outSchema)
+      df.schema.fields :+ StructField(outCol, sType, nullable = true))
+    val result = org.apache.spark.sql.GraftSqlBridge.internalCreateDataFrame(
+      spark, outRdd, outSchema)
+    Caches.readsThrough(outRdd, parted)
+    (result, parted)
+  }
+
+  /** The grouped tiers' group key: the group columns of an input row as
+    * an UnsafeRow, compared and hashed byte-wise. Floats are normalized
+    * first, as Spark's own grouping does (every NaN one value,
+    * −0.0 ≡ 0.0), so two rows share a key exactly when
+    * `Window.partitionBy` puts them in one partition. Keys stored across
+    * iterator steps must be COPIED: the projection reuses its buffer
+    * (the valid-until-next() contract). */
+  private def groupKeys(schema: org.apache.spark.sql.types.StructType,
+                        gIdx: Seq[Int]): org.apache.spark.sql.catalyst.expressions.UnsafeProjection = {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+    UnsafeProjection.create(gIdx.map { i =>
+      val f = schema.fields(i)
+      org.apache.spark.sql.GraftSqlBridge.normalizeFloats(
+        BoundReference(i, f.dataType, f.nullable))
+    })
   }
 
   private def groupedRunning(df: DataFrame, groupCols: Seq[String],
@@ -479,26 +544,18 @@ object GlobalScan {
       .sortWithinPartitions(sortCols: _*)
       .localCheckpoint() // pin sampled range boundaries between passes
     // Both passes run on InternalRow (r22, guide §4 — see [[prefixSum]]
-    // for the rationale; this is the same rewrite). Group keys are
-    // compared and keyed as UnsafeRows of the group columns (byte-wise
-    // equals/hashCode — canonical for every dtype Spark writes,
-    // including the NaN normalization UnsafeRow writers apply), and
-    // COPIED when stored across iterator steps: the scan's UnsafeRow
-    // buffer is reused, so a stored reference would mutate under the
-    // loop (the valid-until-next() contract).
+    // for the rationale; this is the same rewrite), keyed by
+    // [[groupKeys]].
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection, UnsafeRow}
     val partedSchema = parted.schema
-    def keyProjOf(): UnsafeProjection = UnsafeProjection.create(
-      gIdx.map(i => BoundReference(i, partedSchema.fields(i).dataType,
-        partedSchema.fields(i).nullable): org.apache.spark.sql.catalyst.expressions.Expression).toArray)
     def gval(r: InternalRow): Long = r.getLong(vIdx)
     // pass 1: per partition, first/last group key + their in-partition
     // value sums (middle groups never cross a boundary → offset 0)
     val bounds = parted.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
       if (it.isEmpty) Iterator.empty
       else {
-        val keyProj = keyProjOf()
+        val keyProj = groupKeys(partedSchema, gIdx)
         val first = it.next()
         val fk = keyProj(first).copy()
         var fCount = gval(first)
@@ -532,7 +589,7 @@ object GlobalScan {
     val bc = spark.sparkContext.broadcast(offsets.toMap)
     val inFields = df.schema.fields
     val outRdd = parted.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-      val keyProj = keyProjOf()
+      val keyProj = groupKeys(partedSchema, gIdx)
       // drop the trailing __grn_v temp (at vIdx), append the running sum
       val exprs = inFields.zipWithIndex.map { case (f, idx) =>
         BoundReference(idx, f.dataType, f.nullable)
@@ -555,6 +612,7 @@ object GlobalScan {
     }
     val outSchema = org.apache.spark.sql.types.StructType(
       df.schema.fields :+ StructField(outCol, LongType, nullable = false))
+    Caches.readsThrough(outRdd, parted)
     org.apache.spark.sql.GraftSqlBridge.internalCreateDataFrame(
       spark, outRdd, outSchema)
   }

@@ -37,7 +37,13 @@ import org.apache.spark.sql.functions.col
   *    `spark.sql.legacy.bucketedTableScan.outputOrdering=true` (the
   *    listing cost was moved behind a flag); with the flag off the
   *    join stays exchange-free but re-sorts inside each bucket. Both
-  *    shapes are law-pinned in LayoutSpec.
+  *    shapes are law-pinned in LayoutSpec. Each writing task sorts by
+  *    `sortCols` alone: Spark's planned write would sort by
+  *    `[bucket id, sortCols…]`, but the bucket id is constant within a
+  *    task after the repartition, so
+  *    [[graft.plans.BucketSortElision]] (registered on the session by
+  *    the first write) drops it — the same rows in the same order, with
+  *    no hash evaluated per comparison.
   *
   * Operational lore for cross-team tables: two layouts bucketed at
   * DIFFERENT counts still join exchange-free when the counts divide
@@ -79,7 +85,11 @@ object Layout {
       "Append breaks the one-file-per-bucket layout guarantee; " +
         "rewrite the table (Overwrite) instead")
     // one file per bucket: repartition by the bucket hash before the
-    // bucketed write (same murmur3-pmod mapping on both sides)
+    // bucketed write (same murmur3-pmod mapping on both sides). Each
+    // task then holds one bucket id, so the planned write's leading
+    // bucket-id sort key is constant; the strategy drops it
+    org.apache.spark.sql.GraftSqlBridge.addStrategy(df.sparkSession,
+      graft.plans.BucketSortElision)
     val laid = df.repartition(buckets, keys.map(col): _*)
     var w = laid.write.format("parquet").mode(mode)
       .bucketBy(buckets, keys.head, keys.tail: _*)

@@ -4,6 +4,9 @@ import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
+import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.types.StructType
 
 /** The one bridge into Spark's `private[sql]` and `private[spark]`
@@ -24,6 +27,14 @@ import org.apache.spark.sql.types.StructType
   *  - `functionRegistry` is the session's function registry, where the
   *    codegen'd kernel expressions (graft.functions) register under
   *    `call_function` names.
+  *  - `addStrategy` registers a planner strategy on the session's
+  *    `experimental.extraStrategies` once (a second call is a no-op);
+  *    `extraStrategies` lists them. graft.api.Layout registers
+  *    graft.plans.BucketSortElision this way before its writes.
+  *  - `normalizeFloats` wraps a key expression in Spark's own grouping
+  *    normalization (every NaN one value, −0.0 ≡ 0.0, through structs
+  *    and arrays), so a byte-wise UnsafeRow key groups exactly as
+  *    `groupBy` and `Window.partitionBy` do.
   *  - `drainListenerBus` blocks until the `private[spark]` listener bus
   *    has delivered every event posted so far, so counters fed by a
   *    `SparkListener` are exact once it returns (no sleep-polling).
@@ -38,6 +49,20 @@ object GraftSqlBridge {
 
   def functionRegistry(spark: SparkSession): FunctionRegistry =
     classic(spark).sessionState.functionRegistry
+
+  def addStrategy(spark: SparkSession, strategy: SparkStrategy): Unit = {
+    val em = classic(spark).experimental
+    em.synchronized {
+      if (!em.extraStrategies.contains(strategy))
+        em.extraStrategies = em.extraStrategies :+ strategy
+    }
+  }
+
+  def extraStrategies(spark: SparkSession): Seq[SparkStrategy] =
+    classic(spark).experimental.extraStrategies
+
+  def normalizeFloats(key: Expression): Expression =
+    NormalizeFloatingNumbers.normalize(key)
 
   def drainListenerBus(sc: SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()

@@ -346,6 +346,26 @@ class ExtensionsSpec extends SparkTestBase {
       .as[Long].collect().toSeq === Seq(10L, 11L, 12L))
     finally reg.dropFunction(FunctionIdentifier(fn))
     assert(!reg.functionExists(FunctionIdentifier(fn)))
+    // addStrategy / extraStrategies: registered once however often it
+    // is called (on a fresh session, so no other suite sees it)
+    val fresh = spark.newSession()
+    val noop = new org.apache.spark.sql.execution.SparkStrategy {
+      def apply(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
+        Nil
+    }
+    GraftSqlBridge.addStrategy(fresh, noop)
+    GraftSqlBridge.addStrategy(fresh, noop)
+    assert(GraftSqlBridge.extraStrategies(fresh).count(_ eq noop) === 1)
+    assert(!GraftSqlBridge.extraStrategies(spark).exists(_ eq noop))
+    // normalizeFloats: −0.0 and every NaN bit pattern key as one value
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+    val norm = UnsafeProjection.create(Seq(GraftSqlBridge.normalizeFloats(
+      BoundReference(0, DoubleType, nullable = true))))
+    def key(d: Double) = norm(InternalRow(d)).copy()
+    assert(key(-0.0) === key(0.0))
+    assert(key(java.lang.Double.longBitsToDouble(0x7ff8000000000123L)) ===
+      key(Double.NaN))
+    assert(key(1.0) !== key(0.0))
     // drainListenerBus: once it returns, a listener has seen every
     // event of the jobs that already ran — the count is exact
     val sc = spark.sparkContext

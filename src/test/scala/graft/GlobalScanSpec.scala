@@ -613,6 +613,164 @@ class GlobalScanSpec extends SparkTestBase {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
   }
 
+  test("grouped tiers key float groups as the window tier does: every " +
+    "NaN is one group and -0.0 is 0.0 (carry and running tiers)") {
+    // NaN-keyed rows carry a value down; ±0.0 rows interleave by id;
+    // a null key and a plain key ride along
+    val data = Seq[(Option[Double], Int, Option[Double])](
+      (Some(Double.NaN), 0, Some(1.0)), (Some(Double.NaN), 1, None),
+      (Some(Double.NaN), 2, None),
+      (Some(-0.0), 3, Some(2.0)), (Some(0.0), 4, None),
+      (Some(-0.0), 5, None), (Some(0.0), 6, Some(3.0)),
+      (None, 7, Some(4.0)), (None, 8, None),
+      (Some(1.5), 9, None), (Some(1.5), 10, Some(5.0)))
+    def byId(d: org.apache.spark.sql.DataFrame, c: String): Map[Int, String] =
+      d.select("id", c).collect()
+        .map(r => r.getInt(0) -> String.valueOf(r.get(1))).toMap
+    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
+    try for (parts <- Seq(1, 3, 8)) {
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      val df = data.toDF("g", "id", "v").repartition(3)
+      val w = Window.partitionBy("g").orderBy("id")
+      val ff = byId(GlobalScan.groupedFfill(df, Seq("g"), Seq(col("id")),
+        "v", "f"), "f")
+      assert(ff === byId(df.withColumn("f",
+        last(col("v"), ignoreNulls = true).over(w)), "f"), s"ffill $parts")
+      assert((0 to 2).map(ff) === Seq("1.0", "1.0", "1.0"), s"NaN key $parts")
+      val rn = byId(GlobalScan.groupedRowNumber(df, Seq("g"),
+        Seq(col("id")), "rn"), "rn")
+      assert(rn === byId(df.withColumn("rn",
+        row_number().over(w).cast("long")), "rn"), s"rowNumber $parts")
+      assert((3 to 6).map(rn) === Seq("1", "2", "3", "4"), s"±0.0 key $parts")
+      assert(byId(GlobalScan.groupedPrefixSum(df, Seq("g"), Seq(col("id")),
+          coalesce(col("v"), lit(0.0)).cast("long"), "s"), "s") ===
+        byId(df.withColumn("s", sum(coalesce(col("v"), lit(0.0))
+          .cast("long")).over(w)), "s"), s"prefixSum $parts")
+      assert(byId(GlobalScan.groupedCumMax(df, Seq("g"), Seq(col("id")),
+          "v", "m"), "m") ===
+        byId(graft.api.GroupByScan(df, Seq("g"), "v", "cummax", "id", "m"),
+          "m"), s"cumMax $parts")
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+  }
+
+  test("carry tier dtypes: string, binary and null group keys; string " +
+    "and decimal fill values; a custom fold over external values — " +
+    "all equal the window tier") {
+    import graft.aggs.CustomScans
+    import org.apache.spark.sql.types._
+    // folds that read EXTERNAL values: a Decimal or UTF8String would
+    // throw ClassCastException here
+    CustomScans.register("cummax_bigdec", CustomScans.ScanSpec(
+      agg = v => max(v),
+      fold = Some((st, v) =>
+        if (v == null) st
+        else if (st == null) v
+        else if (v.asInstanceOf[java.math.BigDecimal]
+          .compareTo(st.asInstanceOf[java.math.BigDecimal]) > 0) v
+        else st)))
+    CustomScans.register("cummax_str", CustomScans.ScanSpec(
+      agg = v => max(v),
+      fold = Some((st, v) =>
+        if (v == null) st
+        else if (st == null) v
+        else if (v.asInstanceOf[String]
+          .compareTo(st.asInstanceOf[String]) > 0) v
+        else st)))
+    val schema = StructType(Seq(
+      StructField("gs", StringType), StructField("gb", BinaryType),
+      StructField("id", IntegerType), StructField("s", StringType),
+      StructField("d", DecimalType(12, 3))))
+    // group sizes span boundaries at every partition count below; keys
+    // repeat across groups of the other key column, and null is a key
+    val rowsIn = (0 until 600).map { i =>
+      val g = i % 4
+      org.apache.spark.sql.Row(
+        if (g == 3) null else s"k$g",
+        if (g == 2) null else Array[Byte](g.toByte, 7),
+        i,
+        if (i % 5 == 0) s"s${(i * 37) % 101}" else null,
+        if (i % 3 == 0) new java.math.BigDecimal(s"${(i * 53) % 97}.125") else null)
+    }
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(rowsIn, 3), schema)
+    def rowsOf(d: org.apache.spark.sql.DataFrame, c: String) =
+      d.select("id", c).collect().map(r => r.getInt(0) -> r.get(1)).toMap
+    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
+    try for (parts <- Seq(1, 3, 8); key <- Seq("gs", "gb")) {
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      val fwd = Window.partitionBy(key).orderBy("id")
+      val bwd = fwd.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+      for (v <- Seq("s", "d")) {
+        val ff = GlobalScan.groupedFfill(df, Seq(key), Seq(col("id")), v, "f")
+        assert(ff.schema("f").dataType === schema(v).dataType)
+        assert(rowsOf(ff, "f") === rowsOf(df.withColumn("f",
+          last(col(v), ignoreNulls = true).over(fwd)), "f"),
+          s"ffill $key/$v parts=$parts")
+        assert(rowsOf(GlobalScan.groupedBfill(df, Seq(key), Seq(col("id")),
+            v, "f"), "f") === rowsOf(df.withColumn("f",
+          first(col(v), ignoreNulls = true).over(bwd)), "f"),
+          s"bfill $key/$v parts=$parts")
+      }
+      for ((scan, v) <- Seq("cummax_bigdec" -> "d", "cummax_str" -> "s"))
+        assert(rowsOf(GlobalScan.groupedCustomScan(df, Seq(key),
+            Seq(col("id")), v, "r", scan), "r") ===
+          rowsOf(graft.api.GroupByScan(df, Seq(key), v, scan, "id", "r"), "r"),
+          s"$scan $key parts=$parts")
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+  }
+
+  test("Caches.release frees the pin of every GlobalScan result and " +
+    "nothing the caller persisted") {
+    import graft.aggs.CustomScans
+    import graft.api.Caches
+    import org.apache.spark.sql.types._
+    // a finish scan: its whole-group operand is a second read of the input
+    CustomScans.register("cumfrac_rel", CustomScans.ScanSpec(
+      agg = v => sum(v),
+      finish = Some((run, whole) => run.cast("double") / whole),
+      fold = Some((st, v) =>
+        if (v == null) st else if (st == null) v
+        else java.lang.Long.valueOf(st.asInstanceOf[Long] + v.asInstanceOf[Long])),
+      combine = Some((a, b) =>
+        if (a == null) b else if (b == null) a
+        else java.lang.Long.valueOf(a.asInstanceOf[Long] + b.asInstanceOf[Long]))))
+    val sc = spark.sparkContext
+    val schema = StructType(Seq(StructField("g", StringType),
+      StructField("id", IntegerType), StructField("v", LongType)))
+    // the caller's own persisted RDD under a DataFrame, and the caller's
+    // own localCheckpoint pin
+    val callerRdd = sc.parallelize((0 until 300).map(i =>
+      org.apache.spark.sql.Row(s"g${i % 3}", i, (i % 7).toLong)), 3).persist()
+    val fromRdd = spark.createDataFrame(callerRdd, schema)
+    val callerPin = fromRdd.localCheckpoint()
+    val callers = sc.getPersistentRDDs.keySet
+    assert(callers.size >= 2)
+    val ops: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+      "prefixSum" -> (d => GlobalScan.prefixSum(d, Seq(col("id")), col("v"), "o")),
+      "groupedRowNumber" -> (d => GlobalScan.groupedRowNumber(d, Seq("g"),
+        Seq(col("id")), "o")),
+      "groupedPrefixSum" -> (d => GlobalScan.groupedPrefixSum(d, Seq("g"),
+        Seq(col("id")), col("v"), "o")),
+      "groupedFfill" -> (d => GlobalScan.groupedFfill(d, Seq("g"),
+        Seq(col("id")), "v", "o")),
+      "groupedCustomScan finish" -> (d => GlobalScan.groupedCustomScan(d,
+        Seq("g"), Seq(col("id")), "v", "o", "cumfrac_rel")))
+    try for ((name, op) <- ops; (in, input) <- Seq("rdd" -> fromRdd,
+        "pin" -> callerPin)) {
+      val before = sc.getPersistentRDDs.keySet
+      val r = op(input)
+      assert(r.count() === 300L)
+      assert((sc.getPersistentRDDs.keySet -- before).nonEmpty, s"$name/$in")
+      Caches.release(r)
+      val now = sc.getPersistentRDDs.keySet
+      assert((now -- before).isEmpty, s"$name/$in still pins ${now -- before}")
+      assert(callers.subsetOf(now), s"$name/$in released a caller RDD")
+    } finally {
+      Caches.release(callerPin)
+      callerRdd.unpersist()
+    }
+  }
+
   test("packSequences: budget arithmetic, spans, empty docs") {
     val df = Seq((1L, 10L), (2L, 0L), (3L, 70L), (4L, 54L), (5L, 1L))
       .toDF("doc_id", "toks")

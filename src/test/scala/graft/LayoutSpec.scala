@@ -345,6 +345,141 @@ class LayoutSpec extends SparkTestBase {
     }
   }
 
+  /** Every SortExec in the executed plans of the queries `body` runs
+    * on `session`, captured by a QueryExecutionListener (a table write
+    * runs its insert as a nested execution, which reports too). */
+  private def sortsOfWrites(session: org.apache.spark.sql.SparkSession)(
+      body: => Unit): Seq[org.apache.spark.sql.execution.SortExec] = {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec  => p +: walk(a.executedPlan)
+      case q: QueryStageExec         => p +: walk(q.plan)
+      case w: DataWritingCommandExec => p +: walk(w.child)
+      case _                         => p +: p.children.flatMap(walk)
+    }
+    session.listenerManager.register(l)
+    try {
+      body
+      org.apache.spark.sql.GraftSqlBridge.drainListenerBus(
+        session.sparkContext)
+    } finally session.listenerManager.unregister(l)
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq.flatMap(walk).collect { case s: SortExec => s }
+  }
+
+  /** A sort key that is a bucket id: `pmod(hash(keys), n)`. */
+  private def onBucketId(s: org.apache.spark.sql.execution.SortExec) =
+    s.sortOrder.exists(_.child.isInstanceOf[
+      org.apache.spark.sql.catalyst.expressions.Pmod])
+
+  test("bucketed write under AQE sorts each task by sortCols alone: no " +
+    "sort on the bucket id, one file per bucket, every file sorted, " +
+    "the same rows") {
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val li = sf("lineitem").select("l_orderkey", "l_quantity",
+      "l_extendedprice")
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      val sorts = sortsOfWrites(spark) {
+        Layout.writeBucketed(li, "layoutspec_elide", Seq("l_orderkey"), 8,
+          Seq("l_orderkey"), Some(s"$root/elide"))
+      }
+      assert(sorts.nonEmpty, "the write should still sort by sortCols")
+      assert(!sorts.exists(onBucketId),
+        s"a write sort orders on the bucket id: ${sorts.map(_.sortOrder)}")
+      assert(sorts.forall(_.sortOrder.map(_.child.toString).exists(
+        _.contains("l_orderkey"))))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert(Layout.verifyLayout(spark, "layoutspec_elide").values.toSeq ===
+      Seq.fill(8)(1))
+    // rows in file order: one file is one split at this size, read in
+    // sequence, so each file's keys must come back non-decreasing
+    val read = spark.read.parquet(s"$root/elide")
+      .select(input_file_name().as("f"), col("l_orderkey"),
+        col("l_quantity"), col("l_extendedprice"))
+      .collect()
+    val files = read.groupBy(_.getString(0))
+    assert(files.size === 8)
+    files.foreach { case (f, rs) =>
+      val keys = rs.map(_.getLong(1)).toSeq
+      assert(keys === keys.sorted, s"$f is not sorted by l_orderkey")
+    }
+    assert(read.map(r => (r.getLong(1), r.getDouble(2), r.getDouble(3)))
+      .toSeq.sorted === li.collect().map(r =>
+      (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq.sorted)
+  }
+
+  test("the bucket-id sort is there without the strategy (the detector " +
+    "works), and writing twice registers the strategy once") {
+    import org.apache.spark.sql.GraftSqlBridge
+    // a fresh session has no extra strategies: the plain bucketed write
+    // sorts on [bucket id, key]
+    val fresh = spark.newSession()
+    val raw = sortsOfWrites(fresh) {
+      fresh.range(2000).toDF("o_orderkey")
+        .repartition(4, col("o_orderkey"))
+        .write.format("parquet").mode("overwrite")
+        .bucketBy(4, "o_orderkey").sortBy("o_orderkey")
+        .option("path", s"$root/plain").saveAsTable("layoutspec_plain")
+    }
+    assert(raw.exists(onBucketId), s"sorts seen: ${raw.map(_.sortOrder)}")
+    writeBoth()
+    writeBoth()
+    assert(GraftSqlBridge.extraStrategies(spark)
+      .count(_ eq graft.plans.BucketSortElision) === 1)
+  }
+
+  test("BucketSortElision keeps the bucket-id key unless the sort sits on " +
+    "a fixed-count hash repartition") {
+    import graft.plans.BucketSortElision
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, RepartitionByExpression, Sort}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SortExec
+    val base = spark.range(100).toDF("k")
+    val k = base.queryExecution.analyzed.output.head
+    def repart(df: org.apache.spark.sql.DataFrame): RepartitionByExpression =
+      df.queryExecution.analyzed.asInstanceOf[RepartitionByExpression]
+    def idOf(r: RepartitionByExpression) =
+      r.partitioning.asInstanceOf[HashPartitioning].partitionIdExpression
+    def sortOn(r: LogicalPlan, id: org.apache.spark.sql.catalyst.expressions.Expression,
+               global: Boolean = false) =
+      Sort(Seq(SortOrder(id, Ascending), SortOrder(k, Ascending)), global, r)
+    // fixed count: the id key goes, the rest stays in order
+    val fixed = repart(base.repartition(4, col("k")))
+    BucketSortElision(sortOn(fixed, idOf(fixed))) match {
+      case Seq(s: SortExec) =>
+        assert(s.sortOrder.map(_.child) === Seq(k))
+        assert(!s.global)
+      case other => fail(s"expected one SortExec, got $other")
+    }
+    // through a row-wise Project (the planned write's empty2null over
+    // string partition columns), and with no key left, no sort at all
+    val projected = org.apache.spark.sql.catalyst.plans.logical.Project(
+      fixed.output, fixed)
+    assert(BucketSortElision(sortOn(projected, idOf(fixed))).collect {
+      case s: SortExec => s.sortOrder.map(_.child) }.flatten === Seq(k))
+    assert(!BucketSortElision(Sort(Seq(SortOrder(idOf(fixed), Ascending)),
+      global = false, fixed)).exists(_.isInstanceOf[SortExec]))
+    // no count (AQE may coalesce those partitions): not planned here, so
+    // the default planner keeps every key
+    val byCol = repart(base.repartition(col("k")))
+    assert(byCol.optNumPartitions.isEmpty)
+    assert(BucketSortElision(sortOn(byCol, idOf(byCol))).isEmpty)
+    // a global sort, and a key that is another count's id, stay too
+    assert(BucketSortElision(sortOn(fixed, idOf(fixed), global = true)).isEmpty)
+    val other = repart(base.repartition(5, col("k")))
+    assert(BucketSortElision(sortOn(fixed, idOf(other))).isEmpty)
+  }
+
   test("single-table agg on the bucket key is exchange-free") {
     writeBoth()
     val agg = Layout.table(spark, "layoutspec_li")
