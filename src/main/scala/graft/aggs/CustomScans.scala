@@ -104,11 +104,11 @@ object CustomScans {
     * (the window formulation these folds must mirror) implements
     * np.minimum.accumulate, where a seen NaN sticks forever; a bare
     * compareTo orders NaN greatest and would let a later finite value
-    * replace it (the r15 advice-high divergence, same defect as
-    * GlobalScan's old maxFold(-1)). The max side needs no guard: NaN-
-    * greatest IS the window max semantics. Non-fp dtypes are
-    * unaffected by the guard. */
-  private def extremumFold(sign: Int): (Any, Any) => Any = (st, v) =>
+    * replace it (the r15 advice-high divergence). The max side needs
+    * no guard: NaN-greatest IS the window max semantics. Non-fp dtypes
+    * are unaffected by the guard. Shared with GlobalScan, whose
+    * groupedCumMax/groupedCumMin fold with it directly. */
+  private[graft] def extremumFold(sign: Int): (Any, Any) => Any = (st, v) =>
     if (v == null) st
     else if (st == null) v
     else if (sign < 0 && isNaNBoxed(st)) st
@@ -134,7 +134,10 @@ object CustomScans {
     else if (st == null) java.lang.Long.valueOf(1L)
     else java.lang.Long.valueOf(Math.addExact(st.asInstanceOf[Long], 1L))
 
-  private val countCombine: (Any, Any) => Any = (a, b) =>
+  /** Null-identity exact long sum (raises on overflow): cumcount's
+    * segment combine, and the fold and combine of GlobalScan's long
+    * scans. */
+  private[graft] val addLongs: (Any, Any) => Any = (a, b) =>
     if (a == null) b
     else if (b == null) a
     else java.lang.Long.valueOf(
@@ -155,7 +158,7 @@ object CustomScans {
     register("cumprod", ScanSpec(v => product(v)))
     register("cumcount", ScanSpec(v => count(v),
       fold = Some(countFold),
-      combine = Some(countCombine),
+      combine = Some(addLongs),
       foldOutType = Some(org.apache.spark.sql.types.LongType),
       outFinalize = Some(c => coalesce(c, lit(0L)))))
   }

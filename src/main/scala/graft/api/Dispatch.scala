@@ -299,14 +299,14 @@ object Dispatch {
   /** Grouped scan, tier chosen from the data: the window formulation
     * below [[MegaGroupRows]] max group size, the boundary-carry tier
     * above. Supported funcs in the carry tier: ffill, bfill (any
-    * dtype); cummax/cummin/nancummax/nancummin (double natively;
-    * plain cummax/cummin also escalate for other NUMERIC dtypes via
-    * the registry's Comparable fold — boxed numeric compareTo IS
-    * Spark's ordering, and the registered cummin fold NaN-poisons to
-    * match the window tier); and any registered custom scan with a
-    * declared fold (finish scans included — the carry tier joins the
-    * whole-group aggregate back). Declined escalations stay on the
-    * window tier at any size and the decision log names WHY (e.g.
+    * dtype); cummax/cummin (any NUMERIC dtype — GlobalScan folds with
+    * the Comparable extremum fold, whose boxed numeric compareTo IS
+    * Spark's ordering and whose min side NaN-poisons to match the
+    * window tier); nancummax/nancummin (double); and any registered
+    * custom scan with a declared fold (finish scans included — the
+    * carry tier joins the whole-group aggregate back). Both tiers
+    * replace a column named `as` in place. Declined escalations stay on
+    * the window tier at any size and the decision log names WHY (e.g.
     * "cast to double" for a non-double nancummin, or the non-ASCII
     * string-ordering divergence for string extrema — boxed UTF-16
     * compareTo is not Spark's UTF-8 binary order, so auto refuses
@@ -331,10 +331,6 @@ object Dispatch {
           Some(d => GlobalScan.groupedFfill(d, by, Seq(col(order)), value, as))
         case "bfill" =>
           Some(d => GlobalScan.groupedBfill(d, by, Seq(col(order)), value, as))
-        case "cummax" if isDouble(df, value) =>
-          Some(d => GlobalScan.groupedCumMax(d, by, Seq(col(order)), value, as))
-        case "cummin" if isDouble(df, value) =>
-          Some(d => GlobalScan.groupedCumMin(d, by, Seq(col(order)), value, as))
         case "nancummax" if isDouble(df, value) =>
           Some(d => GlobalScan.groupedNanCumMax(d, by, Seq(col(order)), value, as))
         case "nancummin" if isDouble(df, value) =>
@@ -344,11 +340,9 @@ object Dispatch {
             s"${df.schema(value).dataType.simpleString} — cast to double " +
             "to unlock the carry tier")
         case f @ ("cummax" | "cummin") if numeric =>
-          // registry Comparable fold: boxed numeric compareTo is
-          // Spark's ordering (cummin's fold NaN-poisons for fp,
-          // matching the window tier)
-          Some(d => GlobalScan.groupedCustomScan(
-            d, by, Seq(col(order)), value, as, f))
+          val scan = if (f == "cummax") GlobalScan.groupedCumMax _
+                     else GlobalScan.groupedCumMin _
+          Some(d => scan(d, by, Seq(col(order)), value, as))
         case f @ ("cummax" | "cummin") =>
           declined(s"$f on ${df.schema(value).dataType.simpleString} " +
             "stays windowed: the carry fold's boxed compareTo is only " +

@@ -1,130 +1,81 @@
 package graft.api
 
+import graft.aggs.CustomScans
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, NumericType, StructField, StructType}
 
-/** Global (corpus-wide, totally-ordered) prefix scans WITHOUT a
-  * single-partition window.
+/** Global (corpus-wide) and per-group prefix scans WITHOUT a
+  * single-task window.
   *
   * `Window.orderBy(...)` with no partitionBy funnels every row through
   * ONE task — the canonical local-mode-passes / cluster-falls-over trap
-  * (Spark even warns `WARN WindowExec: No Partition Defined`). The
-  * scale-correct shape is the textbook two-pass distributed prefix sum:
+  * (Spark even warns `WARN WindowExec: No Partition Defined`) — and
+  * `Window.partitionBy(group)` does the same to a group that spans the
+  * corpus. Every scan here is instead a fold over ONE two-pass
+  * boundary-carry engine ([[carryPinned]]), the Spark shape of flox's
+  * Blelloch driver (`dask_groupby_scan`, flox/dask.py:576-663,
+  * parameterized by `scan_binary_op`, flox/aggregations.py:792-846):
   *
-  *   1. range-repartition on the order key and sort within partitions
+  *   1. range-repartition on (group, order) and sort within partitions
   *      (range partitions are globally ordered: every row in partition i
-  *      sorts before every row in partition i+1);
-  *   2. pass 1 — per-partition totals, #partitions scalars to the driver
-  *      (the ONLY driver traffic, same contract as the connected-
-  *      components convergence probe);
-  *   3. pass 2 — map-only: each partition streams rows adding its
-  *      broadcast exclusive offset to a running local sum.
+  *      sorts before every row in partition i+1), so one group spreads
+  *      over many ordered partitions;
+  *   2. pass 1 — per partition, the first/last group keys and each
+  *      boundary segment's folded state: O(#partitions) values to the
+  *      driver, never per-group or per-row state;
+  *   3. the driver chains the carries with the scan's `combine`: only a
+  *      group CROSSING a partition boundary needs one, and a crossing
+  *      group is by construction the last group of one partition and
+  *      the first of the next;
+  *   4. pass 2 — map-only: each partition replays the fold per row from
+  *      its broadcast carried-in state.
+  *
+  * The entry points differ only in their fold: the long scans
+  * ([[prefixSum]], [[rowNumber]] and their grouped mates) sum a staged
+  * long with `Math.addExact`; ffill/bfill carry the last valid value;
+  * the extrema compare; a registered custom scan brings its own. An
+  * empty group list makes the whole frame one group.
   *
   * The range-parted data is pinned with `localCheckpoint` between the
   * two passes: `repartitionByRange` picks boundaries by sampling, so an
   * unpinned plan could recompute with DIFFERENT partition boundaries in
-  * pass 2 and pair rows with the wrong offsets. The checkpoint is also
+  * pass 2 and pair rows with the wrong carries. The checkpoint is also
   * what the result reads from, so the scan's input is materialized
   * exactly once. EAGER, like `Dedup.connectedComponents`: construction
   * runs the checkpoint + pass-1 jobs. Checkpoint blocks free when the
   * result is GC'd, or deterministically via [[Caches.release]] (the
   * result records the pin its second pass reads).
   *
-  * Every pass runs on InternalRow (`queryExecution.toRdd`, output
-  * through one UnsafeProjection): the long-typed scans never leave it,
-  * and the carry scans convert only the value column and the carried
-  * state to external values, which is what their folds take. The grouped
-  * tiers key rows by their float-normalized group columns, so groups
-  * are exactly the window tier's (every NaN one group, −0.0 ≡ 0.0).
+  * Both passes run on InternalRow (`queryExecution.toRdd`, output
+  * through one UnsafeProjection): only the value column and the state
+  * cross to external values, which is what the folds take. Rows are
+  * keyed by their float-normalized group columns, so groups are exactly
+  * the window tier's (every NaN one group, −0.0 ≡ 0.0). The scan's
+  * column replaces an input column of the same name in place, or is
+  * appended — `withColumn`'s contract, so the tiers of
+  * [[Dispatch.scanAuto]] return one schema.
   *
   * At 100 TB: one full shuffle (range exchange), one materialization to
   * executor memory/disk, one map-only pass — no further shuffles and no
   * row ever crosses to the driver. This is the same plan a distributed
   * sort runs, plus a map.
-  *
-  * The reference's scans (`flox/scan.py:101`, Blelloch combine at
-  * `flox/aggregations.py:849-876`) are per-GROUP cumulatives — covered
-  * by [[GroupByScan]]'s partitioned windows. GlobalScan is the
-  * complementary pipeline primitive (sequence packing, global ranking)
-  * where the "group" is the whole corpus.
   */
 object GlobalScan {
 
   /** Inclusive prefix sum of `valueCol` (cast to long, null = 0) over
-    * the total order given by `order`, appended as `outCol`.
+    * the total order given by `order`, as the non-null long `outCol`.
+    * A sum crossing 2^63 RAISES (ArithmeticException, a loud task
+    * failure), never wraps into a silently wrong prefix — the
+    * weightedQuantileDistributed weight CDF rides this sum.
     *
     * `order` must be a total order (include a unique tiebreak key) for
     * the result to be deterministic — rows that compare equal could
     * otherwise swap running-sum values between runs.
     */
   def prefixSum(df: DataFrame, order: Seq[Column], valueCol: Column,
-                outCol: String): DataFrame = {
-    require(!df.columns.contains("__v"), "input already has a __v column")
-    val spark = df.sparkSession
-    val vIdx = df.schema.length // appended __v position
-    val staged = df.withColumn("__v", coalesce(valueCol.cast("long"), lit(0L)))
-    val parted = staged
-      .repartitionByRange(spark.sessionState.conf.numShufflePartitions, order: _*)
-      .sortWithinPartitions(order: _*)
-      .localCheckpoint() // pin sampled range boundaries between passes
-    // pass 1: per-partition totals — #partitions longs to the driver.
-    // addExact everywhere a running long accumulates: a sum crossing
-    // 2^63 must RAISE (ArithmeticException → loud task failure), never
-    // wrap into a silently wrong prefix (r14 verdict #5 — the
-    // weightedQuantileDistributed weight CDF rides this sum).
-    // Both passes run on InternalRow (r22, guide §4): the old
-    // `parted.rdd` converted every row to an external Row in BOTH
-    // passes, and pass 2 additionally allocated Seq+Row per row and
-    // re-encoded everything through createDataFrame — three per-row
-    // costs on the full-corpus pass that carry no information (the
-    // long is the same bits either way; the probe `graft.ProbeMain` at
-    // commit 9cd4386 prices the ceiling).
-    val totals = parted.queryExecution.toRdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        var s = 0L
-        it.foreach(r => s = Math.addExact(s, r.getLong(vIdx)))
-        Iterator((pid, s))
-      }
-      .collect()
-    val nPart = totals.length
-    val offsets = new Array[Long](math.max(nPart, 1))
-    totals.sortBy(_._1).foreach { case (pid, s) =>
-      if (pid + 1 < nPart) offsets(pid + 1) = s
-    }
-    var i = 1
-    while (i < nPart) {
-      offsets(i) = Math.addExact(offsets(i), offsets(i - 1)); i += 1
-    }
-    val bc = spark.sparkContext.broadcast(offsets)
-    val outSchema = org.apache.spark.sql.types.StructType(
-      df.schema.fields :+ StructField(outCol, LongType, nullable = false))
-    // pass 2: map-only — running local sum + broadcast exclusive
-    // offset, emitted as UnsafeRows (valid-until-next() iterator
-    // contract, the standard InternalRow pipeline discipline)
-    val inFields = df.schema.fields
-    val outRdd = parted.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-      import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection}
-      // project the original columns (0..vIdx-1 — __v at vIdx is
-      // REPLACED by the running sum) + the run long appended at vIdx+1
-      // of the joined (input, extra) row
-      val exprs = inFields.zipWithIndex.map { case (f, idx) =>
-        BoundReference(idx, f.dataType, f.nullable)
-      } :+ BoundReference(inFields.length + 1, LongType, nullable = false)
-      val proj = UnsafeProjection.create(exprs)
-      val joined = new JoinedRow
-      val extra = new GenericInternalRow(1)
-      var run = bc.value(pid)
-      it.map { r =>
-        run = Math.addExact(run, r.getLong(vIdx))
-        extra.update(0, run)
-        proj(joined(r, extra)): org.apache.spark.sql.catalyst.InternalRow
-      }
-    }
-    Caches.readsThrough(outRdd, parted)
-    org.apache.spark.sql.GraftSqlBridge.internalCreateDataFrame(
-      spark, outRdd, outSchema)
-  }
+                outCol: String): DataFrame =
+    groupedPrefixSum(df, Nil, order, valueCol, outCol)
 
   /** Global 1-based row number over the total order `order` (dense
     * ranking of the whole corpus without a single-partition window) —
@@ -139,62 +90,48 @@ object GlobalScan {
     * `Window.partitionBy(group).orderBy(...)` puts each group on ONE
     * task — correct for flox-style grouping (many modest groups,
     * [[GroupByScan]]) but a scale trap when a handful of strata span the
-    * corpus: 5 strata at 100 TB = 5 tasks doing all the work. Here rows
-    * are RANGE-partitioned on (group, order) instead, so one group
-    * spreads over many ordered partitions, and ranks are stitched with
-    * boundary-only bookkeeping: within a partition a group's rank is a
-    * running counter (rows arrive sorted); only the group that CROSSES a
-    * partition boundary needs an offset, and a crossing group is by
-    * construction the last group of one partition and the first of the
-    * next. Pass 1 therefore ships 4 scalars per partition to the driver
-    * (first/last group key + their row counts) — never a per-group or
-    * per-row structure — and pass 2 is map-only with the chained offsets
-    * broadcast. Same checkpoint-pinning and eagerness as [[prefixSum]].
+    * corpus: 5 strata at 100 TB = 5 tasks doing all the work. Here one
+    * group spreads over many ordered partitions and only the group
+    * crossing each boundary carries an offset. It is
+    * [[groupedPrefixSum]] of the constant 1.
     *
     * `order` must totally order rows WITHIN each group (unique tiebreak
-    * key), and group columns must not collide with `__grn` internals.
+    * key).
     */
   def groupedRowNumber(df: DataFrame, groupCols: Seq[String],
                        order: Seq[Column], outCol: String): DataFrame =
-    groupedRunning(df, groupCols, order, None, outCol)
+    groupedPrefixSum(df, groupCols, order, lit(1L), outCol)
 
   /** Per-GROUP inclusive prefix sum of `valueCol` (cast to long, null =
-    * 0) with the same boundary-only bookkeeping as
-    * [[groupedRowNumber]] (which is this scan with value ≡ 1): rows are
-    * range-partitioned on (group, order) so corpus-spanning groups
-    * spread over the cluster, and only the group crossing each
-    * partition boundary carries an offset — 4 scalars per partition to
-    * the driver, never per-group state. */
+    * 0), as the non-null long `outCol`, raising on overflow like
+    * [[prefixSum]]. The value is staged as a temp column before the
+    * pin, so both passes read the SAME evaluated longs (a
+    * non-deterministic value expression re-evaluating in pass 2 would
+    * desync from the pass-1 carries), so the input must not already
+    * have a `__scan_v` column. */
   def groupedPrefixSum(df: DataFrame, groupCols: Seq[String],
                        order: Seq[Column], valueCol: Column,
                        outCol: String): DataFrame =
-    groupedRunning(df, groupCols, order, Some(valueCol), outCol)
+    carryPinned(df, groupCols, order, Left(valueCol), outCol,
+      CustomScans.addLongs, CustomScans.addLongs, None)._1
 
   /** Per-GROUP forward fill at UNBOUNDED group size — the §2.2 scan
-    * escalation tier, completing the pattern: [[groupedPrefixSum]] is
-    * the distributed cumsum, this is the distributed ffill.
-    * [[graft.api.GroupByScan]]'s window formulation puts each group on
-    * one task (right below double-digit key concentration, the same
-    * boundary as the events trio); here rows range-partition on
-    * (group, order) and the carry is stitched with boundary-only
-    * bookkeeping: within a partition the fill is a running
-    * last-non-null; only the group CROSSING a partition boundary needs
-    * a carried-in value, and pass 1 ships per partition just the
-    * first/last group keys and each boundary segment's last non-null
-    * value — O(#partitions) driver traffic, never per-group state.
-    * Unlike a distributed double cumsum (whose float summation order
-    * would diverge from the window tier), ffill CARRIES EXACT VALUES,
-    * so this tier is bit-identical to GroupByScan's ffill (spec law).
-    * Null = missing (filled); NaN is a value and fills forward, the
-    * window tier's `last(ignoreNulls)` semantics. Output column takes
-    * the value column's dtype, nullable (a group's leading rows before
-    * any value stay null). `order` must totally order rows within each
-    * group. */
+    * escalation tier: [[groupedPrefixSum]] is the distributed cumsum,
+    * this is the distributed ffill. [[graft.api.GroupByScan]]'s window
+    * formulation puts each group on one task; here the carry is a
+    * running last-non-null, and only the group crossing a partition
+    * boundary needs a carried-in value. Unlike a distributed double
+    * cumsum (whose float summation order would diverge from the window
+    * tier), ffill CARRIES EXACT VALUES, so this tier is bit-identical to
+    * GroupByScan's ffill (spec law). Null = missing (filled); NaN is a
+    * value and fills forward, the window tier's `last(ignoreNulls)`
+    * semantics. Output column takes the value column's dtype, nullable
+    * (a group's leading rows before any value stay null). `order` must
+    * totally order rows within each group. */
   def groupedFfill(df: DataFrame, groupCols: Seq[String],
                    order: Seq[Column], valueCol: String,
                    outCol: String): DataFrame =
-    groupedCarryScan(df, groupCols, order, valueCol, outCol,
-      (st, v) => if (v != null) v else st)
+    carry(df, groupCols, order, valueCol, outCol, lastValid)
 
   /** Per-GROUP backward fill at unbounded group size — [[groupedFfill]]
     * run over the REVERSED order (the ffill/bfill reversal duality the
@@ -206,66 +143,76 @@ object GlobalScan {
   def groupedBfill(df: DataFrame, groupCols: Seq[String],
                    order: Seq[Column], valueCol: String,
                    outCol: String): DataFrame =
-    groupedCarryScan(df, groupCols, order.map(_.desc), valueCol, outCol,
-      (st, v) => if (v != null) v else st)
+    carry(df, groupCols, order.map(_.desc), valueCol, outCol, lastValid)
 
   /** Per-GROUP running maximum / minimum at unbounded group size — the
-    * cum_extrema mates of [[groupedFfill]], same boundary-carry
-    * machinery with the fold swapped to Spark's double comparison
-    * (NaN greatest, so a NaN poisons the running max exactly as the
-    * window tier's `max().over(...)` does; nulls are skipped). Exact
-    * values carry, so the tier is bit-identical to the window path. */
+    * cum_extrema mates of [[groupedFfill]], folding with
+    * [[CustomScans]]' extremum fold directly (never through
+    * the registry, so re-registering `cummax` cannot change them).
+    * Spark's ordering (NaN greatest, so a NaN sticks in the running max
+    * as in the window tier's `max().over(...)`); the running min
+    * NaN-poisons (np.minimum.accumulate, GroupByScan's `cummin`); nulls
+    * are skipped. Numeric value columns only: boxed numeric compareTo
+    * is Spark's ordering. Exact values carry, so the tier is
+    * bit-identical to the window path. */
   def groupedCumMax(df: DataFrame, groupCols: Seq[String],
                     order: Seq[Column], valueCol: String,
                     outCol: String): DataFrame = {
-    requireDoubleValue(df, valueCol, "groupedCumMax")
-    groupedCarryScan(df, groupCols, order, valueCol, outCol, maxFold(1))
+    requireValue(df, valueCol, "groupedCumMax", double = false)
+    carry(df, groupCols, order, valueCol, outCol,
+      CustomScans.extremumFold(1))
   }
 
   def groupedCumMin(df: DataFrame, groupCols: Seq[String],
                     order: Seq[Column], valueCol: String,
                     outCol: String): DataFrame = {
-    requireDoubleValue(df, valueCol, "groupedCumMin")
-    groupedCarryScan(df, groupCols, order, valueCol, outCol, minPoisonFold)
+    requireValue(df, valueCol, "groupedCumMin", double = false)
+    carry(df, groupCols, order, valueCol, outCol,
+      CustomScans.extremumFold(-1))
   }
 
-  /** The extrema folds compare via java.lang.Double.compare on the raw
-    * row value, so a non-double value column would ClassCastException
-    * mid-task — fail fast at plan time instead (groupedFfill/Bfill
-    * accept any dtype; the asymmetry is easy to miss). Callers with
-    * int/float columns cast to double first, same contract as the
-    * scaladoc's double comparison. */
-  private def requireDoubleValue(df: DataFrame, valueCol: String,
-                                 op: String): Unit =
-    require(df.schema(valueCol).dataType ==
-      org.apache.spark.sql.types.DoubleType,
-      s"$op needs a DOUBLE value column (the carry fold compares via " +
-        s"Double.compare); '$valueCol' is " +
-        s"${df.schema(valueCol).dataType.simpleString} — cast it first")
+  /** NaN-SKIPPING running extrema at unbounded group size — the
+    * nancummax/nancummin mates (np.fmax/fmin.accumulate semantics:
+    * null until the first valid value, NaN values skipped like
+    * nulls). Exact values carry, so bit-identical to the window tier's
+    * `max(when(!isnan(v), v))` formulation (spec law). DOUBLE value
+    * columns only. */
+  def groupedNanCumMax(df: DataFrame, groupCols: Seq[String],
+                       order: Seq[Column], valueCol: String,
+                       outCol: String): DataFrame = {
+    requireValue(df, valueCol, "groupedNanCumMax", double = true)
+    carry(df, groupCols, order, valueCol, outCol, nanSkipFold(1))
+  }
+
+  def groupedNanCumMin(df: DataFrame, groupCols: Seq[String],
+                       order: Seq[Column], valueCol: String,
+                       outCol: String): DataFrame = {
+    requireValue(df, valueCol, "groupedNanCumMin", double = true)
+    carry(df, groupCols, order, valueCol, outCol, nanSkipFold(-1))
+  }
 
   /** UNBOUNDED-GROUP tier for a registered custom scan
-    * ([[graft.aggs.CustomScans]]) — flox's generic `scan_binary_op`
+    * ([[CustomScans]]) — flox's generic `scan_binary_op`
     * machinery (flox/aggregations.py:792-846) exposed through the
-    * registry, closing the asymmetry where only the BUILT-IN scans had
-    * a distributed escalation path (r14 verdict #4). The scan must
-    * declare its associative `fold` (ScanSpec.fold); `reverse` scans
-    * run over the negated order (the bfill duality — `order` columns
-    * must be bare). An `outFinalize` (empty-state encoding adapter,
-    * e.g. cumcount's null→0) is applied map-only after the carry.
+    * registry. The scan must declare its associative `fold`
+    * (ScanSpec.fold); `reverse` scans run over the negated order (the
+    * bfill duality — `order` columns must be bare). An `outFinalize`
+    * (empty-state encoding adapter, e.g. cumcount's null→0) is applied
+    * map-only after the carry.
     *
     * Scans with a `finish` post-transform (running fraction of total)
-    * are supported too (r15 verdict missing #2 closed): finish needs
-    * the whole-group operand, which here is a plain hash aggregation
-    * of the SAME agg (partial-agg map-side, safe at any group size)
-    * null-safe-equi-joined back over the carried scan — the group
-    * table has one row per group, so AQE broadcasts it; no group is
-    * ever materialized in one task. Window-tier equivalence holds when
-    * the fold/agg pair is exact (integer monoids, selective carries) —
-    * the registrant's contract, same as the fold itself. */
+    * are supported too: finish needs the whole-group operand, which
+    * here is a plain hash aggregation of the SAME agg (partial-agg
+    * map-side, safe at any group size) null-safe-equi-joined back over
+    * the carried scan — the group table has one row per group, so AQE
+    * broadcasts it; no group is ever materialized in one task.
+    * Window-tier equivalence holds when the fold/agg pair is exact
+    * (integer monoids, selective carries) — the registrant's contract,
+    * same as the fold itself. */
   def groupedCustomScan(df: DataFrame, groupCols: Seq[String],
                         order: Seq[Column], valueCol: String,
                         outCol: String, scanName: String): DataFrame = {
-    val spec = graft.aggs.CustomScans.lookup(scanName).getOrElse(
+    val spec = CustomScans.lookup(scanName).getOrElse(
       throw new IllegalArgumentException(
         s"unknown custom scan '$scanName' (no CustomScans registration)"))
     val fold = spec.fold.getOrElse(throw new IllegalArgumentException(
@@ -273,8 +220,8 @@ object GlobalScan {
         "(ScanSpec.fold); only the window tier (GroupByScan) can run it"))
     val ord = if (spec.reverse) order.map(_.desc) else order
     def runTo(out: String): (DataFrame, DataFrame) = {
-      val (raw, pinned) = carryPinned(df, groupCols, ord, valueCol, out,
-        fold, spec.foldOutType, spec.combine.getOrElse(fold))
+      val (raw, pinned) = carryPinned(df, groupCols, ord, Right(valueCol),
+        out, fold, spec.combine.getOrElse(fold), spec.foldOutType)
       (spec.outFinalize.map(f => raw.withColumn(out, f(col(out))))
         .getOrElse(raw), pinned)
     }
@@ -296,76 +243,21 @@ object GlobalScan {
         // null-safe equality: null group keys are a group in both the
         // window tier and groupBy; a plain equi-join would drop them
         val cond = groupCols.zip(wkeys)
-          .map { case (a, b) => raw(a) <=> col(b) }.reduce(_ && _)
+          .map { case (a, b) => raw(a) <=> col(b) }
+          .reduceOption(_ && _).getOrElse(lit(true))
         raw.join(whole, cond, "left")
           .withColumn(outCol, fin(col("__run"), col("__whole")))
           .drop(("__run" +: "__whole" +: wkeys): _*)
     }
   }
 
-  /** NaN-SKIPPING running extrema at unbounded group size — the
-    * nancummax/nancummin mates (np.fmax/fmin.accumulate semantics:
-    * null until the first valid value, NaN values skipped like
-    * nulls), completing the carry tier's §2.2 scan family (r15: the
-    * plain extrema had the tier, the nan* mates ran window-only).
-    * Exact values carry, so bit-identical to the window tier's
-    * `max(when(!isnan(v), v))` formulation (spec law). */
-  def groupedNanCumMax(df: DataFrame, groupCols: Seq[String],
-                       order: Seq[Column], valueCol: String,
-                       outCol: String): DataFrame = {
-    requireDoubleValue(df, valueCol, "groupedNanCumMax")
-    groupedCarryScan(df, groupCols, order, valueCol, outCol,
-      nanSkipFold(1))
-  }
+  /** ffill/bfill: the last non-null value wins. */
+  private val lastValid: (Any, Any) => Any = (st, v) =>
+    if (v != null) v else st
 
-  def groupedNanCumMin(df: DataFrame, groupCols: Seq[String],
-                       order: Seq[Column], valueCol: String,
-                       outCol: String): DataFrame = {
-    requireDoubleValue(df, valueCol, "groupedNanCumMin")
-    groupedCarryScan(df, groupCols, order, valueCol, outCol,
-      nanSkipFold(-1))
-  }
-
-  /** Spark double-ordering fold (java.lang.Double.compare: NaN
-    * greatest, −0.0 < 0.0 — Spark's own total order); `sign` +1 keeps
-    * the larger, −1 the smaller. Nulls skip (window max/min
-    * semantics). For cumMAX this is exactly the window tier: NaN is
-    * greatest, so once seen it sticks, matching `max(v).over(fwd)`. */
-  private def maxFold(sign: Int): (Any, Any) => Any = (st, v) =>
-    if (v == null) st
-    else if (st == null) v
-    else {
-      val c = java.lang.Double.compare(
-        v.asInstanceOf[Double], st.asInstanceOf[Double])
-      if (c * sign > 0) v else st
-    }
-
-  /** NaN-POISONING running-min fold — the cumMIN mate. The window tier
-    * (GroupByScan 'cummin') implements np.minimum.accumulate: once any
-    * NaN is seen the running min is NaN forever
-    * (`when(bool_or(isnan(v)).over(fwd), NaN)`). A plain
-    * Double.compare fold orders NaN GREATEST, so a later finite value
-    * would replace it — [5.0, NaN, 3.0] gave [5.0, 5.0, 3.0] carried
-    * vs [5.0, NaN, NaN] windowed, flipping results with estimated
-    * group size under scanAuto (the r15 advice-high defect). Nulls
-    * skip; NaN state or value sticks. Selective fold: doubling as the
-    * segment combine is correct (a segment whose state is NaN came
-    * from a segment containing NaN). */
-  private def minPoisonFold: (Any, Any) => Any = (st, v) =>
-    if (v == null) st
-    else if (st == null) v
-    else {
-      val sd = st.asInstanceOf[Double]
-      val vd = v.asInstanceOf[Double]
-      if (sd.isNaN) st
-      else if (vd.isNaN) v
-      // Double.compare, not primitive <: −0.0 sorts below 0.0 in
-      // Spark's ordering (the bit-level spec law exercises it)
-      else if (java.lang.Double.compare(vd, sd) < 0) v else st
-    }
-
-  /** [[maxFold]] with NaN values skipped like nulls (np.fmax/fmin
-    * accumulate); state is always finite, so plain compare suffices. */
+  /** Spark-ordering extremum with NaN values skipped like nulls
+    * (np.fmax/fmin accumulate); `sign` +1 keeps the larger, −1 the
+    * smaller. State is always finite, so plain compare suffices. */
   private def nanSkipFold(sign: Int): (Any, Any) => Any = (st, v) =>
     if (v == null || v.asInstanceOf[Double].isNaN) st
     else if (st == null) v
@@ -375,57 +267,87 @@ object GlobalScan {
       if (c * sign > 0) v else st
     }
 
-  /** The shared unbounded-group carry scan: `fold` is a null-identity
-    * per-row step (state := fold(state, value), null state = empty);
-    * `combine` merges two segment STATES (null-identity both sides)
-    * and is what lets partition boundaries stitch with O(#partitions)
-    * driver traffic: pass 1 folds each boundary segment locally, the
-    * driver chains carries with `combine`, pass 2 replays the fold
-    * per row starting from the carried-in state. `combine` defaults
-    * to `fold`, which is correct exactly for SELECTIVE folds
-    * (max/min/first/fill — state and value share a domain and the
-    * fold of two states is the concatenation's state); accumulating
-    * folds must pass their own (see ScanSpec.combine). */
-  private def groupedCarryScan(df: DataFrame, groupCols: Seq[String],
-                               order: Seq[Column], valueCol: String,
-                               outCol: String,
-                               fold: (Any, Any) => Any,
-                               outType: Option[org.apache.spark.sql.types.DataType] = None,
-                               combine0: (Any, Any) => Any = null): DataFrame =
-    carryPinned(df, groupCols, order, valueCol, outCol, fold, outType,
-      combine0)._1
+  /** The folds compare the raw row value, so a value column of another
+    * dtype would ClassCastException (or order strings as UTF-16, not as
+    * Spark does) mid-task — fail fast at plan time instead
+    * (groupedFfill/Bfill accept any dtype). */
+  private def requireValue(df: DataFrame, valueCol: String, op: String,
+                           double: Boolean): Unit = {
+    val t = df.schema(valueCol).dataType
+    require(if (double) t == DoubleType else t.isInstanceOf[NumericType],
+      s"$op needs a ${if (double) "DOUBLE" else "numeric"} value column; " +
+        s"'$valueCol' is ${t.simpleString} — cast it first")
+  }
 
-  /** [[groupedCarryScan]] plus the pinned, range-partitioned input it
-    * read (the same rows and columns as `df`), for callers that need a
-    * second pass over the input without re-reading `df`. Both passes run
-    * on InternalRow, like [[groupedRunning]]: group keys are copied
-    * [[groupKeys]] UnsafeRows, and only the value column and the state
-    * cross to external values, through one converter each per
-    * partition, so `fold` and `combine` (and the registered
-    * [[graft.aggs.CustomScans]] folds) keep their external-value
-    * contract. */
+  /** A selective fold (max/min/first/fill — state and value share a
+    * domain, so the fold of two states is the concatenation's state)
+    * doubles as its own segment combine. */
+  private def carry(df: DataFrame, groupCols: Seq[String],
+                    order: Seq[Column], valueCol: String, outCol: String,
+                    fold: (Any, Any) => Any): DataFrame =
+    carryPinned(df, groupCols, order, Right(valueCol), outCol, fold, fold,
+      None)._1
+
+  /** The name the long scans stage their value under. */
+  private val Staged = "__scan_v"
+
+  /** The engine. `value` is either a long expression (cast, null = 0,
+    * staged as [[Staged]]; the output is then a non-null long) or a
+    * value column read as it is (the output takes `outType`, default
+    * the value's dtype, nullable). `fold` is a null-identity per-row
+    * step (state := fold(state, value), null state = empty); `combine`
+    * merges two segment STATES (null-identity both sides) and is what
+    * lets partition boundaries stitch with O(#partitions) driver
+    * traffic. Accumulating folds, whose state domain differs from the
+    * value's, must bring their own combine (see ScanSpec.combine).
+    *
+    * Returns the result and the pinned, range-partitioned input it read,
+    * for callers that need a second pass over the input without
+    * re-reading `df`. Group keys are copied [[groupKeys]] UnsafeRows,
+    * and only the value column and the state cross to external values,
+    * through one converter each per partition, so the folds (and the
+    * registered [[CustomScans]] folds) keep their
+    * external-value contract. */
   private def carryPinned(df: DataFrame, groupCols: Seq[String],
-                          order: Seq[Column], valueCol: String,
-                          outCol: String,
+                          order: Seq[Column],
+                          value: Either[Column, String], outCol: String,
                           fold: (Any, Any) => Any,
-                          outType: Option[org.apache.spark.sql.types.DataType],
-                          combine0: (Any, Any) => Any): (DataFrame, DataFrame) = {
+                          combine: (Any, Any) => Any,
+                          outType: Option[DataType]): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection, UnsafeRow}
-    val combine: (Any, Any) => Any =
-      if (combine0 != null) combine0 else fold
-    require(groupCols.nonEmpty, "groupCols must be non-empty")
     val spark = df.sparkSession
-    val gIdx = groupCols.map(df.schema.fieldIndex)
-    val vIdx = df.schema.fieldIndex(valueCol)
+    val resolver = spark.sessionState.conf.resolver
+    val (staged, valueCol) = value match {
+      case Left(v) =>
+        require(!df.columns.exists(resolver(_, Staged)),
+          s"input already has a column named '$Staged', the name GlobalScan " +
+            "stages its long value under; rename that column")
+        (df.withColumn(Staged, coalesce(v.cast(LongType), lit(0L))), Staged)
+      case Right(c) => (df, c)
+    }
+    val gIdx = groupCols.map(staged.schema.fieldIndex)
+    val vIdx = staged.schema.fieldIndex(valueCol)
     val sortCols = groupCols.map(col) ++ order
-    val parted = df
+    val parted = staged
       .repartitionByRange(spark.sessionState.conf.numShufflePartitions, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
       .localCheckpoint() // pin sampled range boundaries between passes
     val schema = parted.schema
     val vType = schema(vIdx).dataType
     val sType = outType.getOrElse(vType)
+    // output: `df`'s columns (a staged value is not one), the state
+    // replacing the column named `outCol` or else appended; srcIdx is
+    // each output column's slot in joined(input row, state)
+    val stateIdx = schema.length
+    val outField = StructField(outCol, sType, nullable = value.isRight)
+    val (outFields, srcIdx) = {
+      val kept = df.schema.zipWithIndex.map { case (f, i) =>
+        if (resolver(f.name, outCol)) (outField, stateIdx) else (f, i)
+      }
+      if (kept.exists(_._2 == stateIdx)) kept.unzip
+      else (kept :+ (outField -> stateIdx)).unzip
+    }
     def valueOf(toScala: Any => Any)(r: InternalRow): Any =
       if (r.isNullAt(vIdx)) null else toScala(r.get(vIdx, vType))
     // pass 1: per partition — first/last group keys and each boundary
@@ -461,9 +383,8 @@ object GlobalScan {
         carries((pid, fk)) = carryVal
       // g = lk's state leaving this partition: when the whole
       // partition is one group, combine the carried-in state with the
-      // segment fold (fold doubles as the segment combine — the
-      // monoid property the scaladoc names); otherwise the segment
-      // started fresh inside this partition
+      // segment's; otherwise the segment started fresh inside this
+      // partition
       val carryIn: Any =
         if (carryKey != null && carryKey == fk) carryVal else null
       val out: Any =
@@ -482,9 +403,9 @@ object GlobalScan {
       val keyOf = groupKeys(schema, gIdx)
       val v = valueOf(CatalystTypeConverters.createToScalaConverter(vType)) _
       val toCatalyst = CatalystTypeConverters.createToCatalystConverter(sType)
-      val proj = UnsafeProjection.create(schema.fields.zipWithIndex.map {
-        case (f, i) => BoundReference(i, f.dataType, f.nullable)
-      } :+ BoundReference(schema.length, sType, nullable = true))
+      val proj = UnsafeProjection.create(srcIdx.zip(outFields).map {
+        case (i, f) => BoundReference(i, f.dataType, f.nullable)
+      })
       val joined = new JoinedRow
       val extra = new GenericInternalRow(1)
       var cur: UnsafeRow = null
@@ -500,22 +421,20 @@ object GlobalScan {
         proj(joined(r, extra)): InternalRow
       }
     }
-    val outSchema = org.apache.spark.sql.types.StructType(
-      df.schema.fields :+ StructField(outCol, sType, nullable = true))
     val result = org.apache.spark.sql.GraftSqlBridge.internalCreateDataFrame(
-      spark, outRdd, outSchema)
+      spark, outRdd, StructType(outFields))
     Caches.readsThrough(outRdd, parted)
     (result, parted)
   }
 
-  /** The grouped tiers' group key: the group columns of an input row as
-    * an UnsafeRow, compared and hashed byte-wise. Floats are normalized
-    * first, as Spark's own grouping does (every NaN one value,
-    * −0.0 ≡ 0.0), so two rows share a key exactly when
-    * `Window.partitionBy` puts them in one partition. Keys stored across
-    * iterator steps must be COPIED: the projection reuses its buffer
-    * (the valid-until-next() contract). */
-  private def groupKeys(schema: org.apache.spark.sql.types.StructType,
+  /** The group key: the group columns of an input row as an UnsafeRow,
+    * compared and hashed byte-wise (no columns: one empty key, so every
+    * row is one group). Floats are normalized first, as Spark's own
+    * grouping does (every NaN one value, −0.0 ≡ 0.0), so two rows share
+    * a key exactly when `Window.partitionBy` puts them in one partition.
+    * Keys stored across iterator steps must be COPIED: the projection
+    * reuses its buffer (the valid-until-next() contract). */
+  private def groupKeys(schema: StructType,
                         gIdx: Seq[Int]): org.apache.spark.sql.catalyst.expressions.UnsafeProjection = {
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
     UnsafeProjection.create(gIdx.map { i =>
@@ -523,97 +442,5 @@ object GlobalScan {
       org.apache.spark.sql.GraftSqlBridge.normalizeFloats(
         BoundReference(i, f.dataType, f.nullable))
     })
-  }
-
-  private def groupedRunning(df: DataFrame, groupCols: Seq[String],
-                             order: Seq[Column], valueCol: Option[Column],
-                             outCol: String): DataFrame = {
-    require(groupCols.nonEmpty, "groupCols must be non-empty; use rowNumber")
-    val spark = df.sparkSession
-    val gIdx = groupCols.map(df.schema.fieldIndex)
-    // value is materialized as a trailing temp column so both passes
-    // read the SAME evaluated longs from the checkpoint (a non-
-    // deterministic value expression re-evaluating in pass 2 would
-    // desync from pass-1 offsets)
-    val vIdx = df.schema.length
-    val withV = df.withColumn("__grn_v",
-      coalesce(valueCol.getOrElse(lit(1L)).cast(LongType), lit(0L)))
-    val sortCols = groupCols.map(col) ++ order
-    val parted = withV
-      .repartitionByRange(spark.sessionState.conf.numShufflePartitions, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .localCheckpoint() // pin sampled range boundaries between passes
-    // Both passes run on InternalRow (r22, guide §4 — see [[prefixSum]]
-    // for the rationale; this is the same rewrite), keyed by
-    // [[groupKeys]].
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection, UnsafeRow}
-    val partedSchema = parted.schema
-    def gval(r: InternalRow): Long = r.getLong(vIdx)
-    // pass 1: per partition, first/last group key + their in-partition
-    // value sums (middle groups never cross a boundary → offset 0)
-    val bounds = parted.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val keyProj = groupKeys(partedSchema, gIdx)
-        val first = it.next()
-        val fk = keyProj(first).copy()
-        var fCount = gval(first)
-        var lk = fk
-        var lCount = fCount
-        var sawOther = false
-        it.foreach { r =>
-          val k = keyProj(r)
-          if (k == lk) {
-            lCount = Math.addExact(lCount, gval(r))
-            if (!sawOther) fCount = Math.addExact(fCount, gval(r))
-          } else { sawOther = true; lk = k.copy(); lCount = gval(r) }
-        }
-        Iterator((pid, fk, fCount, lk, lCount))
-      }
-    }.collect().sortBy(_._1)
-    // chain offsets: group g entering partition p from the left gets the
-    // accumulated count of g in partitions < p
-    val offsets = scala.collection.mutable.Map.empty[(Int, UnsafeRow), Long]
-    var carryKey: UnsafeRow = null
-    var carryCount = 0L
-    bounds.foreach { case (pid, fk, fCount, lk, lCount) =>
-      if (carryKey != null && carryKey == fk) offsets((pid, fk)) = carryCount
-      val into = // count of lk so far, including any carried-in prefix
-        if (fk == lk) Math.addExact(fCount,
-          if (carryKey != null && carryKey == fk) carryCount else 0L)
-        else lCount
-      carryKey = lk
-      carryCount = into
-    }
-    val bc = spark.sparkContext.broadcast(offsets.toMap)
-    val inFields = df.schema.fields
-    val outRdd = parted.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-      val keyProj = groupKeys(partedSchema, gIdx)
-      // drop the trailing __grn_v temp (at vIdx), append the running sum
-      val exprs = inFields.zipWithIndex.map { case (f, idx) =>
-        BoundReference(idx, f.dataType, f.nullable)
-      } :+ BoundReference(inFields.length + 1, LongType, nullable = false)
-      val proj = UnsafeProjection.create(exprs)
-      val joined = new JoinedRow
-      val extra = new GenericInternalRow(1)
-      var cur: UnsafeRow = null
-      var run = 0L
-      it.map { r =>
-        val k = keyProj(r)
-        if (cur == null || k != cur) {
-          cur = k.copy()
-          run = bc.value.getOrElse((pid, cur), 0L)
-        }
-        run = Math.addExact(run, gval(r))
-        extra.update(0, run)
-        proj(joined(r, extra)): InternalRow
-      }
-    }
-    val outSchema = org.apache.spark.sql.types.StructType(
-      df.schema.fields :+ StructField(outCol, LongType, nullable = false))
-    Caches.readsThrough(outRdd, parted)
-    org.apache.spark.sql.GraftSqlBridge.internalCreateDataFrame(
-      spark, outRdd, outSchema)
   }
 }

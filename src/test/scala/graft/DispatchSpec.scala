@@ -204,6 +204,29 @@ class DispatchSpec extends SparkTestBase {
       canon(api.GroupByScan(df, Seq("g"), "iv", "cumcount", "id", "r")))
   }
 
+  test("scanAuto with as = value: the carry and window tiers return " +
+    "the same schema and rows (the scan replaces the value column)") {
+    val df = (0 until 20000).map { i =>
+      (s"g${i % 2}", i,
+        if (i % 13 == 0) None else Some(((i * 131) % 500).toDouble))
+    }.toDF("g", "id", "v")
+    val st = Dispatch.keyStats(df, Seq("g"))
+    def run(func: String, mega: Long) =
+      Dispatch.scanAuto(df, Seq("g"), "v", func, "id", as = "v",
+        megaGroupRows = mega, stats = Some(st))
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.orderBy("g", "id").collect().map(_.toSeq.map(String.valueOf)).toSeq
+    assert(Dispatch.chooseScanTier(st, 4000) === Dispatch.CarryTier)
+    for (func <- Seq("ffill", "bfill", "cummax", "cummin", "nancummax",
+                     "cumcount")) {
+      val carry = run(func, 4000)
+      val window = run(func, Long.MaxValue)
+      assert(carry.schema === window.schema, func)
+      assert(carry.columns.toSeq === df.columns.toSeq, func)
+      assert(rows(carry) === rows(window), func)
+    }
+  }
+
   test("reduceAuto umbrella: hash-agg funcs pass straight through " +
     "(no stats pass), exact quantile family escalates bit-equal " +
     "(median=q0.5, nan* via masking, NaN propagation), flags refuse " +

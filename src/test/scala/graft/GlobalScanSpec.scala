@@ -771,6 +771,121 @@ class GlobalScanSpec extends SparkTestBase {
     }
   }
 
+  // every GlobalScan entry point, writing column `out` over the frame
+  // of scanInput: the long scans sum `n`, the carry scans read `v`
+  private def entryPoints(out: String): Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] =
+    Seq(
+      "prefixSum" -> (d => GlobalScan.prefixSum(d, Seq(col("g"), col("id")), col("n"), out)),
+      "rowNumber" -> (d => GlobalScan.rowNumber(d, Seq(col("g"), col("id")), out))) ++
+      groupedEntryPoints(out, Seq("g"))
+
+  private def groupedEntryPoints(out: String, g: Seq[String]): Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = {
+    val ord = Seq(col("id"))
+    Seq(
+      "groupedRowNumber" -> (d => GlobalScan.groupedRowNumber(d, g, ord, out)),
+      "groupedPrefixSum" -> (d => GlobalScan.groupedPrefixSum(d, g, ord, col("n"), out)),
+      "groupedFfill" -> (d => GlobalScan.groupedFfill(d, g, ord, "v", out)),
+      "groupedBfill" -> (d => GlobalScan.groupedBfill(d, g, ord, "v", out)),
+      "groupedCumMax" -> (d => GlobalScan.groupedCumMax(d, g, ord, "v", out)),
+      "groupedCumMin" -> (d => GlobalScan.groupedCumMin(d, g, ord, "v", out)),
+      "groupedNanCumMax" -> (d => GlobalScan.groupedNanCumMax(d, g, ord, "v", out)),
+      "groupedNanCumMin" -> (d => GlobalScan.groupedNanCumMin(d, g, ord, "v", out)),
+      "groupedCustomScan cumcount" -> (d => GlobalScan.groupedCustomScan(
+        d, g, ord, "v", out, "cumcount")))
+  }
+
+  private def scanInput = Seq(("a", 0, Some(1.0), 3L), ("a", 1, None, 4L),
+      ("a", 2, Some(Double.NaN), 5L), ("a", 3, Some(0.5), 6L),
+      ("b", 0, None, 7L), ("b", 1, Some(2.0), 8L))
+    .toDF("g", "id", "v", "n")
+
+  test("output schema of every entry point: long scans a non-null long, " +
+    "carry scans the value's dtype nullable, cumcount its foldOutType") {
+    import org.apache.spark.sql.types._
+    val df = scanInput
+    val long = StructField("o", LongType, nullable = false)
+    val value = StructField("o", DoubleType, nullable = true)
+    val want = Map(
+      "prefixSum" -> long, "rowNumber" -> long, "groupedRowNumber" -> long,
+      "groupedPrefixSum" -> long, "groupedFfill" -> value,
+      "groupedBfill" -> value, "groupedCumMax" -> value,
+      "groupedCumMin" -> value, "groupedNanCumMax" -> value,
+      "groupedNanCumMin" -> value,
+      // count over an empty prefix is 0 (outFinalize), never null
+      "groupedCustomScan cumcount" -> long)
+    val ops = entryPoints("o")
+    assert(ops.map(_._1).toSet === want.keySet)
+    for ((name, op) <- ops)
+      assert(op(df).schema === StructType(df.schema.fields :+ want(name)), name)
+  }
+
+  test("an outCol that names an input column replaces it in place on " +
+    "every entry point, as withColumn and the window tier do") {
+    val df = scanInput
+    def rows(d: org.apache.spark.sql.DataFrame, cols: Seq[String]) =
+      d.orderBy("g", "id").select(cols.map(col): _*).collect()
+        .map(_.toSeq.map(String.valueOf)).toSeq
+    for (out <- Seq("v", "n");
+         ((name, fresh), (_, inPlace)) <- entryPoints("o").zip(entryPoints(out))) {
+      val got = inPlace(df)
+      val ref = fresh(df)
+      assert(got.columns.toSeq === df.columns.toSeq, s"$name -> $out")
+      assert(got.schema(out) === ref.schema("o").copy(name = out),
+        s"$name -> $out")
+      assert(rows(got, df.columns) ===
+        rows(ref, df.columns.map(c => if (c == out) "o" else c)),
+        s"$name -> $out")
+    }
+  }
+
+  test("an empty group list scans the whole frame as one group on " +
+    "every grouped entry point, a finish scan included") {
+    import graft.aggs.CustomScans
+    CustomScans.register("cumfrac_all", CustomScans.ScanSpec(
+      agg = v => sum(v),
+      finish = Some((run, whole) => run.cast("double") / whole),
+      fold = Some(CustomScans.addLongs), combine = Some(CustomScans.addLongs)))
+    // ids unique across the frame, so (id) totally orders it
+    val df = scanInput.withColumn("id", col("id") * 2 + (col("g") === "b").cast("int"))
+    val one = df.withColumn("k", lit(1))
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.orderBy("id").select("g", "id", "v", "n", "o").collect()
+        .map(_.toSeq.map(String.valueOf)).toSeq
+    val finish: (String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
+      "groupedCustomScan finish" -> (d => GlobalScan.groupedCustomScan(
+        d, if (d.columns.contains("k")) Seq("k") else Nil, Seq(col("id")),
+        "n", "o", "cumfrac_all"))
+    for (((name, none), (_, const)) <- (groupedEntryPoints("o", Nil) :+ finish)
+        .zip(groupedEntryPoints("o", Seq("k")) :+ finish))
+      assert(rows(none(df)) === rows(const(one)), name)
+  }
+
+  test("the long scans refuse an input column under their staging " +
+    "name, naming it; any other column is kept as it is") {
+    val df = Seq(("a", 0, 1L, 9L), ("a", 1, 2L, 8L), ("b", 0, 3L, 7L))
+      .toDF("g", "id", "n", "__scan_v")
+    val ops: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame, Seq[Long])] = Seq(
+      ("prefixSum", d => GlobalScan.prefixSum(d, Seq(col("g"), col("id")),
+        col("n"), "o"), Seq(1L, 3L, 6L)),
+      ("groupedPrefixSum", d => GlobalScan.groupedPrefixSum(d, Seq("g"),
+        Seq(col("id")), col("n"), "o"), Seq(1L, 3L, 3L)),
+      ("groupedRowNumber", d => GlobalScan.groupedRowNumber(d, Seq("g"),
+        Seq(col("id")), "o"), Seq(1L, 2L, 1L)))
+    // lookalike names (and the names earlier versions staged under) are
+    // ordinary input columns
+    val other = df.withColumnRenamed("__scan_v", "__grn_v")
+      .withColumn("__v", col("n"))
+    for ((name, op, want) <- ops) {
+      val e = intercept[IllegalArgumentException](op(df))
+      assert(e.getMessage.contains("'__scan_v'"), s"$name: ${e.getMessage}")
+      val got = op(other).orderBy("g", "id")
+      assert(got.columns.toSeq === other.columns.toSeq :+ "o", name)
+      assert(got.select("__grn_v", "__v", "o").as[(Long, Long, Long)]
+        .collect().toSeq === Seq(9L, 8L, 7L).zip(Seq(1L, 2L, 3L)).zip(want)
+        .map { case ((a, b), c) => (a, b, c) }, name)
+    }
+  }
+
   test("packSequences: budget arithmetic, spans, empty docs") {
     val df = Seq((1L, 10L), (2L, 0L), (3L, 70L), (4L, 54L), (5L, 1L))
       .toDF("doc_id", "toks")
