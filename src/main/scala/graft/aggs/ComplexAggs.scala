@@ -59,8 +59,10 @@ object ComplexAggs {
     c(coalesce(sum(when(valid(v), re(v))), lit(0.0)),
       coalesce(sum(when(valid(v), im(v))), lit(0.0)))
 
+  /** NaN-propagating mean; an all-missing group is null (the [[csum]]
+    * convention), not a struct of nulls. */
   def cmean(v: Column): Column =
-    c(sum(re(v)) / count(v), sum(im(v)) / count(v))
+    when(count(v) > 0, c(sum(re(v)) / count(v), sum(im(v)) / count(v)))
 
   def nancmean(v: Column): Column = {
     val n = ccount(v)

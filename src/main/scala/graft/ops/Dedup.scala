@@ -88,10 +88,6 @@ object Dedup {
   def lshCandidates(df: DataFrame, textCol: String, idCol: String,
                     numHashes: Int = 6, bandSize: Int = 1, k: Int = 3,
                     useMd5: Boolean = false, maxBucket: Int = 1000): DataFrame = {
-    val sig = withMinhashSignature(df, textCol, numHashes, k, useMd5)
-      .select(col(idCol).as("__id"),
-        array((0 until numHashes).map(h => col(s"mh$h").cast("string")): _*).as("__sig"))
-    val nBands = numHashes / bandSize
     // Materialize the band table ONCE (executor-local storage): three
     // consumers read it (bucket-size counts + both join sides), and
     // each would otherwise re-run the minhash pass over the full text —
@@ -99,24 +95,10 @@ object Dedup {
     // (id + band key per doc x nBands) is a tiny fraction of the text
     // it replaces; persisting signatures between stages is exactly what
     // a production dedup pipeline does.
-    val bands = sig.select(col("__id"),
-      posexplode(transform(sequence(lit(0), lit(nBands - 1)),
-        b => bandHash((0 until bandSize).map(j =>
-          element_at(col("__sig"), b * bandSize + j + 1))))))
-      .withColumnRenamed("pos", "band_idx")
-      .withColumnRenamed("col", "band_hash")
-      .localCheckpoint()
-    // Degenerate-bucket guard (e.g. empty-text docs all hash alike) as a
-    // broadcast ANTI-join: oversized buckets are few by construction
-    // (≤ rows·nBands/maxBucket), so the band table is never shuffled or
-    // sorted for the prune — a window count would sort the mega bucket's
-    // partition on one task before discarding it.
-    val oversized = bands.groupBy("band_idx", "band_hash")
-      .agg(count(lit(1)).as("__bucket_n"))
-      .filter(col("__bucket_n") > maxBucket)
-      .select("band_idx", "band_hash")
-    val pruned = bands.join(broadcast(oversized),
-      Seq("band_idx", "band_hash"), "left_anti")
+    val bands = bandTable(df, textCol, idCol, "__id", numHashes, bandSize,
+      k, useMd5).localCheckpoint()
+    val pruned = PersistedIndex.prune(bands, Seq("band_idx", "band_hash"),
+      maxBucket)
     val a = pruned.select(col("band_idx"), col("band_hash"), col("__id").as("id_a"))
     val b = pruned.select(col("band_idx"), col("band_hash"), col("__id").as("id_b"))
     a.join(b, Seq("band_idx", "band_hash"))
@@ -176,38 +158,22 @@ object Dedup {
                         bandSize: Int = 1, k: Int = 3,
                         useMd5: Boolean = false,
                         maxBucket: Int = 1000): DataFrame = {
-    val nBands = numHashes / bandSize
-    def bandsOf(df: DataFrame, idCol: String, outId: String) = {
-      val sig = withMinhashSignature(df, textCol, numHashes, k, useMd5)
-        .select(col(idCol).as(outId),
-          array((0 until numHashes).map(h => col(s"mh$h").cast("string")): _*)
-            .as("__sig"))
-      sig.select(col(outId),
-        posexplode(transform(sequence(lit(0), lit(nBands - 1)),
-          b => bandHash((0 until bandSize).map(j =>
-            element_at(col("__sig"), b * bandSize + j + 1))))))
-        .withColumnRenamed("pos", "band_idx")
-        .withColumnRenamed("col", "band_hash")
+    def bandsOf(df: DataFrame, idCol: String, outId: String) =
+      bandTable(df, textCol, idCol, outId, numHashes, bandSize, k, useMd5)
         .select(col("band_idx"), col("band_hash"), col(outId))
-    }
     // degenerate-bucket guard on the corpus side only: the broadcast
     // benchmark side is bounded by construction, but one pathological
     // corpus bucket (e.g. empty documents) times any benchmark hit
     // would still fan out — computed from the corpus band table alone,
     // so it stays a broadcast anti-join
-    val rBands0 = bandsOf(right, rightIdCol, "id_r").localCheckpoint()
-    val oversized = rBands0.groupBy("band_idx", "band_hash")
-      .agg(count(lit(1)).as("__bucket_n"))
-      .filter(col("__bucket_n") > maxBucket)
-      .select("band_idx", "band_hash")
-    val rBands = rBands0.join(broadcast(oversized),
-      Seq("band_idx", "band_hash"), "left_anti")
-    val cand = rBands
+    val rBands = PersistedIndex.prune(
+      bandsOf(right, rightIdCol, "id_r").localCheckpoint(),
+      Seq("band_idx", "band_hash"), maxBucket)
+    // consumers: the count, the id prune, the verify join
+    val cand = PersistedIndex.idGate(rBands
       .join(broadcast(bandsOf(left, leftIdCol, "id_l")),
         Seq("band_idx", "band_hash"))
-      .select("id_l", "id_r").distinct()
-      .localCheckpoint() // consumers: the count, the id prune, the verify join
-    val nCand = cand.count()
+      .select("id_l", "id_r").distinct())
     def shinglesOf(df: DataFrame, idCol: String, outId: String, sh: String) =
       df.select(col(idCol).as(outId),
         array_sort(array_distinct(TextAnalysis.shingles(col(textCol), k)))
@@ -221,12 +187,12 @@ object Dedup {
     // join would shuffle the corpus by id, strictly worse than the old
     // unpruned plan it replaces.
     val rightCand =
-      if (nCand <= idBroadcastThreshold(left.sparkSession))
+      if (cand.under)
         right.join(
-          broadcast(cand.select(col("id_r").as(rightIdCol)).distinct()),
+          broadcast(cand.pinned.select(col("id_r").as(rightIdCol)).distinct()),
           Seq(rightIdCol), "left_semi")
       else right
-    cand
+    cand.pinned
       .join(broadcast(shinglesOf(left, leftIdCol, "id_l", "sh_l")), Seq("id_l"))
       .join(shinglesOf(rightCand, rightIdCol, "id_r", "sh_r"), Seq("id_r"))
       .withColumn("jaccard",
@@ -251,7 +217,7 @@ object Dedup {
     * prefix overlap used to allow (e.g. a numHashes=4 query against a
     * numHashes=6 index matching on the shared bands 0-3) — and the
     * `cfg` column every index now carries upgrades even that to a
-    * LOUD scan-time failure ([[requireCfg]]). */
+    * LOUD scan-time failure ([[PersistedIndex.requireCfg]]). */
   private[graft] def bandKeyExpr(cfg: String, bandIdx: Column,
                                  lanes: Seq[Column]): Column =
     unhex(md5(concat_ws("|",
@@ -263,7 +229,7 @@ object Dedup {
     * 16-byte binary (`unhex(md5)`, same 128-bit value the hex string
     * spelled in 32 chars) — a pre-r22 persisted index carries "mh:…"
     * stamps and a STRING band_key column, so querying it with current
-    * code fails LOUDLY ([[requireCfg]] stamp mismatch / join type
+    * code fails LOUDLY ([[PersistedIndex.requireCfg]] stamp mismatch / join type
     * mismatch) instead of silently returning zero candidates. Rebuild
     * persisted indexes and blooms to migrate. */
   private[graft] def minhashCfg(numHashes: Int, bandSize: Int, k: Int,
@@ -275,60 +241,82 @@ object Dedup {
   private[graft] def hammingCfg(sigBits: Int, maxHamming: Int): String =
     s"hm2:$sigBits:$maxHamming"
 
-  /** Loud build/query config check: if the index carries the `cfg`
-    * column (every [[bandIndex]]/[[hammingBandIndex]] build does), any
-    * index row whose stamp differs from the query's throws AT SCAN
-    * TIME with both stamps in the message. Implemented as a filter the
-    * optimizer cannot prune (`coalesce(assert_true(...), true)` keeps
-    * every row), codegen'd to one dictionary-constant string compare
-    * per scanned row — free next to the join it guards.
-    *
-    * An index WITHOUT the column is REFUSED at plan time (r17 advice):
-    * every current build stamps one, so its absence proves a
-    * stale-FORMAT index — and because the config stamp is also folded
-    * into every band key, querying such an index yields
-    * deterministically ZERO candidates, which for dedup is the
-    * unabsorbable direction (silent duplicate leakage: no candidates
-    * means no duplicates are ever detected). Rebuild the index; or,
-    * for a deliberate read of a pre-stamp layout, set
-    * `spark.graft.dedup.allowLegacyIndex=true` to restore the old
-    * zero-candidates-never-wrong-pairs fallback. */
-  private[graft] def requireCfg(index: DataFrame, expected: String): DataFrame =
-    if (!index.columns.contains("cfg")) {
-      val allow = index.sparkSession.conf
-        .getOption("spark.graft.dedup.allowLegacyIndex")
-        .exists(_.toBoolean)
-      require(allow,
-        "index has no 'cfg' column — a stale-format (pre-stamp) index: " +
-          "querying it can only yield zero candidates (band keys fold " +
-          "the config stamp in), i.e. silent duplicate leakage. Rebuild " +
-          s"the index for '$expected', or set " +
-          "spark.graft.dedup.allowLegacyIndex=true to accept the " +
-          "zero-candidate fallback deliberately")
-      index
-    }
-    else index.filter(coalesce(
-      assert_true(col("cfg") <=> lit(expected),
-        concat(lit("band-index config mismatch: index built with '"),
-          col("cfg"), lit(s"' but queried with '$expected' — " +
-            "numHashes/bandSize/k/useMd5 (or sigBits/maxHamming) " +
-            "must match the index build"))),
-      lit(true)))
+  /** (outId, __sig): the minhash lanes of each document as strings —
+    * the input of both band-key derivations below. */
+  private def sigLanes(df: DataFrame, textCol: String, idCol: String,
+                       outId: String, numHashes: Int, k: Int,
+                       useMd5: Boolean): DataFrame =
+    withMinhashSignature(df, textCol, numHashes, k, useMd5)
+      .select(col(idCol).as(outId),
+        array((0 until numHashes).map(h => col(s"mh$h").cast("string")): _*)
+          .as("__sig"))
 
+  /** The within-corpus LSH band table (outId, band_idx, band_hash):
+    * one row per document and band, keyed by [[bandHash]]. Shared by
+    * [[lshCandidates]] and [[crossNearDupPairs]]. */
+  private def bandTable(df: DataFrame, textCol: String, idCol: String,
+                        outId: String, numHashes: Int, bandSize: Int,
+                        k: Int, useMd5: Boolean): DataFrame = {
+    val nBands = numHashes / bandSize
+    sigLanes(df, textCol, idCol, outId, numHashes, k, useMd5)
+      .select(col(outId),
+        posexplode(transform(sequence(lit(0), lit(nBands - 1)),
+          b => bandHash((0 until bandSize).map(j =>
+            element_at(col("__sig"), b * bandSize + j + 1))))))
+      .withColumnRenamed("pos", "band_idx")
+      .withColumnRenamed("col", "band_hash")
+  }
+
+  /** The persisted-index band keys (outId, band_key): [[bandKeyExpr]]
+    * under the MinHash stamp, one row per document and band. */
   private def bandKeysOf(df: DataFrame, textCol: String, idCol: String,
                          outId: String, numHashes: Int, bandSize: Int,
                          k: Int, useMd5: Boolean): DataFrame = {
     val nBands = numHashes / bandSize
     val cfg = minhashCfg(numHashes, bandSize, k, useMd5)
-    val sig = withMinhashSignature(df, textCol, numHashes, k, useMd5)
-      .select(col(idCol).as(outId),
-        array((0 until numHashes).map(h => col(s"mh$h").cast("string")): _*)
-          .as("__sig"))
-    sig.select(col(outId),
-      explode(transform(sequence(lit(0), lit(nBands - 1)),
-        b => bandKeyExpr(cfg, b, (0 until bandSize).map(j =>
-          element_at(col("__sig"), b * bandSize + j + 1)))))
-        .as("band_key"))
+    sigLanes(df, textCol, idCol, outId, numHashes, k, useMd5)
+      .select(col(outId),
+        explode(transform(sequence(lit(0), lit(nBands - 1)),
+          b => bandKeyExpr(cfg, b, (0 until bandSize).map(j =>
+            element_at(col("__sig"), b * bandSize + j + 1)))))
+          .as("band_key"))
+  }
+
+  /** A band index from its (band_key, …) rows: pinned ONCE — its two
+    * consumers, the oversized-bucket count and the anti-join's left
+    * side, would each re-run the caller's whole key derivation (the
+    * minhash pass over the corpus text, or the SimHash kernel / media
+    * decode) — then pruned of buckets over `maxBucket` and stamped
+    * with `cfg`. Returns the index and its oversized keys (pinned too
+    * when `pinOversized`: the sidecar write is their second consumer). */
+  private def prunedBandIndex(bands: DataFrame, cfg: String, maxBucket: Int,
+                              pinOversized: Boolean = false)
+    : (DataFrame, DataFrame) = {
+    val pinned = bands.localCheckpoint()
+    val over0 = PersistedIndex.oversizedKeys(pinned, Seq("band_key"), maxBucket)
+    val over = if (pinOversized) over0.localCheckpoint() else over0
+    (PersistedIndex.dropKeys(pinned, over, Seq("band_key"))
+      .withColumn("cfg", lit(cfg)), over)
+  }
+
+  /** Persist a [[prunedBandIndex]] bucketed on band_key, with its
+    * pruned-keys sidecar at `prunedPath`; every consumer is a terminal
+    * action here, so the corpus-sized pin is released eagerly (a daily
+    * rebuild cadence would otherwise accumulate one pinned band table
+    * per build until session end). [[graft.api.Caches.release]], not
+    * unpersist: Dataset.unpersist does not reach localCheckpoint
+    * blocks. */
+  private def writePrunedBandIndex(bands: DataFrame, cfg: String,
+                                   maxBucket: Int, table: String,
+                                   buckets: Int, path: Option[String],
+                                   prunedPath: Option[String]): Unit = {
+    val (idx, over) = prunedBandIndex(bands, cfg, maxBucket,
+      pinOversized = prunedPath.isDefined)
+    graft.api.Layout.writeBucketed(idx, table, Seq("band_key"), buckets,
+      path = path)
+    prunedPath.foreach(p => over.write.mode(SaveMode.Overwrite).parquet(p))
+    graft.api.Caches.release(idx)
+    graft.api.Caches.release(over)
   }
 
   /** MinHash band-index table for INCREMENTAL near-dup detection —
@@ -347,7 +335,7 @@ object Dedup {
     * fold the config stamp in, so mismatched parameters produce
     * deterministically zero candidates — and the constant `cfg`
     * column carried by every row (dictionary-encodes to ~nothing in
-    * parquet) makes the mismatch LOUD at query time ([[requireCfg]]).
+    * parquet) makes the mismatch LOUD at query time ([[PersistedIndex.requireCfg]]).
     *
     * maxBucket corollary worth knowing when auditing survivors: a
     * batch doc ALL of whose bands land in pruned buckets can never
@@ -369,23 +357,10 @@ object Dedup {
     * pin. */
   def bandIndex(df: DataFrame, textCol: String, idCol: String,
                 numHashes: Int = 6, bandSize: Int = 1, k: Int = 3,
-                useMd5: Boolean = false, maxBucket: Int = 1000): DataFrame = {
-    // Pin the band table ONCE (the lshCandidates precedent, r21): its
-    // two consumers — the oversized-bucket count feeding the broadcast
-    // anti-join, and the anti-join's left side — each re-ran the
-    // minhash pass over the full corpus TEXT (plan-verified: two
-    // complete scan→minhash subtrees per build). The (band_key, id)
-    // table this materializes is a tiny fraction of the text it
-    // replaces; at scale the text pass is the dominant map cost.
-    val bands = bandKeysOf(df, textCol, idCol, "id",
-      numHashes, bandSize, k, useMd5).localCheckpoint()
-    val oversized = bands.groupBy("band_key")
-      .agg(count(lit(1)).as("__bucket_n"))
-      .filter(col("__bucket_n") > maxBucket)
-      .select("band_key")
-    bands.join(broadcast(oversized), Seq("band_key"), "left_anti")
-      .withColumn("cfg", lit(minhashCfg(numHashes, bandSize, k, useMd5)))
-  }
+                useMd5: Boolean = false, maxBucket: Int = 1000): DataFrame =
+    prunedBandIndex(bandKeysOf(df, textCol, idCol, "id",
+      numHashes, bandSize, k, useMd5),
+      minhashCfg(numHashes, bandSize, k, useMd5), maxBucket)._1
 
   /** Band-key DELTA for batch survivors being admitted to the corpus —
     * the maintenance path [[graft.api.Layout]] correctly refuses
@@ -428,86 +403,47 @@ object Dedup {
                      numHashes: Int = 6, bandSize: Int = 1, k: Int = 3,
                      useMd5: Boolean = false, maxBucket: Int = 1000,
                      path: Option[String] = None,
-                     prunedPath: Option[String] = None): Unit = {
-    // band table pinned once — same two-consumer re-compute as
-    // [[bandIndex]] (r21; the lshCandidates precedent)
-    val bands = bandKeysOf(df, textCol, idCol, "id",
-      numHashes, bandSize, k, useMd5).localCheckpoint()
-    val oversized = bands.groupBy("band_key")
-      .agg(count(lit(1)).as("__bucket_n"))
-      .filter(col("__bucket_n") > maxBucket)
-      .select("band_key")
-    // two consumers of the oversized keys (the anti-join + the
-    // sidecar write): pin them once — they are tiny by construction
-    val over = if (prunedPath.isDefined) oversized.localCheckpoint()
-               else oversized
-    val idx = bands.join(broadcast(over), Seq("band_key"), "left_anti")
-      .withColumn("cfg", lit(minhashCfg(numHashes, bandSize, k, useMd5)))
-    graft.api.Layout.writeBucketed(idx, table, Seq("band_key"), buckets,
-      path = path)
-    prunedPath.foreach(p =>
-      over.write.mode(SaveMode.Overwrite).parquet(p))
-    // every consumer is a terminal action inside this Unit function —
-    // release the corpus-sized pin eagerly (r21 review find: a daily
-    // rebuild cadence would otherwise accumulate one pinned band table
-    // per build until session end). Caches.release, not unpersist:
-    // Dataset.unpersist does not reach localCheckpoint blocks (r12).
-    graft.api.Caches.release(idx)
-    graft.api.Caches.release(over)
-  }
+                     prunedPath: Option[String] = None): Unit =
+    writePrunedBandIndex(bandKeysOf(df, textCol, idCol, "id",
+      numHashes, bandSize, k, useMd5),
+      minhashCfg(numHashes, bandSize, k, useMd5), maxBucket, table,
+      buckets, path, prunedPath)
 
   /** Append a day's admitted survivors' band keys to the DELTA side
-    * table (plain parquet — append is safe here precisely because this
-    * table is NOT bucketed; it is day-scale and joined as the small
-    * side). `prunedKeys` (the [[writeBandIndex]] sidecar) keeps
-    * build-pruned degenerate buckets pruned: a survivor band row
-    * landing in one is dropped at append time, matching what a full
-    * rebuild would do to it.
-    *
-    * NOT idempotent under JOB-level re-runs (task retries are covered
-    * by Spark's file commit protocol, but re-running the whole append
-    * doubles the day's rows — inflating delta-side candidates and,
-    * after compaction, bucket counts). Exactly-once admission is the
-    * caller's commit protocol — the same discipline as the shard
-    * writer's per-epoch manifest ([[graft.ops.Selection]] /
-    * graft.ops.Packing manifest pattern): record the admitted batch id
-    * with the append and skip re-runs. */
+    * table ([[PersistedIndex.appendDelta]]: plain parquet, NOT
+    * idempotent under job-level re-runs). `prunedKeys` (the
+    * [[writeBandIndex]] sidecar) keeps build-pruned degenerate buckets
+    * pruned: a survivor band row landing in one is dropped at append
+    * time, matching what a full rebuild would do to it. */
   def appendBandIndexDelta(survivors: DataFrame, textCol: String,
                            idCol: String, deltaPath: String,
                            numHashes: Int = 6, bandSize: Int = 1,
                            k: Int = 3, useMd5: Boolean = false,
-                           prunedKeys: Option[DataFrame] = None): Unit = {
-    val d0 = bandIndexDelta(survivors, textCol, idCol,
-      numHashes, bandSize, k, useMd5)
-    val d = prunedKeys.fold(d0)(pk =>
-      d0.join(broadcast(pk.select("band_key")), Seq("band_key"),
-        "left_anti"))
-    d.write.mode(SaveMode.Append).parquet(deltaPath)
-  }
+                           prunedKeys: Option[DataFrame] = None): Unit =
+    PersistedIndex.appendDelta(bandIndexDelta(survivors, textCol, idCol,
+      numHashes, bandSize, k, useMd5), deltaPath, prunedKeys)
 
   /** Fold the delta back into a NEW bucketed layout (corpus version
-    * bump). Writes to `outTable` — never in place: Spark refuses to
-    * overwrite a table it is reading, and the versioned table keeps
-    * the old index queryable until cutover (swap the name your jobs
-    * read, then drop the old version). Family-generic (it keys on
-    * `band_key` and carries whatever other columns the index has), so
-    * it serves the MinHash AND hamming indexes — pass the family's
-    * build-time maxBucket (1000 MinHash default, 100000 hamming
-    * default); the shared compactor cannot infer it.
+    * bump) through [[PersistedIndex.compact]] (in place refused, a
+    * delta stamped unlike the index refused, exact duplicate delta rows
+    * dropped). Family-generic on `band_key`, so it serves the MinHash
+    * AND hamming indexes — pass the family's build-time maxBucket (1000
+    * MinHash default, 100000 hamming default); the compactor cannot
+    * infer it.
     *
-    * REBUILD-EQUAL by construction when the pruned-keys sidecar is
-    * supplied: (1) delta rows in build-pruned buckets are dropped
-    * (counts only ever grow, so a rebuild would prune them too);
-    * (2) every surviving bucket has ALL its rows present in
-    * index ∪ delta, so the combined count is the true count and the
-    * re-prune here is the rebuild's prune. Without the sidecar the
-    * equality holds whenever no bucket was pruned at build time.
-    * The new sidecar (old pruned keys ∪ newly-oversized keys) is
-    * written to `outPrunedPath` for the next cycle. Use the SAME
-    * maxBucket as the build: a smaller one re-prunes consistently
-    * with a rebuild at that value, but a LARGER one cannot resurrect
-    * rows the build already dropped (they are not in the index), so
-    * loosening the guard requires a true rebuild. */
+    * The band rule: re-prune at the combined grain. REBUILD-EQUAL by
+    * construction when the pruned-keys sidecar is supplied: (1) delta
+    * rows in build-pruned buckets are dropped (counts only ever grow,
+    * so a rebuild would prune them too); (2) every surviving bucket has
+    * ALL its rows present in index ∪ delta, so the combined count is
+    * the true count and the re-prune here is the rebuild's prune.
+    * Without the sidecar the equality holds whenever no bucket was
+    * pruned at build time. The new sidecar (old pruned keys ∪
+    * newly-oversized keys) is written to `outPrunedPath` for the next
+    * cycle. Use the SAME maxBucket as the build: a smaller one
+    * re-prunes consistently with a rebuild at that value, but a LARGER
+    * one cannot resurrect rows the build already dropped (they are not
+    * in the index), so loosening the guard requires a true rebuild. */
   def compactBandIndex(spark: org.apache.spark.sql.SparkSession,
                        indexTable: String, delta: DataFrame,
                        outTable: String, buckets: Int,
@@ -515,50 +451,14 @@ object Dedup {
                        path: Option[String] = None,
                        prunedKeys: Option[DataFrame] = None,
                        outPrunedPath: Option[String] = None): Unit = {
-    require(outTable != indexTable,
-      "compactBandIndex writes a NEW table version: Spark cannot " +
-        "overwrite a table it is reading from, and in-place compaction " +
-        "would leave no index during the rewrite — compact to a new " +
-        "name and cut readers over")
-    val index = graft.api.Layout.table(spark, indexTable)
-    val cols = index.columns.toSeq
-    // refuse a cross-config delta AT COMPACTION, not at first query
-    // (r17 review): merging it would leave two cfg stamps in one
-    // table, so every later requireCfg scan of the new version throws
-    // on rows the querying job never asked for. One head row prices
-    // the check; the delta scan then fails loudly on any mismatched
-    // row during the write itself.
-    val deltaCfgd =
-      if (cols.contains("cfg") && delta.columns.contains("cfg"))
-        index.select("cfg").limit(1).collect().headOption match {
-          case Some(r) if !r.isNullAt(0) => requireCfg(delta, r.getString(0))
-          case _ => delta // empty index: nothing to contradict
-        }
-      else delta
-    val deltaClean0 = prunedKeys.fold(deltaCfgd)(pk =>
-      deltaCfgd.join(broadcast(pk.select("band_key")), Seq("band_key"),
-        "left_anti"))
-    // full-row dedup at the DELTA grain (r17 sweep): the append-mode
-    // side table has no commit protocol of its own, so a re-run job
-    // that appended the same day twice leaves exact duplicate rows —
-    // which would double-count bucket sizes here and prune buckets a
-    // true rebuild would keep (breaking rebuild-equality), besides
-    // duplicating candidates. A rebuild from admitted survivors holds
-    // each (band_key, id) once; this restores that. Day-scale cost
-    // (the delta is small by contract); cross-duplicates vs the INDEX
-    // (re-admitting an already-compacted survivor) remain the caller's
-    // commit protocol — they cannot arise from an append re-run.
-    val deltaClean = deltaClean0.select(cols.map(col): _*).dropDuplicates()
-    val unioned = index.unionByName(deltaClean)
-    val newOversized = unioned.groupBy("band_key")
-      .agg(count(lit(1)).as("__bucket_n"))
-      .filter(col("__bucket_n") > maxBucket)
-      .select("band_key")
-      .localCheckpoint() // two consumers: the anti-join + the sidecar
-    val compacted = unioned.join(broadcast(newOversized),
-      Seq("band_key"), "left_anti")
-    graft.api.Layout.writeBucketed(compacted, outTable, Seq("band_key"),
-      buckets, path = path)
+    val newOversized = PersistedIndex.compact(spark, "compactBandIndex",
+      indexTable, delta, outTable, buckets, path, "band_key",
+      prunedKeys = prunedKeys) { unioned =>
+      // two consumers: the anti-join + the sidecar
+      val over = PersistedIndex.oversizedKeys(unioned, Seq("band_key"),
+        maxBucket).localCheckpoint()
+      (PersistedIndex.dropKeys(unioned, over, Seq("band_key")), over)
+    }
     outPrunedPath.foreach { p =>
       prunedKeys.fold(newOversized)(pk =>
         pk.select("band_key").unionByName(newOversized).distinct())
@@ -566,20 +466,9 @@ object Dedup {
     }
   }
 
-  /** Row-count gate for the explicit broadcast hints on the
-    * incremental-dedup join sides (r16 advice: an un-gated hint turns
-    * an oversized daily batch into a driver-memory failure a plain
-    * join would survive). Same adaptive pattern as
-    * [[connectedComponents]]' measured local/distributed fork: the
-    * candidate set is already pinned for its two consumers, so its
-    * count is one cheap action; under the gate the hint stands, over
-    * it the joins run un-hinted and AQE decides. Two thresholds
-    * because the broadcast payloads differ by orders of magnitude:
-    * id-pair rows are ~tens of bytes, shingle rows are KBs. */
-  private def idBroadcastThreshold(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.dedup.idBroadcastThreshold")
-      .map(_.toLong).getOrElse(1L << 22)
-
+  /** The shingle-side mate of [[PersistedIndex.idGate]]'s threshold,
+    * tighter because shingle rows are KBs where id rows are ~tens of
+    * bytes. */
   private def shingleBroadcastThreshold(spark: org.apache.spark.sql.SparkSession): Long =
     spark.conf.getOption("spark.graft.dedup.shingleBroadcastThreshold")
       .map(_.toLong).getOrElse(1L << 16)
@@ -591,7 +480,7 @@ object Dedup {
     * .dropNearDupsAgainstIndexBloom]]). The stamp makes the
     * build/query parameter contract checkable at operator
     * construction (`require`, loud) — essential here because the
-    * map-only bloom path has no scan-time hook for [[requireCfg]],
+    * map-only bloom path has no scan-time hook for [[PersistedIndex.requireCfg]],
     * and a silent mismatch would UNDER-drop (batch keys never match
     * ⇒ duplicates leak), the one direction the over-drop posture
     * cannot absorb. */
@@ -624,7 +513,7 @@ object Dedup {
     // treeAggregate honors the requested sizing at any key count; the
     // merge fan-in bounds per-step traffic to O(log partitions) filter
     // copies.
-    val keys = requireCfg(index, cfg)
+    val keys = PersistedIndex.requireCfg(index, cfg)
       .select("band_key").distinct().localCheckpoint()
     val n = math.max(keys.count(), 1L)
     // sizeForKeys pins the (numBits, numHashFunctions) geometry to an
@@ -811,12 +700,9 @@ object Dedup {
     * [[keyBloom]] mate): same geometry as `sizedLike`, mergeable via
     * [[mergeKeyBlooms]]. */
   def keyBloomDelta(delta: DataFrame, keyCol: String,
-                    sizedLike: BandKeyBloom): BandKeyBloom = {
-    val cols = Seq(col(keyCol).as("band_key")) ++
-      (if (delta.columns.contains("cfg")) Seq(col("cfg")) else Nil)
-    buildKeyBloom(delta.select(cols: _*), sizedLike.cfg, sizedLike.fpp,
-      sizeForKeys = Some(sizedLike.sizedForKeys))
-  }
+                    sizedLike: BandKeyBloom): BandKeyBloom =
+    keyBloom(delta, keyCol, sizedLike.cfg, sizedLike.fpp,
+      Some(sizedLike.sizedForKeys))
 
   /** Near-duplicate pairs of a NEW BATCH against an indexed corpus:
     * (id_batch, id_corpus, jaccard). Candidates come from the
@@ -850,22 +736,15 @@ object Dedup {
                            delta: Option[DataFrame] = None): DataFrame = {
     val spark = batch.sparkSession
     val cfg = minhashCfg(numHashes, bandSize, k, useMd5)
-    val bBands0 = bandKeysOf(batch, textCol, batchIdCol, "id_batch",
+    val bBands = bandKeysOf(batch, textCol, batchIdCol, "id_batch",
       numHashes, bandSize, k, useMd5)
-    // with a delta the band table feeds two joins: pin it so the
-    // signature pass over the batch text runs once
-    val bBands = if (delta.isDefined) bBands0.localCheckpoint() else bBands0
-    def candOf(ix: DataFrame) = requireCfg(ix, cfg)
-      .select(col("band_key"), col("id").as("id_corpus"))
-      .join(bBands, Seq("band_key"))
-      .select("id_batch", "id_corpus")
-    val cand = delta.fold(candOf(index))(d =>
-        candOf(index).unionByName(candOf(d)))
-      .distinct()
-      .localCheckpoint() // consumers: the count, the id prunes, the verify join
-    val nCand = cand.count()
-    def idHint(d: DataFrame) =
-      if (nCand <= idBroadcastThreshold(spark)) broadcast(d) else d
+    // consumers: the count, the id prunes, the verify join
+    val cand = PersistedIndex.idGate(
+      PersistedIndex.probe(bBands, index, delta, cfg) { (ix, b) =>
+        ix.select(col("band_key"), col("id").as("id_corpus"))
+          .join(b, Seq("band_key"))
+          .select("id_batch", "id_corpus")
+      })
     def shinglesOf(df: DataFrame, idCol: String, outId: String,
                    sh: String) =
       df.select(col(idCol).as(outId),
@@ -876,20 +755,20 @@ object Dedup {
     // broadcasts and the corpus scan streams past non-candidates
     // without shuffling
     val corpusCand = corpus.join(
-      idHint(cand.select(col("id_corpus").as(corpusIdCol)).distinct()),
+      cand.hint(cand.pinned.select(col("id_corpus").as(corpusIdCol)).distinct()),
       Seq(corpusIdCol), "left_semi")
     // the batch shingle table broadcasts only under the (tighter)
     // shingle gate, and then only the candidate-pruned slice of it;
     // over the gate the verify is a plain join AQE plans
     val batchSh =
-      if (nCand <= shingleBroadcastThreshold(spark))
+      if (cand.rows <= shingleBroadcastThreshold(spark))
         broadcast(shinglesOf(
           batch.join(
-            broadcast(cand.select(col("id_batch").as(batchIdCol)).distinct()),
+            broadcast(cand.pinned.select(col("id_batch").as(batchIdCol)).distinct()),
             Seq(batchIdCol), "left_semi"),
           batchIdCol, "id_batch", "sh_b"))
       else shinglesOf(batch, batchIdCol, "id_batch", "sh_b")
-    cand
+    cand.pinned
       .join(batchSh, Seq("id_batch"))
       .join(shinglesOf(corpusCand, corpusIdCol, "id_corpus", "sh_c"),
         Seq("id_corpus"))
@@ -911,16 +790,11 @@ object Dedup {
                                bandSize: Int = 1, k: Int = 3,
                                useMd5: Boolean = false,
                                delta: Option[DataFrame] = None): DataFrame = {
-    val dup = nearDupsAgainstIndex(batch, corpus, index, textCol,
-      batchIdCol, corpusIdCol, threshold, numHashes, bandSize, k, useMd5,
-      delta)
-      .select(col("id_batch").as(batchIdCol)).distinct()
-      .localCheckpoint()
-    val hinted =
-      if (dup.count() <= idBroadcastThreshold(batch.sparkSession))
-        broadcast(dup)
-      else dup
-    batch.join(hinted, Seq(batchIdCol), "left_anti")
+    val dup = PersistedIndex.idGate(nearDupsAgainstIndex(batch, corpus,
+      index, textCol, batchIdCol, corpusIdCol, threshold, numHashes,
+      bandSize, k, useMd5, delta)
+      .select(col("id_batch").as(batchIdCol)).distinct())
+    batch.join(dup.hinted, Seq(batchIdCol), "left_anti")
   }
 
   /** Connected components by iterative min-label propagation WITH
@@ -1325,15 +1199,28 @@ object Dedup {
     * [[bandKeyExpr]] discipline applied to the hamming family). */
   private[graft] def hammingBandKeyCols(sig: Column, sigBits: Int,
                                         maxHamming: Int): Seq[Column] = {
-    val nBands = maxHamming + 1
     val cfg = hammingCfg(sigBits, maxHamming)
+    hammingLanes(sig, sigBits, maxHamming).zipWithIndex.map {
+      case (lane, b) => bandKeyExpr(cfg, lit(b), Seq(lane))
+    }
+  }
+
+  /** The maxHamming+1 disjoint pigeonhole bit bands of a signature. */
+  private def hammingLanes(sig: Column, sigBits: Int,
+                           maxHamming: Int): Seq[Column] = {
+    val nBands = maxHamming + 1
     (0 until nBands).map { b =>
       val lo = b * sigBits / nBands
       val hi = (b + 1) * sigBits / nBands
       val mask = if (hi - lo == 64) -1L else (1L << (hi - lo)) - 1
-      bandKeyExpr(cfg, lit(b),
-        Seq(shiftright(sig, lo).bitwiseAND(lit(mask))))
+      shiftright(sig, lo).bitwiseAND(lit(mask))
     }
+  }
+
+  private def requireHamming(sigBits: Int, maxHamming: Int): Unit = {
+    require(maxHamming >= 0 && maxHamming < sigBits,
+      s"maxHamming in [0, $sigBits)")
+    require(sigBits >= 1 && sigBits <= 64, "sigBits in [1, 64]")
   }
 
   private def hammingBandKeys(sig: DataFrame, outId: String,
@@ -1356,7 +1243,7 @@ object Dedup {
     * (the [[bandIndex]] rationale). CONTRACT: sigBits/maxHamming must
     * match between build and query — bands are positional, the config
     * stamp is folded into every key (mismatch ⇒ deterministically zero
-    * candidates) and the `cfg` column makes it loud ([[requireCfg]]).
+    * candidates) and the `cfg` column makes it loud ([[PersistedIndex.requireCfg]]).
     * This matters doubly here because ONE table shape serves the whole
     * multimodal family (SimHash text, image dHash, audio envelope,
     * video frames): two configs can no longer share a table
@@ -1367,20 +1254,9 @@ object Dedup {
     * on the returned frame — see [[bandIndex]] (r21 ADVICE). */
   def hammingBandIndex(sig: DataFrame, sigBits: Int, maxHamming: Int,
                        maxBucket: Int = 100000): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < sigBits,
-      s"maxHamming in [0, $sigBits)")
-    require(sigBits >= 1 && sigBits <= 64, "sigBits in [1, 64]")
-    // pinned once — the [[bandIndex]] two-consumer rationale (r21);
-    // here the re-computed subtree is the caller's whole signature
-    // derivation (SimHash text kernel / media decode), doubled
-    val bands = hammingBandKeys(sig, "id", "sig", sigBits, maxHamming)
-      .localCheckpoint()
-    val oversized = bands.groupBy("band_key")
-      .agg(count(lit(1)).as("__bucket_n"))
-      .filter(col("__bucket_n") > maxBucket)
-      .select("band_key")
-    bands.join(broadcast(oversized), Seq("band_key"), "left_anti")
-      .withColumn("cfg", lit(hammingCfg(sigBits, maxHamming)))
+    requireHamming(sigBits, maxHamming)
+    prunedBandIndex(hammingBandKeys(sig, "id", "sig", sigBits, maxHamming),
+      hammingCfg(sigBits, maxHamming), maxBucket)._1
   }
 
   /** Hamming mate of [[bandIndexDelta]]: a day's admitted survivors'
@@ -1388,25 +1264,10 @@ object Dedup {
     * re-prunes at combined grain). Input convention (__id, __sig). */
   def hammingBandIndexDelta(sig: DataFrame, sigBits: Int,
                             maxHamming: Int): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < sigBits,
-      s"maxHamming in [0, $sigBits)")
-    require(sigBits >= 1 && sigBits <= 64, "sigBits in [1, 64]")
+    requireHamming(sigBits, maxHamming)
     hammingBandKeys(sig, "id", "sig", sigBits, maxHamming)
       .select(col("band_key"), col("id"), col("sig"),
         lit(hammingCfg(sigBits, maxHamming)).as("cfg"))
-  }
-
-  /** Append a day's survivors to the hamming delta side table (the
-    * [[appendBandIndexDelta]] economics; `prunedKeys` keeps
-    * build-pruned buckets pruned). */
-  def appendHammingBandIndexDelta(sig: DataFrame, deltaPath: String,
-                                  sigBits: Int, maxHamming: Int,
-                                  prunedKeys: Option[DataFrame] = None): Unit = {
-    val d0 = hammingBandIndexDelta(sig, sigBits, maxHamming)
-    val d = prunedKeys.fold(d0)(pk =>
-      d0.join(broadcast(pk.select("band_key")), Seq("band_key"),
-        "left_anti"))
-    d.write.mode(SaveMode.Append).parquet(deltaPath)
   }
 
   /** Persist [[hammingBandIndex]] bucketed on band_key (the
@@ -1419,27 +1280,11 @@ object Dedup {
                             maxBucket: Int = 100000,
                             path: Option[String] = None,
                             prunedPath: Option[String] = None): Unit = {
-    require(maxHamming >= 0 && maxHamming < sigBits,
-      s"maxHamming in [0, $sigBits)")
-    require(sigBits >= 1 && sigBits <= 64, "sigBits in [1, 64]")
-    // pinned once — the [[bandIndex]] two-consumer rationale (r21)
-    val bands = hammingBandKeys(sig, "id", "sig", sigBits, maxHamming)
-      .localCheckpoint()
-    val oversized = bands.groupBy("band_key")
-      .agg(count(lit(1)).as("__bucket_n"))
-      .filter(col("__bucket_n") > maxBucket)
-      .select("band_key")
-    val over = if (prunedPath.isDefined) oversized.localCheckpoint()
-               else oversized
-    val idx = bands.join(broadcast(over), Seq("band_key"), "left_anti")
-      .withColumn("cfg", lit(hammingCfg(sigBits, maxHamming)))
-    graft.api.Layout.writeBucketed(idx, table, Seq("band_key"), buckets,
-      path = path)
-    prunedPath.foreach(p =>
-      over.write.mode(SaveMode.Overwrite).parquet(p))
-    // release the corpus-sized pin — see writeBandIndex (r21 review)
-    graft.api.Caches.release(idx)
-    graft.api.Caches.release(over)
+    requireHamming(sigBits, maxHamming)
+    writePrunedBandIndex(
+      hammingBandKeys(sig, "id", "sig", sigBits, maxHamming),
+      hammingCfg(sigBits, maxHamming), maxBucket, table, buckets, path,
+      prunedPath)
   }
 
   /** Near-duplicate pairs of a NEW BATCH of signatures against an
@@ -1456,22 +1301,18 @@ object Dedup {
   def hammingNearDupsAgainstIndex(batchSig: DataFrame, index: DataFrame,
                                   sigBits: Int, maxHamming: Int,
                                   delta: Option[DataFrame] = None): DataFrame = {
-    val cfg = hammingCfg(sigBits, maxHamming)
-    val b0 = hammingBandKeys(batchSig, "id_batch", "__bsig",
+    val batchBands = hammingBandKeys(batchSig, "id_batch", "__bsig",
       sigBits, maxHamming)
-    // with a delta the batch band table feeds two joins: pin it so the
-    // signature/banding pass runs once
-    val b = if (delta.isDefined) b0.localCheckpoint() else b0
-    def pairsOf(ix: DataFrame) = requireCfg(ix, cfg)
-      .select(col("band_key"), col("id").as("id_corpus"),
-        col("sig").as("__csig"))
-      .join(b, Seq("band_key"))
-      .withColumn("hamming_dist",
-        hamming(col("__bsig"), col("__csig")).cast("long"))
-      .filter(col("hamming_dist") <= maxHamming)
-      .select("id_batch", "id_corpus", "hamming_dist")
-    delta.fold(pairsOf(index))(d => pairsOf(index).unionByName(pairsOf(d)))
-      .distinct()
+    PersistedIndex.probe(batchBands, index, delta,
+      hammingCfg(sigBits, maxHamming)) { (ix, b) =>
+      ix.select(col("band_key"), col("id").as("id_corpus"),
+          col("sig").as("__csig"))
+        .join(b, Seq("band_key"))
+        .withColumn("hamming_dist",
+          hamming(col("__bsig"), col("__csig")).cast("long"))
+        .filter(col("hamming_dist") <= maxHamming)
+        .select("id_batch", "id_corpus", "hamming_dist")
+    }
   }
 
   /** Pigeonhole hamming near-dup join over any ≤64-bit signature
@@ -1483,16 +1324,7 @@ object Dedup {
     * fingerprint pairs; input must be (__id, __sig). */
   def hammingNearDupPairs(sig: DataFrame, sigBits: Int, maxHamming: Int,
                           maxBucket: Int = 100000): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < sigBits,
-      s"maxHamming in [0, $sigBits)")
-    require(sigBits >= 1 && sigBits <= 64, "sigBits in [1, 64]")
-    val nBands = maxHamming + 1
-    val bandExprs = (0 until nBands).map { b =>
-      val lo = b * sigBits / nBands
-      val hi = (b + 1) * sigBits / nBands
-      val mask = if (hi - lo == 64) -1L else (1L << (hi - lo)) - 1
-      shiftright(col("__sig"), lo).bitwiseAND(lit(mask))
-    }
+    requireHamming(sigBits, maxHamming)
     // Pin the band table ONCE (r21; plan-verified before the change:
     // THREE full re-computations of the caller's signature subtree —
     // the oversized-bucket broadcast and BOTH self-join sides each
@@ -1501,15 +1333,12 @@ object Dedup {
     // content it derives from — the lshCandidates economics, not the
     // lshNearDupPairs vector-payload case.
     val bands = sig.select(col("__id"), col("__sig"),
-      posexplode(array(bandExprs: _*)))
+      posexplode(array(hammingLanes(col("__sig"), sigBits, maxHamming): _*)))
       .withColumnRenamed("pos", "__band")
       .withColumnRenamed("col", "__bkey")
       .localCheckpoint()
-    val oversized = bands.groupBy("__band", "__bkey")
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > maxBucket).select("__band", "__bkey")
-    val pruned = bands.join(broadcast(oversized),
-      Seq("__band", "__bkey"), "left_anti")
+    val pruned = PersistedIndex.prune(bands, Seq("__band", "__bkey"),
+      maxBucket)
     val a = pruned.select(col("__band"), col("__bkey"),
       col("__id").as("id_a"), col("__sig").as("sig_a"))
     val b = pruned.select(col("__band"), col("__bkey"),

@@ -251,7 +251,7 @@ object Similarity {
     * query assigned against DIFFERENT centroids lands in different
     * cells, so the stamp turns a stale-quantizer mistake from silent
     * wrong-cell candidates into a loud scan-time error
-    * ([[graft.ops.Dedup.requireCfg]]) — the
+    * ([[PersistedIndex.requireCfg]]) — the
     * [[graft.ops.Dedup.minhashCfg]] discipline where the "parameters"
     * are learned, not literal. Centroids are k-bounded by contract
     * (they broadcast in every assignment), so the collect here is the
@@ -328,9 +328,16 @@ object Similarity {
                              vecCol: String, centroids: DataFrame,
                              table: String, buckets: Int,
                              path: Option[String] = None,
-                             maxCell: Long = 4000000L): Unit = {
-    val idx = semanticCellIndex(corpus, idCol, vecCol, centroids)
-    auditCells(idx, maxCell, "writeSemanticCellIndex")
+                             maxCell: Long = 4000000L): Unit =
+    writeCells(semanticCellIndex(corpus, idCol, vecCol, centroids),
+      maxCell, "writeSemanticCellIndex", table, buckets, path)
+
+  /** Audit a cell index ([[auditCells]]), then persist it bucketed on
+    * cid — both tiers' write. */
+  private def writeCells(idx: DataFrame, maxCell: Long, what: String,
+                         table: String, buckets: Int,
+                         path: Option[String]): Unit = {
+    auditCells(idx, maxCell, what)
     graft.api.Layout.writeBucketed(idx, table, Seq("cid"), buckets,
       path = path)
   }
@@ -345,10 +352,10 @@ object Similarity {
                              centroids: DataFrame): DataFrame =
     semanticCellIndex(survivors, idCol, vecCol, centroids)
 
-  /** Fold a delta into a NEW bucketed index version (in-place refused —
-    * the [[graft.ops.Dedup.compactBandIndex]] rationale); a
-    * cross-quantizer delta is refused loudly via the cfg stamp, and
-    * the combined cell histogram is re-audited ([[auditCells]]) —
+  /** Fold a delta into a NEW bucketed index version through
+    * [[PersistedIndex.compact]] (in place refused; a cross-quantizer
+    * delta refused loudly via the cfg stamp). The cell rule: the
+    * combined cell histogram is re-audited ([[auditCells]]) —
     * deltas grow cells, so compaction is where a slowly-collapsing
     * quantizer gets caught. Column-generic on everything but `cid` and
     * `cfg`, so it also compacts the PQ-coded index
@@ -360,25 +367,13 @@ object Similarity {
                                indexTable: String, delta: DataFrame,
                                outTable: String, buckets: Int,
                                path: Option[String] = None,
-                               maxCell: Long = 4000000L): Unit = {
-    require(outTable != indexTable,
-      "compactSemanticCellIndex writes a NEW table version: Spark " +
-        "cannot overwrite a table it is reading from — compact to a " +
-        "new name and cut readers over")
-    val index = graft.api.Layout.table(spark, indexTable)
-    val deltaCfgd =
-      index.select("cfg").limit(1).collect().headOption match {
-        case Some(r) if !r.isNullAt(0) =>
-          Dedup.requireCfg(delta, r.getString(0))
-        case _ => delta
-      }
-    val unioned = index.unionByName(
-      deltaCfgd.select(index.columns.map(col): _*)
-        .dropDuplicates("cid", "id"))
-    auditCells(unioned, maxCell, "compactSemanticCellIndex")
-    graft.api.Layout.writeBucketed(unioned, outTable, Seq("cid"),
-      buckets, path = path)
-  }
+                               maxCell: Long = 4000000L): Unit =
+    PersistedIndex.compact(spark, "compactSemanticCellIndex", indexTable,
+      delta, outTable, buckets, path, "cid",
+      dedupOn = Seq("cid", "id")) { unioned =>
+      auditCells(unioned, maxCell, "compactSemanticCellIndex")
+      (unioned, ())
+    }
 
   /** Near-duplicate pairs of a NEW BATCH of embeddings against the
     * indexed corpus: (cid, id_batch, id_corpus, sim), cosine ≥
@@ -409,20 +404,18 @@ object Similarity {
     val e = batch.select(col(idCol).as("__id"),
         asDouble(col(vecCol)).as("__v"))
       .withColumn("__n", norm(col("__v")))
-    val b0 = nearestCentroids(e, "__id", centroids, queryProbes)
+    val assigned = nearestCentroids(e, "__id", centroids, queryProbes)
       .select(col("cid"), col("__id").as("id_batch"),
         col("__v").as("__vb"), col("__n").as("__nb"))
-    val b = if (delta.isDefined) b0.localCheckpoint() else b0
-    def pairsOf(ix: DataFrame) = Dedup.requireCfg(ix, cfg)
-      .select(col("cid"), col("id").as("id_corpus"),
-        col("v").as("__vc"), col("n").as("__nc"))
-      .join(b, Seq("cid"))
-      .withColumn("sim",
-        cosinePrenormed(col("__vb"), col("__vc"), col("__nb"), col("__nc")))
-      .filter(col("sim") >= threshold)
-      .select("cid", "id_batch", "id_corpus", "sim")
-    delta.fold(pairsOf(index))(d => pairsOf(index).unionByName(pairsOf(d)))
-      .distinct()
+    PersistedIndex.probe(assigned, index, delta, cfg) { (ix, b) =>
+      ix.select(col("cid"), col("id").as("id_corpus"),
+          col("v").as("__vc"), col("n").as("__nc"))
+        .join(b, Seq("cid"))
+        .withColumn("sim",
+          cosinePrenormed(col("__vb"), col("__vc"), col("__nb"), col("__nc")))
+        .filter(col("sim") >= threshold)
+        .select("cid", "id_batch", "id_corpus", "sim")
+    }
   }
 
   /** The centroid table as a literal row-major matrix (cids, matrix,
@@ -481,18 +474,14 @@ object Similarity {
       .withColumn("__n", norm(col("__v")))
       .withColumn("__cid",
         VectorExprs.nearestCentroid(col("__v"), cids, matrix, dims))
-    def anti(d: DataFrame, ix: DataFrame) = {
-      val i = Dedup.requireCfg(ix, cfg)
-        .select(col("cid").as("__icid"), col("v").as("__cv"),
-          col("n").as("__cn"))
-      d.join(i,
+    PersistedIndex.antiAll(assigned, index, delta, cfg) { (d, ix) =>
+      d.join(ix.select(col("cid").as("__icid"), col("v").as("__cv"),
+          col("n").as("__cn")),
         col("__cid") === col("__icid") &&
           cosinePrenormed(col("__v"), col("__cv"),
             col("__n"), col("__cn")) >= threshold,
         "left_anti")
-    }
-    delta.fold(anti(assigned, index))(dl => anti(anti(assigned, index), dl))
-      .drop(staging: _*)
+    }.drop(staging: _*)
   }
 
   /** Stateless PQ drop-against-index PLAN — the streaming mirror's
@@ -540,20 +529,15 @@ object Similarity {
         VectorExprs.nearestCentroid(col("__v"), cids, matrix, dims))
       .withColumn("__lut",
         VectorExprs.pqLut(col("__v"), cb, m, codesPerSub, subDim))
-    def anti(d: DataFrame, ix: DataFrame) = {
-      val i = graft.ops.Dedup.requireCfg(ix, cfg)
-        .select(col("cid").as("__icid"), col("codes").as("__codes"),
-          col("n").as("__cn"), col("err").as("__cerr"))
-      d.join(i,
+    PersistedIndex.antiAll(assigned, indexPq, delta, cfg) { (d, ix) =>
+      d.join(ix.select(col("cid").as("__icid"), col("codes").as("__codes"),
+          col("n").as("__cn"), col("err").as("__cerr")),
         col("__cid") === col("__icid") && col("__n") > 0 &&
           VectorExprs.pqAdc(col("__codes"), col("__lut"), codesPerSub) /
             (col("__n") * col("__cn")) >=
             lit(threshold) - col("__cerr") - lit(margin),
         "left_anti")
-    }
-    delta.fold(anti(assigned, indexPq))(dl =>
-      anti(anti(assigned, indexPq), dl))
-      .drop(staging: _*)
+    }.drop(staging: _*)
   }
 
   /** Survivor selection for the incremental semantic path (corpus
@@ -564,15 +548,10 @@ object Similarity {
                                centroids: DataFrame, threshold: Double,
                                delta: Option[DataFrame] = None,
                                queryProbes: Int = 1): DataFrame = {
-    val dup = semanticNearDupsAgainstIndex(batch, idCol, vecCol, index,
-      centroids, threshold, delta, queryProbes)
-      .select(col("id_batch").as(idCol)).distinct()
-      .localCheckpoint()
-    val thresholdRows = batch.sparkSession.conf
-      .getOption("spark.graft.dedup.idBroadcastThreshold")
-      .map(_.toLong).getOrElse(1L << 22)
-    val hinted = if (dup.count() <= thresholdRows) broadcast(dup) else dup
-    batch.join(hinted, Seq(idCol), "left_anti")
+    val dup = PersistedIndex.idGate(semanticNearDupsAgainstIndex(batch,
+      idCol, vecCol, index, centroids, threshold, delta, queryProbes)
+      .select(col("id_batch").as(idCol)).distinct())
+    batch.join(dup.hinted, Seq(idCol), "left_anti")
   }
 
   // -------------------------------------------------------------------
@@ -614,7 +593,7 @@ object Similarity {
     * fingerprint ([[centroidCfg]]) folded with an md5 of the flat
     * codebook and its geometry — a stale CODEBOOK mis-scores every
     * candidate just as silently as a stale quantizer mis-cells it, so
-    * both throw at scan time via [[graft.ops.Dedup.requireCfg]]. */
+    * both throw at scan time via [[PersistedIndex.requireCfg]]. */
   def pqCellCfg(centroids: DataFrame, cb: Array[Double], m: Int,
                 codesPerSub: Int): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -680,13 +659,10 @@ object Similarity {
                                cb: Array[Double], m: Int, codesPerSub: Int,
                                table: String, buckets: Int,
                                path: Option[String] = None,
-                               maxCell: Long = 4000000L): Unit = {
-    val idx = semanticCellIndexPq(corpus, idCol, vecCol, centroids, cb,
-      m, codesPerSub)
-    auditCells(idx, maxCell, "writeSemanticCellIndexPq")
-    graft.api.Layout.writeBucketed(idx, table, Seq("cid"), buckets,
-      path = path)
-  }
+                               maxCell: Long = 4000000L): Unit =
+    writeCells(semanticCellIndexPq(corpus, idCol, vecCol, centroids, cb,
+      m, codesPerSub), maxCell, "writeSemanticCellIndexPq", table, buckets,
+      path)
 
   /** Admitted-survivors DELTA for the PQ index (fold back with
     * [[compactSemanticCellIndex]] — it is column-generic, so the same
@@ -777,12 +753,11 @@ object Similarity {
     val e = batch.select(col(idCol).as("__id"),
         asDouble(col(vecCol)).as("__v"))
       .withColumn("__n", norm(col("__v")))
-    val b0 = nearestCentroids(e, "__id", centroids, queryProbes)
+    val assigned = nearestCentroids(e, "__id", centroids, queryProbes)
       .select(col("cid"), col("__id").as("id_batch"),
         col("__v").as("__vb"), col("__n").as("__nb"),
         VectorExprs.pqLut(col("__v"), cb, m, codesPerSub, subDim)
           .as("__lut"))
-    val b = if (delta.isDefined) b0.localCheckpoint() else b0
     // the screen emits ID TRIPLES ONLY (r22, guide §2.3/§8): the batch
     // VECTOR (__vb — dims doubles) used to ride every candidate row
     // through the distinct's exchange, multiplying its bytes by
@@ -790,32 +765,21 @@ object Similarity {
     // payload is re-attached exactly once below (measured at sf0.1:
     // q_incremental_semantic_pq shuffle write 26.9 MB → the candidate
     // exchange now carries ~28 B/row)
-    def screen(ix: DataFrame) = graft.ops.Dedup.requireCfg(ix, cfg)
-      .select(col("cid"), col("id").as("id_corpus"),
-        col("codes").as("__codes"), col("n").as("__nc0"),
-        col("err").as("__errc"))
-      .join(b, Seq("cid"))
-      .filter(col("__nb") > 0 &&
-        VectorExprs.pqAdc(col("__codes"), col("__lut"), codesPerSub) /
-          (col("__nb") * col("__nc0")) >=
-          lit(threshold) - col("__errc") - lit(margin))
-      .select(col("cid"), col("id_batch"), col("id_corpus"))
-    val cand = delta.fold(screen(indexPq))(d =>
-      screen(indexPq).unionByName(screen(d)))
-      .distinct()
-      .localCheckpoint() // two consumers: the id pull + the pair join
-    val candIds = cand.select("id_corpus").distinct()
-    val thresholdRows = batch.sparkSession.conf
-      .getOption("spark.graft.dedup.idBroadcastThreshold")
-      .map(_.toLong).getOrElse(1L << 22)
-    val pinnedIds = candIds.localCheckpoint()
-    val nCandIds = pinnedIds.count()
-    val hinted =
-      if (nCandIds <= thresholdRows) broadcast(pinnedIds)
-      else pinnedIds
+    val cand = PersistedIndex.probe(assigned, indexPq, delta, cfg) { (ix, b) =>
+      ix.select(col("cid"), col("id").as("id_corpus"),
+          col("codes").as("__codes"), col("n").as("__nc0"),
+          col("err").as("__errc"))
+        .join(b, Seq("cid"))
+        .filter(col("__nb") > 0 &&
+          VectorExprs.pqAdc(col("__codes"), col("__lut"), codesPerSub) /
+            (col("__nb") * col("__nc0")) >=
+            lit(threshold) - col("__errc") - lit(margin))
+        .select(col("cid"), col("id_batch"), col("id_corpus"))
+    }.localCheckpoint() // two consumers: the id pull + the pair join
+    val candIds = PersistedIndex.idGate(cand.select("id_corpus").distinct())
     val sliver = vectors
       .select(col(vIdCol).as("id_corpus"), asDouble(col(vVecCol)).as("__vc"))
-      .join(hinted, Seq("id_corpus"))
+      .join(candIds.hinted, Seq("id_corpus"))
       .withColumn("__nc", norm(col("__vc")))
     // batch vectors re-attached ONCE for the exact verify — a map-only
     // derivation off the batch (never the index), always pruned to the
@@ -828,7 +792,7 @@ object Similarity {
       col("__v").as("__vb"), col("__n").as("__nb"))
     val batchIds = cand.select("id_batch").distinct()
     val bVecs =
-      if (nCandIds <= thresholdRows)
+      if (candIds.under)
         broadcast(bVecs0.join(broadcast(batchIds), Seq("id_batch"),
           "left_semi"))
       else bVecs0.join(batchIds, Seq("id_batch"), "left_semi")
@@ -861,16 +825,11 @@ object Similarity {
                                  delta: Option[DataFrame] = None,
                                  queryProbes: Int = 1)
     : DataFrame = {
-    val dup = semanticNearDupsAgainstIndexPq(batch, idCol, vecCol,
-      indexPq, vectors, vIdCol, vVecCol, centroids, cb, m, codesPerSub,
-      threshold, margin, delta, queryProbes)
-      .select(col("id_batch").as(idCol)).distinct()
-      .localCheckpoint()
-    val thresholdRows = batch.sparkSession.conf
-      .getOption("spark.graft.dedup.idBroadcastThreshold")
-      .map(_.toLong).getOrElse(1L << 22)
-    val hinted = if (dup.count() <= thresholdRows) broadcast(dup) else dup
-    batch.join(hinted, Seq(idCol), "left_anti")
+    val dup = PersistedIndex.idGate(semanticNearDupsAgainstIndexPq(batch,
+      idCol, vecCol, indexPq, vectors, vIdCol, vVecCol, centroids, cb, m,
+      codesPerSub, threshold, margin, delta, queryProbes)
+      .select(col("id_batch").as(idCol)).distinct())
+    batch.join(dup.hinted, Seq(idCol), "left_anti")
   }
 
   /** ANN SERVING against the PERSISTED PQ cell index — [[ivfPqTopK]]'s
@@ -904,7 +863,7 @@ object Similarity {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id")
       .orderBy(round(col("sim"), 6).desc, col("neighbor_id").asc)
-    graft.ops.Dedup.requireCfg(indexPq, cfg)
+    PersistedIndex.requireCfg(indexPq, cfg)
       .select(col("cid"), col("id").as("neighbor_id"),
         col("codes").as("__codes"))
       .join(broadcast(probes), Seq("cid"))
@@ -941,15 +900,11 @@ object Similarity {
       centroids, cb, m, codesPerSub, topK * refineFactor, nProbe)
       .select("query_id", "neighbor_id")
       .localCheckpoint() // two consumers: the id pull + the refine join
-    val thresholdRows = queries.sparkSession.conf
-      .getOption("spark.graft.dedup.idBroadcastThreshold")
-      .map(_.toLong).getOrElse(1L << 22)
-    val ids = shortlist.select("neighbor_id").distinct().localCheckpoint()
-    val hinted = if (ids.count() <= thresholdRows) broadcast(ids) else ids
+    val ids = PersistedIndex.idGate(shortlist.select("neighbor_id").distinct())
     val sliver = vectors
       .select(col(vIdCol).as("neighbor_id"),
         asDouble(col(vVecCol)).as("__cv"))
-      .join(hinted, Seq("neighbor_id"))
+      .join(ids.hinted, Seq("neighbor_id"))
       .withColumn("__cn", norm(col("__cv")))
     val q = queries.select(col(idCol).as("query_id"),
         asDouble(col(vecCol)).as("__qv"))

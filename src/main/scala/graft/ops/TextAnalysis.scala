@@ -41,17 +41,6 @@ object TextAnalysis {
     length(punct).cast("double") / greatest(length(nonWs), lit(1)).cast("double")
   }
 
-  def digitRatio(text: Column): Column = {
-    val nonWs = regexp_replace(lower(text), "\\s+", "")
-    val digits = regexp_replace(nonWs, "[^0-9]", "")
-    length(digits).cast("double") / greatest(length(nonWs), lit(1)).cast("double")
-  }
-
-  /** Mean token length (chars) over whitespace tokens. */
-  def avgTokenLength(text: Column): Column =
-    length(regexp_replace(trim(text), "\\s+", "")).cast("double") /
-      greatest(tokenCount(text), lit(1)).cast("double")
-
   /** Composite quality score in [0,1]: length saturation + low-stopword
     * + low-punctuation. Deterministic heuristic in the C4/Gopher-rule
     * style (thresholded length/punct/stopword features).

@@ -900,11 +900,13 @@ object Web {
                     scoreCol: String): DataFrame =
     urlIndex(admitted, urlCol, idCol, scoreCol)
 
+  /** Append [[urlIndexDelta]] rows to the delta side table
+    * ([[PersistedIndex.appendDelta]]). */
   def appendUrlIndexDelta(admitted: DataFrame, urlCol: String,
                           idCol: String, scoreCol: String,
                           deltaPath: String): Unit =
-    urlIndexDelta(admitted, urlCol, idCol, scoreCol)
-      .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(deltaPath)
+    PersistedIndex.appendDelta(urlIndexDelta(admitted, urlCol, idCol,
+      scoreCol), deltaPath)
 
   /** Batch rows whose canonical URL is NOT in the index (∪ `delta`):
     * the daily-crawl admission filter. Two left-anti equi-joins — the
@@ -923,18 +925,18 @@ object Web {
     require(!batch.columns.contains("__url_key"),
       "staging column '__url_key' already exists in the batch")
     val keyed = batch.withColumn("__url_key", canonicalUrl(col(urlCol)))
-    def anti(df: DataFrame, ix: DataFrame) =
-      df.join(Dedup.requireCfg(ix, UrlCfg)
-        .select(col("url_key").as("__url_key")), Seq("__url_key"),
+    PersistedIndex.antiAll(keyed, index, delta, UrlCfg) { (df, ix) =>
+      df.join(ix.select(col("url_key").as("__url_key")), Seq("__url_key"),
         "left_anti")
-    delta.fold(anti(keyed, index))(d => anti(anti(keyed, index), d))
-      .drop("__url_key")
+    }.drop("__url_key")
   }
 
-  /** Fold the delta back into a NEW bucketed layout version (never in
-    * place — readers keep the old version until cutover). Exact
-    * duplicate rows (a re-run append) collapse at the full-row grain,
-    * matching a rebuild. A url_key still duplicated AFTER that —
+  /** Fold the delta back into a NEW bucketed layout version through
+    * [[PersistedIndex.compact]] (never in place — readers keep the old
+    * version until cutover; index and delta must carry [[UrlCfg]]).
+    * Exact duplicate rows (a re-run append) collapse at the full-row
+    * grain, matching a rebuild. The URL rule: a url_key still
+    * duplicated AFTER that —
     * possible only when admission skipped the anti-join or replayed a
     * batch with a different id — is REFUSED loudly with the key in
     * the message: the index stores no scores, so the compactor cannot
@@ -943,25 +945,18 @@ object Web {
   def compactUrlIndex(spark: org.apache.spark.sql.SparkSession,
                       indexTable: String, delta: DataFrame,
                       outTable: String, buckets: Int,
-                      path: Option[String] = None): Unit = {
-    require(outTable != indexTable,
-      "compactUrlIndex writes a NEW table version — compact to a new " +
-        "name and cut readers over")
-    val index = Dedup.requireCfg(
-      graft.api.Layout.table(spark, indexTable), UrlCfg)
-    val deltaClean = Dedup.requireCfg(delta, UrlCfg)
-      .select(index.columns.map(col): _*).dropDuplicates()
-    val unioned = index.unionByName(deltaClean)
-    val dup = unioned.groupBy("url_key").agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > 1).limit(1).collect()
-    require(dup.isEmpty,
-      s"url_key '${dup.headOption.map(_.getString(0)).getOrElse("")}' has " +
-        "multiple ids across index ∪ delta — admission must anti-join " +
-        "against the index (dropUrlsAgainstIndex) before appending a " +
-        "delta; rebuild the index from the corpus to resolve")
-    graft.api.Layout.writeBucketed(unioned, outTable, Seq("url_key"),
-      buckets, path = path)
-  }
+                      path: Option[String] = None): Unit =
+    PersistedIndex.compact(spark, "compactUrlIndex", indexTable, delta,
+      outTable, buckets, path, "url_key", stamp = Some(UrlCfg)) { unioned =>
+      val dup = unioned.groupBy("url_key").agg(count(lit(1)).as("__n"))
+        .filter(col("__n") > 1).limit(1).collect()
+      require(dup.isEmpty,
+        s"url_key '${dup.headOption.map(_.getString(0)).getOrElse("")}' has " +
+          "multiple ids across index ∪ delta — admission must anti-join " +
+          "against the index (dropUrlsAgainstIndex) before appending a " +
+          "delta; rebuild the index from the corpus to resolve")
+      (unioned, ())
+    }
 
   /** Domain-graph PageRank — the Common-Crawl-style authority signal
     * (FineWeb/RefinedWeb pipelines rank registered domains by link
@@ -1242,10 +1237,7 @@ object Web {
     * absorbable direction. Zero joins, zero state, zero per-trigger
     * index scans. */
   def dropUrlsAgainstBloom(df: DataFrame, urlCol: String,
-                           bloom: Dedup.BandKeyBloom): DataFrame = {
-    require(bloom.cfg == UrlCfg,
-      s"bloom built under cfg '${bloom.cfg}', expected '$UrlCfg'")
-    val contains = Dedup.bloomKeyFilter(df.sparkSession, bloom)
-    df.filter(!contains(canonicalUrl(col(urlCol))))
-  }
+                           bloom: Dedup.BandKeyBloom): DataFrame =
+    PersistedIndex.dropKeyHits(df, Seq(canonicalUrl(col(urlCol))), UrlCfg,
+      Right(bloom))
 }

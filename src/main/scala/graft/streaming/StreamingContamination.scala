@@ -42,13 +42,6 @@ import org.apache.spark.sql.functions._
   */
 object StreamingContamination {
 
-  /** Emit only stream rows whose normalized fingerprint appears in the
-    * static benchmark — stateless stream-static left_semi broadcast
-    * join, the streaming mirror of [[Selection.contaminated]]. */
-  def contaminatedExact(stream: DataFrame, benchmark: DataFrame,
-                        textCol: String): DataFrame =
-    Selection.contaminated(stream, benchmark, textCol)
-
   /** Drop stream rows whose normalized fingerprint appears in the
     * static benchmark — stateless stream-static left_anti broadcast
     * join, the streaming mirror of [[Selection.decontaminate]]. */

@@ -137,41 +137,26 @@ object StreamingDedup {
                                textCol: String,
                                numHashes: Int = 6, bandSize: Int = 1,
                                k: Int = 3,
-                               useMd5: Boolean = false): DataFrame = {
+                               useMd5: Boolean = false): DataFrame =
+    minhashKeyHits(stream, Left(index), textCol, numHashes, bandSize, k,
+      useMd5)
+
+  /** The MinHash mirrors' key derivation: the stream's signature lanes,
+    * banded under the index's stamp ([[graft.ops.Dedup.bandKeyExpr]] —
+    * bit-identical to the batch build), dropped on any key hit. */
+  private def minhashKeyHits(stream: DataFrame,
+                             lookup: Either[DataFrame, graft.ops.Dedup.BandKeyBloom],
+                             textCol: String, numHashes: Int, bandSize: Int,
+                             k: Int, useMd5: Boolean): DataFrame = {
     require(numHashes % bandSize == 0, "bandSize must divide numHashes")
-    val nBands = numHashes / bandSize
-    // the distinct key set is pinned ONCE at operator construction
-    // (localCheckpoint): a bare static frame re-evaluates per
-    // micro-batch, which would re-scan + re-shuffle the corpus-sized
-    // index on every trigger × nBands joins. The distinct itself is
-    // also load-bearing: a multi-member bucket would fan a matching
-    // stream row out per member INTO the next band join
-    // (multiplicative across bands) — with unique keys each lookup
-    // yields at most one row per stream row. Key blocks are compact
-    // (one 32-byte hash per distinct band key) and release with the
-    // frame ([[graft.api.Caches.release]]).
     val cfg = graft.ops.Dedup.minhashCfg(numHashes, bandSize, k, useMd5)
-    val keys = graft.ops.Dedup.requireCfg(index, cfg)
-      .select("band_key").distinct().localCheckpoint()
     val sig = graft.ops.Dedup.withMinhashSignature(
       stream, textCol, numHashes, k, useMd5)
-    val keyed = (0 until nBands).foldLeft(sig) { (d, b) =>
-      d.withColumn(s"__bk$b",
-        graft.ops.Dedup.bandKeyExpr(cfg, lit(b), (0 until bandSize).map(j =>
-          col(s"mh${b * bandSize + j}"))))
-    }
-    val joined = (0 until nBands).foldLeft(keyed) { (d, b) =>
-      d.join(
-        keys.select(col("band_key").as(s"__bk$b"))
-          .withColumn(s"__hit$b", lit(1)),
-        Seq(s"__bk$b"), "left_outer")
-    }
-    val survives = (0 until nBands)
-      .map(b => col(s"__hit$b").isNull).reduce(_ && _)
-    joined.filter(survives)
-      .drop((0 until nBands).flatMap(b =>
-        Seq(s"__bk$b", s"__hit$b")) ++
-        (0 until numHashes).map(h => s"mh$h"): _*)
+    val keyCols = (0 until numHashes / bandSize).map(b =>
+      graft.ops.Dedup.bandKeyExpr(cfg, lit(b), (0 until bandSize).map(j =>
+        col(s"mh${b * bandSize + j}"))))
+    graft.ops.PersistedIndex.dropKeyHits(sig, keyCols, cfg, lookup,
+      staged = (0 until numHashes).map(h => s"mh$h"))
   }
 
   /** [[dropNearDupsAgainstIndex]] at 100 TB corpus scale: the
@@ -201,24 +186,9 @@ object StreamingDedup {
                                     textCol: String,
                                     numHashes: Int = 6, bandSize: Int = 1,
                                     k: Int = 3,
-                                    useMd5: Boolean = false): DataFrame = {
-    require(numHashes % bandSize == 0, "bandSize must divide numHashes")
-    val cfg = graft.ops.Dedup.minhashCfg(numHashes, bandSize, k, useMd5)
-    require(bloom.cfg == cfg,
-      s"band-key bloom built for '${bloom.cfg}' but queried with '$cfg' " +
-        "— numHashes/bandSize/k/useMd5 must match the index the bloom " +
-        "was built from (a mismatch would silently drop NOTHING)")
-    val nBands = numHashes / bandSize
-    val sig = graft.ops.Dedup.withMinhashSignature(
-      stream, textCol, numHashes, k, useMd5)
-    val contains = graft.ops.Dedup.bloomKeyFilter(stream.sparkSession, bloom)
-    val hit = (0 until nBands).map { b =>
-      contains(graft.ops.Dedup.bandKeyExpr(cfg, lit(b),
-        (0 until bandSize).map(j => col(s"mh${b * bandSize + j}"))))
-    }.reduce(_ || _)
-    sig.filter(!hit)
-      .drop((0 until numHashes).map(h => s"mh$h"): _*)
-  }
+                                    useMd5: Boolean = false): DataFrame =
+    minhashKeyHits(stream, Right(bloom), textCol, numHashes, bandSize, k,
+      useMd5)
 
   /** Streaming INCREMENTAL near-dup drop for the HAMMING/multimodal
     * family — the [[dropNearDupsAgainstIndex]] mate over any ≤64-bit
@@ -237,27 +207,19 @@ object StreamingDedup {
     * (key-folded + loud via the index's cfg stamp). */
   def dropNearDupsAgainstHammingIndex(stream: DataFrame, index: DataFrame,
                                       sigCol: String, sigBits: Int,
-                                      maxHamming: Int): DataFrame = {
-    val cfg = graft.ops.Dedup.hammingCfg(sigBits, maxHamming)
-    val nBands = maxHamming + 1
-    val keys = graft.ops.Dedup.requireCfg(index, cfg)
-      .select("band_key").distinct().localCheckpoint()
-    val keyCols = graft.ops.Dedup.hammingBandKeyCols(
-      col(sigCol), sigBits, maxHamming)
-    val keyed = keyCols.zipWithIndex.foldLeft(stream) {
-      case (d, (kc, b)) => d.withColumn(s"__bk$b", kc)
-    }
-    val joined = (0 until nBands).foldLeft(keyed) { (d, b) =>
-      d.join(
-        keys.select(col("band_key").as(s"__bk$b"))
-          .withColumn(s"__hit$b", lit(1)),
-        Seq(s"__bk$b"), "left_outer")
-    }
-    val survives = (0 until nBands)
-      .map(b => col(s"__hit$b").isNull).reduce(_ && _)
-    joined.filter(survives)
-      .drop((0 until nBands).flatMap(b => Seq(s"__bk$b", s"__hit$b")): _*)
-  }
+                                      maxHamming: Int): DataFrame =
+    hammingKeyHits(stream, Left(index), sigCol, sigBits, maxHamming)
+
+  /** The hamming mirrors' key derivation: the pigeonhole band keys of
+    * the signature column ([[graft.ops.Dedup.hammingBandKeyCols]]),
+    * dropped on any key hit. */
+  private def hammingKeyHits(stream: DataFrame,
+                             lookup: Either[DataFrame, graft.ops.Dedup.BandKeyBloom],
+                             sigCol: String, sigBits: Int,
+                             maxHamming: Int): DataFrame =
+    graft.ops.PersistedIndex.dropKeyHits(stream,
+      graft.ops.Dedup.hammingBandKeyCols(col(sigCol), sigBits, maxHamming),
+      graft.ops.Dedup.hammingCfg(sigBits, maxHamming), lookup)
 
   /** Streaming INCREMENTAL SEMANTIC dedup against a persisted cell
     * index ([[graft.ops.Similarity.semanticCellIndex]]) — the third
@@ -311,17 +273,6 @@ object StreamingDedup {
   def dropNearDupsAgainstHammingIndexBloom(stream: DataFrame,
                                            bloom: graft.ops.Dedup.BandKeyBloom,
                                            sigCol: String, sigBits: Int,
-                                           maxHamming: Int): DataFrame = {
-    val cfg = graft.ops.Dedup.hammingCfg(sigBits, maxHamming)
-    require(bloom.cfg == cfg,
-      s"band-key bloom built for '${bloom.cfg}' but queried with '$cfg' " +
-        "— sigBits/maxHamming must match the index the bloom was built " +
-        "from (a mismatch would silently drop NOTHING)")
-    val contains = graft.ops.Dedup.bloomKeyFilter(stream.sparkSession, bloom)
-    val hit = graft.ops.Dedup.hammingBandKeyCols(
-        col(sigCol), sigBits, maxHamming)
-      .map(contains)
-      .reduce(_ || _)
-    stream.filter(!hit)
-  }
+                                           maxHamming: Int): DataFrame =
+    hammingKeyHits(stream, Right(bloom), sigCol, sigBits, maxHamming)
 }

@@ -88,6 +88,38 @@ class ComplexAggsSpec extends SparkTestBase {
     assert(m("m").isNullAt(3))
   }
 
+  test("cmean / cstd law: NaN propagates, an all-missing group is null " +
+    "(the csum convention, not a struct of nulls), n <= ddof is null") {
+    // g: 1+2i, 3+4i — mean 2+3i, Σ|x − x̄|² = 2 + 2 = 4; h: a NaN-im
+    // value; z: only null structs; one: a single value
+    val d = Seq(("g", Some((1.0, 2.0))), ("g", Some((3.0, 4.0))),
+        ("h", Some((1.0, Double.NaN))), ("h", Some((2.0, 1.0))),
+        ("z", None), ("z", None), ("one", Some((5.0, 5.0))))
+      .toDF("k", "zz")
+      .withColumn("z", when(col("zz").isNotNull,
+        struct(col("zz._1").as("re"), col("zz._2").as("im"))))
+      .drop("zz")
+    val z = col("z")
+    val m = d.groupBy("k")
+      .agg(cmean(z).as("mean"), cstd(z).as("s1"), cstd(z, 0).as("s0"),
+        csum(z).as("sum"))
+      .collect().map(r => r.getString(0) -> r).toMap
+    def mean(k: String) = m(k).getStruct(1)
+    assert(mean("g").getDouble(0) === 2.0 && mean("g").getDouble(1) === 3.0)
+    assert(math.abs(m("g").getDouble(2) - 2.0) < 1e-12)
+    assert(math.abs(m("g").getDouble(3) - math.sqrt(2.0)) < 1e-12)
+    // NaN in either part propagates: the im mean and the std are NaN
+    assert(mean("h").getDouble(0) === 1.5 && mean("h").getDouble(1).isNaN)
+    assert(m("h").getDouble(2).isNaN && m("h").getDouble(3).isNaN)
+    // all-missing: mean is null exactly like sum, and so are the stds
+    assert(m("z").isNullAt(4), "csum of an all-missing group")
+    assert(m("z").isNullAt(1), s"cmean of an all-missing group: ${m("z")}")
+    assert(m("z").isNullAt(2) && m("z").isNullAt(3))
+    // ddof guard: n = 1 <= ddof = 1 is null; ddof = 0 gives 0
+    assert(m("one").isNullAt(2))
+    assert(m("one").getDouble(3) === 0.0)
+  }
+
   test("min/max: lexicographic (re, im), nan* skip, plain variants " +
     "poison to NaN+NaNi on any NaN value") {
     val z = col("z")

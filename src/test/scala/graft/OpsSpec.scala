@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis, Web}
 import org.apache.spark.sql.functions._
 
 /** Pipeline-operator behavior on controlled inputs. */
@@ -115,6 +115,52 @@ class OpsSpec extends SparkTestBase {
         "doc_id", "doc_id", threshold = 0.8,
         numHashes = 4, bandSize = 1, k = 3, useMd5 = true)
       .select("doc_id").as[Long].collect().sorted.toSeq
+    // the same law over every other id-gated site: rows at threshold 0
+    // equal the default's, and at 0 no broadcast hint sits on a pinned
+    // (gated) side of the optimized plan, where the default has one
+    val cb = Array(0.0, 1.0, 0.0, 1.0)
+    val (m, k2) = (2, 2)
+    val cents = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0)))
+      .toDF("cid", "cv")
+    val vecCorpus = Seq((1L, Seq(1.0f, 0.0f)), (2L, Seq(0.0f, 1.0f)),
+      (4L, Seq(0.6f, 0.8f))).toDF("vec_id", "embedding")
+    val vecBatch = Seq((6L, Seq(1.0f, 0.0f)), (5L, Seq(0.55f, 0.835f)),
+      (7L, Seq(0.3f, 0.3f))).toDF("vec_id", "embedding")
+    val idxVec = Similarity.semanticCellIndex(vecCorpus, "vec_id",
+      "embedding", cents)
+    val idxPq = Similarity.semanticCellIndexPq(vecCorpus, "vec_id",
+      "embedding", cents, cb, m, k2)
+    val gated: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "crossNearDupPairs" -> (() => Dedup.crossNearDupPairs(batch, corpus,
+        "text", "doc_id", "doc_id", threshold = 0.8, numHashes = 4,
+        bandSize = 1, k = 3, useMd5 = true)),
+      "dropSemanticAgainstIndex" -> (() => Similarity
+        .dropSemanticAgainstIndex(vecBatch, "vec_id", "embedding", idxVec,
+          cents, threshold = 0.95)),
+      "dropSemanticAgainstIndexPq" -> (() => Similarity
+        .dropSemanticAgainstIndexPq(vecBatch, "vec_id", "embedding", idxPq,
+          vecCorpus, "vec_id", "embedding", cents, cb, m, k2,
+          threshold = 0.95)),
+      "pqTopKRefinedAgainstIndex" -> (() => Similarity
+        .pqTopKRefinedAgainstIndex(vecBatch, "vec_id", "embedding", idxPq,
+          vecCorpus, "vec_id", "embedding", cents, cb, m, k2, topK = 1,
+          refineFactor = 2, nProbe = 1)))
+    def rowSet(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSet
+    def pinnedBroadcasts(df: org.apache.spark.sql.DataFrame): Int = {
+      import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join}
+      import org.apache.spark.sql.execution.LogicalRDD
+      df.queryExecution.optimizedPlan.collect { case j: Join =>
+        Seq(j.hint.leftHint -> j.left, j.hint.rightHint -> j.right).count {
+          case (h, side) => h.exists(_.strategy.contains(BROADCAST)) &&
+            side.exists(_.isInstanceOf[LogicalRDD])
+        }
+      }.sum
+    }
+    val atDefault = gated.map { case (_, f) =>
+      val df = f()
+      (rowSet(df), pinnedBroadcasts(df))
+    }
     val (hintedPairs, hintedKept) = (pairs(), kept())
     try {
       spark.conf.set("spark.graft.dedup.idBroadcastThreshold", "0")
@@ -122,6 +168,15 @@ class OpsSpec extends SparkTestBase {
       assert(pairs() === hintedPairs)
       assert(kept() === hintedKept)
       assert(hintedPairs.nonEmpty && hintedKept.nonEmpty)
+      gated.zip(atDefault).foreach { case ((name, f), (rows, hints)) =>
+        val df = f()
+        assert(rows.nonEmpty, name)
+        assert(rowSet(df) === rows, name)
+        assert(hints > 0, s"$name: no gated broadcast at the default")
+        assert(pinnedBroadcasts(df) === 0,
+          s"$name: broadcast hint on a gated side at threshold 0:\n" +
+            df.queryExecution.optimizedPlan)
+      }
     } finally {
       spark.conf.unset("spark.graft.dedup.idBroadcastThreshold")
       spark.conf.unset("spark.graft.dedup.shingleBroadcastThreshold")
@@ -741,6 +796,118 @@ class OpsSpec extends SparkTestBase {
     assert(rows(graft.api.Layout.table(spark, "opsspec_dbl_idx_v3")) ===
       rows(Dedup.hammingBandIndex(corpusSig.unionByName(survSig),
         sigBits = 8, maxHamming = 1, maxBucket = 1)))
+  }
+
+  test("compactor law over every persisted-index family (MinHash, " +
+    "hamming, semantic exact, semantic PQ, URL): in-place compaction " +
+    "is refused, a delta built under another stamp is refused naming " +
+    "both stamps in a family-neutral message, and a delta appended " +
+    "twice compacts to the same rows as one append") {
+    import org.apache.spark.sql.DataFrame
+    val root = java.nio.file.Files
+      .createTempDirectory("opsspec_compact_law").toString
+    val texts = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog"),
+      (3L, "completely different text about spark engines here"))
+      .toDF("doc_id", "text")
+    val textSurv = Seq(
+      (6L, "novel survivor text with enough tokens to shingle cleanly"))
+      .toDF("doc_id", "text")
+    def sigOf(df: DataFrame) = df.select(col("doc_id").as("__id"),
+      Dedup.simhash32(col("text")).as("__sig"))
+    val cents = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0)))
+      .toDF("cid", "cv")
+    val cents2 = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.1, 1.0)))
+      .toDF("cid", "cv")
+    val (cb, cb2, m, k2) = (Array(0.0, 1.0, 0.0, 1.0),
+      Array(0.5, 1.5, 0.5, 1.5), 2, 2)
+    val vecs = Seq((1L, Seq(1.0f, 0.0f)), (2L, Seq(0.0f, 1.0f)))
+      .toDF("vec_id", "embedding")
+    val vecSurv = Seq((4L, Seq(0.6f, 0.8f))).toDF("vec_id", "embedding")
+    val urls = Seq((1L, "https://a.com/x", 1L), (2L, "https://b.com/y", 2L))
+      .toDF("doc_id", "url", "score")
+    val urlSurv = Seq((3L, "https://c.com/z", 1L))
+      .toDF("doc_id", "url", "score")
+    // (family, write the index to (table, path), delta, foreign-stamp
+    //  delta, (index stamp, foreign stamp), compact(in, delta, out, path))
+    case class Family(name: String, write: (String, String) => Unit,
+                      delta: DataFrame, foreign: DataFrame,
+                      stamps: (String, String),
+                      compact: (String, DataFrame, String, String) => Unit)
+    val families = Seq(
+      Family("minhash",
+        (t, p) => Dedup.writeBandIndex(texts, "text", "doc_id", t, 2,
+          numHashes = 4, useMd5 = true, path = Some(p)),
+        Dedup.bandIndexDelta(textSurv, "text", "doc_id", numHashes = 4,
+          useMd5 = true),
+        Dedup.bandIndexDelta(textSurv, "text", "doc_id", numHashes = 6,
+          useMd5 = true),
+        ("mh2:4:1:3:md5", "mh2:6:1:3:md5"),
+        (i, d, o, p) => Dedup.compactBandIndex(spark, i, d, o, 2,
+          path = Some(p))),
+      Family("hamming",
+        (t, p) => Dedup.writeHammingBandIndex(sigOf(texts), t, 2,
+          sigBits = 32, maxHamming = 3, path = Some(p)),
+        Dedup.hammingBandIndexDelta(sigOf(textSurv), 32, 3),
+        Dedup.hammingBandIndexDelta(sigOf(textSurv), 32, 2),
+        ("hm2:32:3", "hm2:32:2"),
+        (i, d, o, p) => Dedup.compactBandIndex(spark, i, d, o, 2,
+          maxBucket = 100000, path = Some(p))),
+      Family("semantic",
+        (t, p) => Similarity.writeSemanticCellIndex(vecs, "vec_id",
+          "embedding", cents, t, 2, path = Some(p)),
+        Similarity.semanticCellIndexDelta(vecSurv, "vec_id", "embedding",
+          cents),
+        Similarity.semanticCellIndexDelta(vecSurv, "vec_id", "embedding",
+          cents2),
+        (Similarity.centroidCfg(cents), Similarity.centroidCfg(cents2)),
+        (i, d, o, p) => Similarity.compactSemanticCellIndex(spark, i, d, o,
+          2, path = Some(p))),
+      Family("semantic_pq",
+        (t, p) => Similarity.writeSemanticCellIndexPq(vecs, "vec_id",
+          "embedding", cents, cb, m, k2, t, 2, path = Some(p)),
+        Similarity.semanticCellIndexPqDelta(vecSurv, "vec_id", "embedding",
+          cents, cb, m, k2),
+        Similarity.semanticCellIndexPqDelta(vecSurv, "vec_id", "embedding",
+          cents, cb2, m, k2),
+        (Similarity.pqCellCfg(cents, cb, m, k2),
+          Similarity.pqCellCfg(cents, cb2, m, k2)),
+        (i, d, o, p) => Similarity.compactSemanticCellIndex(spark, i, d, o,
+          2, path = Some(p))),
+      Family("url",
+        (t, p) => Web.writeUrlIndex(urls, "url", "doc_id", "score", t, 2,
+          path = Some(p)),
+        Web.urlIndexDelta(urlSurv, "url", "doc_id", "score"),
+        Web.urlIndexDelta(urlSurv, "url", "doc_id", "score")
+          .withColumn("cfg", lit("url:canon-v0")),
+        (Web.UrlCfg, "url:canon-v0"),
+        (i, d, o, p) => Web.compactUrlIndex(spark, i, d, o, 2,
+          path = Some(p))))
+    def rows(table: String) = graft.api.Layout.table(spark, table)
+      .collect().map(_.toSeq.map {
+        case b: Array[Byte] => b.toSeq
+        case x => x
+      }).toSet
+    families.foreach { f =>
+      val t = s"opsspec_law_${f.name}"
+      f.write(t, s"$root/${f.name}/v1")
+      val eIp = intercept[IllegalArgumentException] {
+        f.compact(t, f.delta, t, s"$root/${f.name}/inplace")
+      }
+      assert(eIp.getMessage.contains("NEW table"), s"${f.name}: ${eIp.getMessage}")
+      val eCfg = intercept[Throwable] {
+        f.compact(t, f.foreign, s"${t}_foreign", s"$root/${f.name}/foreign")
+      }
+      val msgs = causeMessages(eCfg)
+      assert(msgs.contains("config mismatch") &&
+        msgs.contains(f.stamps._1) && msgs.contains(f.stamps._2) &&
+        !msgs.contains("numHashes"), s"${f.name}: $msgs")
+      f.compact(t, f.delta, s"${t}_once", s"$root/${f.name}/once")
+      f.compact(t, f.delta.unionByName(f.delta), s"${t}_twice",
+        s"$root/${f.name}/twice")
+      assert(rows(s"${t}_twice") === rows(s"${t}_once"), f.name)
+      assert(rows(s"${t}_once").size > rows(t).size, f.name)
+    }
   }
 
   test("requireCfg: a cfg-less (stale-format) index is refused at plan " +
