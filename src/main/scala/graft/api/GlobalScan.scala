@@ -3,7 +3,7 @@ package graft.api
 import graft.aggs.CustomScans
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType, NumericType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, NumericType}
 
 /** Global (corpus-wide) and per-group prefix scans WITHOUT a
   * single-task window.
@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType, NumericType, 
   * (Spark even warns `WARN WindowExec: No Partition Defined`) — and
   * `Window.partitionBy(group)` does the same to a group that spans the
   * corpus. Every scan here is instead a fold over ONE two-pass
-  * boundary-carry engine ([[carryPinned]]), the Spark shape of flox's
-  * Blelloch driver (`dask_groupby_scan`, flox/dask.py:576-663,
+  * boundary-carry engine ([[graft.plans.CarryScan]]), the Spark shape
+  * of flox's Blelloch driver (`dask_groupby_scan`, flox/dask.py:576-663,
   * parameterized by `scan_binary_op`, flox/aggregations.py:792-846):
   *
   *   1. range-repartition on (group, order) and sort within partitions
@@ -29,7 +29,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType, NumericType, 
   *      group is by construction the last group of one partition and
   *      the first of the next;
   *   4. pass 2 — map-only: each partition replays the fold per row from
-  *      its broadcast carried-in state.
+  *      its carried-in state.
   *
   * The entry points differ only in their fold: the long scans
   * ([[prefixSum]], [[rowNumber]] and their grouped mates) sum a staged
@@ -37,29 +37,31 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType, NumericType, 
   * the extrema compare; a registered custom scan brings its own. An
   * empty group list makes the whole frame one group.
   *
-  * The range-parted data is pinned with `localCheckpoint` between the
-  * two passes: `repartitionByRange` picks boundaries by sampling, so an
-  * unpinned plan could recompute with DIFFERENT partition boundaries in
-  * pass 2 and pair rows with the wrong carries. The checkpoint is also
-  * what the result reads from, so the scan's input is materialized
-  * exactly once. EAGER, like `Dedup.connectedComponents`: construction
-  * runs the checkpoint + pass-1 jobs. Checkpoint blocks free when the
-  * result is GC'd, or deterministically via [[Caches.release]] (the
-  * result records the pin its second pass reads).
+  * Every entry point only builds a plan: the scan is a logical
+  * [[graft.plans.CarryScan]] node, and building it runs no job. The
+  * range exchange, the sort and both passes run inside the action
+  * ([[graft.plans.CarryScanExec]]). Nothing is pinned between the
+  * passes: both read the materialized range shuffle, sorted within each
+  * partition by (group, order) and then by every other orderable
+  * column, so a partition replays in pass 2 in exactly the order pass 1
+  * folded it, even where `order` ties. A finished query therefore holds
+  * no memory while its DataFrame is referenced, and a second action
+  * replays the same rows. Spark's column pruning reaches through the
+  * node: the scan reads the group, order and value columns plus the
+  * ones the query uses after it.
   *
-  * Both passes run on InternalRow (`queryExecution.toRdd`, output
-  * through one UnsafeProjection): only the value column and the state
-  * cross to external values, which is what the folds take. Rows are
+  * Both passes run on InternalRow (output through one UnsafeProjection):
+  * only the value column and the state cross to external values, which is what the folds take. Rows are
   * keyed by their float-normalized group columns, so groups are exactly
   * the window tier's (every NaN one group, −0.0 ≡ 0.0). The scan's
   * column replaces an input column of the same name in place, or is
   * appended — `withColumn`'s contract, so the tiers of
   * [[Dispatch.scanAuto]] return one schema.
   *
-  * At 100 TB: one full shuffle (range exchange), one materialization to
-  * executor memory/disk, one map-only pass — no further shuffles and no
-  * row ever crosses to the driver. This is the same plan a distributed
-  * sort runs, plus a map.
+  * At 100 TB: one full shuffle (range exchange), two reads of its
+  * output (the fold pass and the map-only replay) — no further shuffles
+  * and no row ever crosses to the driver. This is the same plan a
+  * distributed sort runs, plus a map.
   */
 object GlobalScan {
 
@@ -104,16 +106,16 @@ object GlobalScan {
 
   /** Per-GROUP inclusive prefix sum of `valueCol` (cast to long, null =
     * 0), as the non-null long `outCol`, raising on overflow like
-    * [[prefixSum]]. The value is staged as a temp column before the
-    * pin, so both passes read the SAME evaluated longs (a
+    * [[prefixSum]]. The value is staged as a temp column below the
+    * range exchange, so both passes read the SAME evaluated longs (a
     * non-deterministic value expression re-evaluating in pass 2 would
     * desync from the pass-1 carries), so the input must not already
     * have a `__scan_v` column. */
   def groupedPrefixSum(df: DataFrame, groupCols: Seq[String],
                        order: Seq[Column], valueCol: Column,
                        outCol: String): DataFrame =
-    carryPinned(df, groupCols, order, Left(valueCol), outCol,
-      CustomScans.addLongs, CustomScans.addLongs, None)._1
+    carryScan(df, groupCols, order, Left(valueCol), outCol,
+      CustomScans.addLongs, CustomScans.addLongs, None)
 
   /** Per-GROUP forward fill at UNBOUNDED group size — the §2.2 scan
     * escalation tier: [[groupedPrefixSum]] is the distributed cumsum,
@@ -203,9 +205,11 @@ object GlobalScan {
     * Scans with a `finish` post-transform (running fraction of total)
     * are supported too: finish needs the whole-group operand, which
     * here is a plain hash aggregation of the SAME agg (partial-agg
-    * map-side, safe at any group size) null-safe-equi-joined back over
-    * the carried scan — the group table has one row per group, so AQE
-    * broadcasts it; no group is ever materialized in one task.
+    * map-side, safe at any group size) null-safe-equi-joined onto the
+    * input below the carry — the group table has one row per group, so
+    * AQE broadcasts it; no group is ever materialized in one task. The
+    * input is read twice (the aggregation and the scan), so it must be
+    * deterministic, as the window tier's two frames also assume.
     * Window-tier equivalence holds when the fold/agg pair is exact
     * (integer monoids, selective carries) — the registrant's contract,
     * same as the fold itself. */
@@ -219,35 +223,35 @@ object GlobalScan {
       s"custom scan '$scanName' declares no associative binary_op " +
         "(ScanSpec.fold); only the window tier (GroupByScan) can run it"))
     val ord = if (spec.reverse) order.map(_.desc) else order
-    def runTo(out: String): (DataFrame, DataFrame) = {
-      val (raw, pinned) = carryPinned(df, groupCols, ord, Right(valueCol),
-        out, fold, spec.combine.getOrElse(fold), spec.foldOutType)
-      (spec.outFinalize.map(f => raw.withColumn(out, f(col(out))))
-        .getOrElse(raw), pinned)
+    def runTo(in: DataFrame, out: String): DataFrame = {
+      val raw = carryScan(in, groupCols, ord, Right(valueCol), out, fold,
+        spec.combine.getOrElse(fold), spec.foldOutType)
+      spec.outFinalize.map(f => raw.withColumn(out, f(col(out))))
+        .getOrElse(raw)
     }
     spec.finish match {
-      case None => runTo(outCol)._1
+      case None => runTo(df, outCol)
       case Some(fin) =>
         require(!df.columns.contains("__run") && !df.columns.exists(
           c => c.startsWith("__w_") || c == "__whole"),
           "input already has __run/__whole/__w_* columns")
-        val (raw, pinned) = runTo("__run")
         // whole-group operand: the same agg as the window tier's
-        // unbounded frame, via groupBy (mergeable partial aggregation)
-        // over the carry's pin, so `df` is read once and the result
-        // holds no plan of the caller's for Caches.release to touch
+        // unbounded frame, via groupBy (mergeable partial aggregation),
+        // joined onto the input BELOW the scan, so every read of the
+        // caller's plan sits under the CarryScan node (Caches.release
+        // never reaches it) and the scan carries `__whole` through
         val wkeys = groupCols.map(c => s"__w_$c")
-        val whole = pinned.groupBy(groupCols.map(col): _*)
+        val whole = df.groupBy(groupCols.map(col): _*)
           .agg(spec.agg(col(valueCol)).as("__whole"))
           .toDF(wkeys :+ "__whole": _*)
         // null-safe equality: null group keys are a group in both the
         // window tier and groupBy; a plain equi-join would drop them
         val cond = groupCols.zip(wkeys)
-          .map { case (a, b) => raw(a) <=> col(b) }
+          .map { case (a, b) => df(a) <=> col(b) }
           .reduceOption(_ && _).getOrElse(lit(true))
-        raw.join(whole, cond, "left")
+        runTo(df.join(whole, cond, "left").drop(wkeys: _*), "__run")
           .withColumn(outCol, fin(col("__run"), col("__whole")))
-          .drop(("__run" +: "__whole" +: wkeys): _*)
+          .drop("__run", "__whole")
     }
   }
 
@@ -285,37 +289,44 @@ object GlobalScan {
   private def carry(df: DataFrame, groupCols: Seq[String],
                     order: Seq[Column], valueCol: String, outCol: String,
                     fold: (Any, Any) => Any): DataFrame =
-    carryPinned(df, groupCols, order, Right(valueCol), outCol, fold, fold,
-      None)._1
+    carryScan(df, groupCols, order, Right(valueCol), outCol, fold, fold,
+      None)
 
   /** The name the long scans stage their value under. */
   private val Staged = "__scan_v"
 
-  /** The engine. `value` is either a long expression (cast, null = 0,
-    * staged as [[Staged]]; the output is then a non-null long) or a
-    * value column read as it is (the output takes `outType`, default
-    * the value's dtype, nullable). `fold` is a null-identity per-row
-    * step (state := fold(state, value), null state = empty); `combine`
-    * merges two segment STATES (null-identity both sides) and is what
-    * lets partition boundaries stitch with O(#partitions) driver
-    * traffic. Accumulating folds, whose state domain differs from the
-    * value's, must bring their own combine (see ScanSpec.combine).
+  /** The engine: a [[graft.plans.CarryScan]] node over `df`
+    * range-repartitioned on (group, order), planned by
+    * [[graft.plans.CarryScanStrategy]]. Building it runs no job.
     *
-    * Returns the result and the pinned, range-partitioned input it read,
-    * for callers that need a second pass over the input without
-    * re-reading `df`. Group keys are copied [[groupKeys]] UnsafeRows,
-    * and only the value column and the state cross to external values,
-    * through one converter each per partition, so the folds (and the
-    * registered [[CustomScans]] folds) keep their
-    * external-value contract. */
-  private def carryPinned(df: DataFrame, groupCols: Seq[String],
-                          order: Seq[Column],
-                          value: Either[Column, String], outCol: String,
-                          fold: (Any, Any) => Any,
-                          combine: (Any, Any) => Any,
-                          outType: Option[DataType]): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection, UnsafeRow}
+    * `value` is either a long expression (cast, null = 0, staged as
+    * [[Staged]]; the output is then a non-null long) or a value column
+    * read as it is (the output takes `outType`, default the value's
+    * dtype, nullable). `fold` is a null-identity per-row step (state :=
+    * fold(state, value), null state = empty); `combine` merges two
+    * segment STATES (null-identity both sides) and is what lets
+    * partition boundaries stitch with O(#partitions) driver traffic.
+    * Accumulating folds, whose state domain differs from the value's,
+    * must bring their own combine (see ScanSpec.combine). Only the value
+    * column and the state cross to external values, so the folds (and
+    * the registered [[CustomScans]] folds) keep their external-value
+    * contract.
+    *
+    * The range repartition carries an explicit partition count (the
+    * session's shuffle partitions), so AQE never coalesces it and a
+    * group spreads over as many ordered partitions as before. The
+    * result is `df`'s columns (a staged value is not one), the state
+    * replacing the column named `outCol` or else appended, under a
+    * fresh alias so that a self-join of a result deduplicates. */
+  private def carryScan(df: DataFrame, groupCols: Seq[String],
+                        order: Seq[Column],
+                        value: Either[Column, String], outCol: String,
+                        fold: (Any, Any) => Any,
+                        combine: (Any, Any) => Any,
+                        outType: Option[DataType]): DataFrame = {
+    import org.apache.spark.sql.GraftSqlBridge
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, NamedExpression, SortOrder}
+    import org.apache.spark.sql.catalyst.plans.logical.{Project, RepartitionByExpression}
     val spark = df.sparkSession
     val resolver = spark.sessionState.conf.resolver
     val (staged, valueCol) = value match {
@@ -326,121 +337,33 @@ object GlobalScan {
         (df.withColumn(Staged, coalesce(v.cast(LongType), lit(0L))), Staged)
       case Right(c) => (df, c)
     }
-    val gIdx = groupCols.map(staged.schema.fieldIndex)
-    val vIdx = staged.schema.fieldIndex(valueCol)
-    val sortCols = groupCols.map(col) ++ order
-    val parted = staged
-      .repartitionByRange(spark.sessionState.conf.numShufflePartitions, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .localCheckpoint() // pin sampled range boundaries between passes
-    val schema = parted.schema
-    val vType = schema(vIdx).dataType
-    val sType = outType.getOrElse(vType)
-    // output: `df`'s columns (a staged value is not one), the state
-    // replacing the column named `outCol` or else appended; srcIdx is
-    // each output column's slot in joined(input row, state)
-    val stateIdx = schema.length
-    val outField = StructField(outCol, sType, nullable = value.isRight)
-    val (outFields, srcIdx) = {
-      val kept = df.schema.zipWithIndex.map { case (f, i) =>
-        if (resolver(f.name, outCol)) (outField, stateIdx) else (f, i)
-      }
-      if (kept.exists(_._2 == stateIdx)) kept.unzip
-      else (kept :+ (outField -> stateIdx)).unzip
+    val parted = staged.repartitionByRange(
+      spark.sessionState.conf.numShufflePartitions,
+      (groupCols.map(col) ++ order): _*).queryExecution.analyzed
+    val sortOrder = parted match {
+      case r: RepartitionByExpression =>
+        r.partitionExpressions.map(_.asInstanceOf[SortOrder])
+      case other => throw new IllegalStateException(
+        s"range repartition analyzed to an unexpected plan:\n$other")
     }
-    def valueOf(toScala: Any => Any)(r: InternalRow): Any =
-      if (r.isNullAt(vIdx)) null else toScala(r.get(vIdx, vType))
-    // pass 1: per partition — first/last group keys and each boundary
-    // segment's folded state (null = segment holds no value)
-    val bounds = parted.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val keyOf = groupKeys(schema, gIdx)
-        val v = valueOf(CatalystTypeConverters.createToScalaConverter(vType)) _
-        val first = it.next()
-        val fk = keyOf(first).copy()
-        var fState: Any = fold(null, v(first))
-        var lk = fk
-        var lState: Any = fState
-        var sawOther = false
-        it.foreach { r =>
-          val k = keyOf(r)
-          if (k == lk) {
-            lState = fold(lState, v(r))
-            if (!sawOther) fState = lState
-          } else { sawOther = true; lk = k.copy(); lState = fold(null, v(r)) }
-        }
-        Iterator((pid, fk, fState, lk, lState))
-      }
-    }.collect().sortBy(_._1)
-    // chain carries: group g entering partition p from the left carries
-    // g's folded state over partitions < p
-    val carries = scala.collection.mutable.Map.empty[(Int, UnsafeRow), Any]
-    var carryKey: UnsafeRow = null
-    var carryVal: Any = null
-    bounds.foreach { case (pid, fk, fState, lk, lState) =>
-      if (carryKey != null && carryKey == fk && carryVal != null)
-        carries((pid, fk)) = carryVal
-      // g = lk's state leaving this partition: when the whole
-      // partition is one group, combine the carried-in state with the
-      // segment's; otherwise the segment started fresh inside this
-      // partition
-      val carryIn: Any =
-        if (carryKey != null && carryKey == fk) carryVal else null
-      val out: Any =
-        if (fk == lk) {
-          if (lState == null) carryIn
-          else if (carryIn == null) lState
-          else combine(carryIn, lState)
-        } else lState
-      carryKey = lk
-      carryVal = out
-    }
-    val bc = spark.sparkContext.broadcast(carries.toMap)
-    // pass 2: map-only — the fold replayed from each carried-in state,
-    // the input row and the state emitted as one UnsafeRow
-    val outRdd = parted.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-      val keyOf = groupKeys(schema, gIdx)
-      val v = valueOf(CatalystTypeConverters.createToScalaConverter(vType)) _
-      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(sType)
-      val proj = UnsafeProjection.create(srcIdx.zip(outFields).map {
-        case (i, f) => BoundReference(i, f.dataType, f.nullable)
-      })
-      val joined = new JoinedRow
-      val extra = new GenericInternalRow(1)
-      var cur: UnsafeRow = null
-      var state: Any = null
-      it.map { r =>
-        val k = keyOf(r)
-        if (cur == null || k != cur) {
-          cur = k.copy()
-          state = bc.value.getOrElse((pid, cur), null)
-        }
-        state = fold(state, v(r))
-        extra.update(0, toCatalyst(state))
-        proj(joined(r, extra)): InternalRow
-      }
-    }
-    val result = org.apache.spark.sql.GraftSqlBridge.internalCreateDataFrame(
-      spark, outRdd, StructType(outFields))
-    Caches.readsThrough(outRdd, parted)
-    (result, parted)
-  }
-
-  /** The group key: the group columns of an input row as an UnsafeRow,
-    * compared and hashed byte-wise (no columns: one empty key, so every
-    * row is one group). Floats are normalized first, as Spark's own
-    * grouping does (every NaN one value, −0.0 ≡ 0.0), so two rows share
-    * a key exactly when `Window.partitionBy` puts them in one partition.
-    * Keys stored across iterator steps must be COPIED: the projection
-    * reuses its buffer (the valid-until-next() contract). */
-  private def groupKeys(schema: StructType,
-                        gIdx: Seq[Int]): org.apache.spark.sql.catalyst.expressions.UnsafeProjection = {
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
-    UnsafeProjection.create(gIdx.map { i =>
-      val f = schema.fields(i)
-      org.apache.spark.sql.GraftSqlBridge.normalizeFloats(
-        BoundReference(i, f.dataType, f.nullable))
+    val keys = sortOrder.take(groupCols.length).map(_.child match {
+      case a: Attribute => a
+      case e =>
+        throw new IllegalArgumentException(s"group key $e is not a column")
     })
+    val valueAttr = parted.output(staged.schema.fieldIndex(valueCol))
+    val out = AttributeReference(outCol,
+      outType.getOrElse(valueAttr.dataType), nullable = value.isRight)()
+    val scan = graft.plans.CarryScan(keys, sortOrder.drop(groupCols.length),
+      valueAttr, out, fold, combine, parted)
+    val shown: Seq[NamedExpression] =
+      parted.output.take(df.schema.length).map { a =>
+        if (resolver(a.name, outCol)) Alias(out, outCol)() else a
+      }
+    val cols =
+      if (shown.exists(_.isInstanceOf[Alias])) shown
+      else shown :+ Alias(out, outCol)()
+    GraftSqlBridge.addStrategy(spark, graft.plans.CarryScanStrategy)
+    GraftSqlBridge.ofRows(spark, Project(cols, scan))
   }
 }

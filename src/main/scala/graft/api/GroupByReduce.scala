@@ -534,16 +534,17 @@ object GroupByReduce {
         col(weight).cast("long").as("__ww")): _*)
       .groupBy((by.map(col) :+ col("__wv")): _*)
       .agg(sum("__ww").as("__ww"))
+    // pinned: the targets and the picks both read the scan, and the
+    // scan itself pins nothing, so each would re-run the corpus-scale
+    // run-compression pass and the range shuffle from source (the
+    // two-consumer trap quantileDistributed documents)
     val cum = GlobalScan.groupedPrefixSum(
-      runs, by, Seq(col("__wv")), col("__ww"), "__wcw")
+      runs, by, Seq(col("__wv")), col("__ww"), "__wcw").localCheckpoint()
     // per-group total weight + targets: one tiny row per group, pinned
     // (the quantileDistributed convention — it feeds two consumers).
     // n is read off CUM's last inclusive prefix (max over the group),
-    // NOT a second aggregation of `runs`: groupedPrefixSum already
-    // checkpointed its range-partitioned input, so this aggregates the
-    // pinned data, where runs.groupBy would re-run the corpus-scale
-    // run-compression pass from source (r14 review — the same
-    // two-consumer trap quantileDistributed documents)
+    // NOT a second aggregation of `runs`, which would re-run the
+    // corpus-scale run-compression pass from source (r14 review)
     val targets = cum.groupBy(by.map(col): _*).agg(max("__wcw").as("__wn"))
       .select((by.map(col) ++ Seq(col("__wn")) ++
         qs.zipWithIndex.flatMap { case (q, i) =>

@@ -45,9 +45,15 @@ import org.apache.spark.sql.functions.col
   *    the first write) drops it — the same rows in the same order, with
   *    no hash evaluated per comparison.
   *
-  * Operational lore for cross-team tables: two layouts bucketed at
-  * DIFFERENT counts still join exchange-free when the counts divide
-  * (16 ⋈ 8 coalesces the bigger side) under
+  * Joins between layouts: [[table]] and [[writeBucketed]] register
+  * [[graft.plans.CoBucketedMerge]], which gives an un-hinted equi-join
+  * of two scans bucketed on exactly its keys the sort-merge hint. At
+  * default confs such a join would otherwise broadcast a side under
+  * `autoBroadcastJoinThreshold` (collected to the driver and held while
+  * the plan lives); merged, it plans no exchange and no broadcast. An
+  * explicit hint wins. Operational lore for cross-team tables: two
+  * layouts bucketed at DIFFERENT counts still join exchange-free when
+  * the counts divide (16 ⋈ 8 coalesces the bigger side) under
   * `spark.sql.bucketing.coalesceBucketsInJoin.enabled=true` —
   * law-pinned in LayoutSpec. Pick bucket counts as powers of two so
   * any two layouts are divisible.
@@ -90,6 +96,8 @@ object Layout {
     // bucket-id sort key is constant; the strategy drops it
     org.apache.spark.sql.GraftSqlBridge.addStrategy(df.sparkSession,
       graft.plans.BucketSortElision)
+    org.apache.spark.sql.GraftSqlBridge.addOptimization(df.sparkSession,
+      graft.plans.CoBucketedMerge)
     val laid = df.repartition(buckets, keys.map(col): _*)
     var w = laid.write.format("parquet").mode(mode)
       .bucketBy(buckets, keys.head, keys.tail: _*)
@@ -100,10 +108,17 @@ object Layout {
     w.saveAsTable(table)
   }
 
-  /** The bucketed table as a DataFrame (scan exposes the bucket
-    * partitioning + per-bucket sort order to the planner). */
-  def table(spark: SparkSession, name: String): DataFrame =
+  /** The bucketed table as a DataFrame. Its scan exposes the bucket
+    * partitioning to the planner; the per-bucket sort order only under
+    * `spark.sql.legacy.bucketedTableScan.outputOrdering=true` (see the
+    * object header). Registers [[graft.plans.CoBucketedMerge]] on the
+    * session, so an un-hinted join of two layouts bucketed on its keys
+    * merges their buckets instead of broadcasting one side. */
+  def table(spark: SparkSession, name: String): DataFrame = {
+    org.apache.spark.sql.GraftSqlBridge.addOptimization(spark,
+      graft.plans.CoBucketedMerge)
     spark.table(name)
+  }
 
   /** Integrity check for a layout written by [[writeBucketed]]:
     * every bucket id maps to AT MOST one data file (an EMPTY bucket

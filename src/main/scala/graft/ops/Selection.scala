@@ -136,14 +136,15 @@ object Selection {
                        pct: Int): DataFrame = {
     require(pct >= 0 && pct <= 100, "pct must be in [0,100]")
     val keyed = df.withColumn("__k", md5(col(idCol).cast("string").cast("binary")))
+    // Stratum sizes from RANKED, not from df (r21), and ranked pinned:
+    // the scan pins nothing, so without the pin the sizes and the join
+    // would each re-run the caller's whole upstream subtree (counting
+    // over `df` made q_cluster_sample pay the broadcast
+    // nearest-centroid assignment twice). Row-identical: the scan keeps
+    // every input row.
     val ranked = graft.api.GlobalScan.groupedRowNumber(
       keyed, Seq(stratumCol), Seq(col("__k"), col(idCol)), "__rn")
-    // Stratum sizes from RANKED, not from df (r21): groupedRowNumber
-    // pins its range-parted input with localCheckpoint, so this
-    // aggregate re-reads those blocks — counting over `df` instead
-    // re-ran the caller's whole upstream subtree a second time
-    // (q_cluster_sample paid the broadcast nearest-centroid assignment
-    // twice). Row-identical: the scan keeps every input row.
+      .localCheckpoint()
     val sizes = ranked.groupBy(stratumCol).agg(count(lit(1)).as("__n"))
     ranked.join(sizes, Seq(stratumCol))
       .filter(col("__rn") * 100 <= col("__n") * pct)
@@ -420,8 +421,11 @@ object Selection {
       .withColumn("n_tok",
         coalesce(TextAnalysis.tokenCount(col(textCol)).cast("long"), lit(0L)))
       .withColumn("__sh_k", md5(col(idCol).cast("string").cast("binary")))
+    // pinned: the total and the shard assignment both read the scan,
+    // which pins nothing itself (stratifiedSample's two-consumer rule)
     val cum = graft.api.GlobalScan.prefixSum(
       keyed, Seq(col("__sh_k"), col(idCol)), col("n_tok"), "__sh_cum")
+      .localCheckpoint()
     val total = cum.agg(sum(col("n_tok")).as("__sh_total"))
     cum.crossJoin(broadcast(total))
       .withColumn("shard",

@@ -1,13 +1,12 @@
 package org.apache.spark.sql
 
 import org.apache.spark.SparkContext
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.SparkStrategy
-import org.apache.spark.sql.types.StructType
 
 /** The one bridge into Spark's `private[sql]` and `private[spark]`
   * surface (hence this file's package, which reaches both): every graft
@@ -15,22 +14,21 @@ import org.apache.spark.sql.types.StructType
   * moves them breaks in one place (`ExtensionsSpec` calls every method
   * below).
   *
-  *  - `internalCreateDataFrame` wraps an `RDD[InternalRow]` as a
-  *    DataFrame WITHOUT the external-Row round trip that
-  *    `spark.createDataFrame(rdd, schema)` pays (per row: InternalRow →
-  *    external Row conversion in the producer, then a full
-  *    CatalystTypeConverters re-encode back to InternalRow in the
-  *    consumer). graft.api.GlobalScan's second pass produces rows that
-  *    are already internal; re-encoding them was pure per-row overhead
-  *    on the 100 TB pass (guide §4 — keep the hot path on
-  *    codegen-native representations).
+  *  - `ofRows` wraps a logical plan as a DataFrame (analyzed, not
+  *    executed): graft.api.GlobalScan returns its graft.plans.CarryScan
+  *    node this way, so the scan is part of the query's plan, not an
+  *    RDD built at construction.
   *  - `functionRegistry` is the session's function registry, where the
   *    codegen'd kernel expressions (graft.functions) register under
   *    `call_function` names.
   *  - `addStrategy` registers a planner strategy on the session's
   *    `experimental.extraStrategies` once (a second call is a no-op);
   *    `extraStrategies` lists them. graft.api.Layout registers
-  *    graft.plans.BucketSortElision this way before its writes.
+  *    graft.plans.BucketSortElision this way before its writes, and
+  *    graft.api.GlobalScan graft.plans.CarryScanStrategy.
+  *  - `addOptimization` does the same for an optimizer rule on
+  *    `experimental.extraOptimizations` (the "User Provided Optimizers"
+  *    batch); graft.api.Layout registers graft.plans.CoBucketedMerge.
   *  - `normalizeFloats` wraps a key expression in Spark's own grouping
   *    normalization (every NaN one value, −0.0 ≡ 0.0, through structs
   *    and arrays), so a byte-wise UnsafeRow key groups exactly as
@@ -43,9 +41,8 @@ object GraftSqlBridge {
   private def classic(spark: SparkSession) =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
 
-  def internalCreateDataFrame(spark: SparkSession, rdd: RDD[InternalRow],
-                              schema: StructType): DataFrame =
-    classic(spark).internalCreateDataFrame(rdd, schema, isStreaming = false)
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(classic(spark), plan)
 
   def functionRegistry(spark: SparkSession): FunctionRegistry =
     classic(spark).sessionState.functionRegistry
@@ -60,6 +57,14 @@ object GraftSqlBridge {
 
   def extraStrategies(spark: SparkSession): Seq[SparkStrategy] =
     classic(spark).experimental.extraStrategies
+
+  def addOptimization(spark: SparkSession, rule: Rule[LogicalPlan]): Unit = {
+    val em = classic(spark).experimental
+    em.synchronized {
+      if (!em.extraOptimizations.contains(rule))
+        em.extraOptimizations = em.extraOptimizations :+ rule
+    }
+  }
 
   def normalizeFloats(key: Expression): Expression =
     NormalizeFloatingNumbers.normalize(key)

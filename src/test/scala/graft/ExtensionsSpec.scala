@@ -327,13 +327,16 @@ class ExtensionsSpec extends SparkTestBase {
     import org.apache.spark.sql.catalyst.expressions.{Add, Expression}
     import org.apache.spark.sql.types._
     import org.apache.spark.unsafe.types.UTF8String
-    // internalCreateDataFrame: internal rows in, the same values out
-    val schema = StructType(Seq(StructField("k", StringType),
-      StructField("v", LongType, nullable = false)))
-    val rows = spark.sparkContext.parallelize(Seq(("a", 1L), ("b", 2L)), 2)
-      .map { case (k, v) => InternalRow(UTF8String.fromString(k), v) }
-    val df = GraftSqlBridge.internalCreateDataFrame(spark, rows, schema)
-    assert(df.schema === schema)
+    // ofRows: a logical plan in, analyzed (not run), the same values out
+    val local = org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+      Seq(org.apache.spark.sql.catalyst.expressions.AttributeReference(
+        "k", StringType)(), org.apache.spark.sql.catalyst.expressions
+        .AttributeReference("v", LongType, nullable = false)()),
+      Seq(InternalRow(UTF8String.fromString("a"), 1L),
+        InternalRow(UTF8String.fromString("b"), 2L)))
+    val df = GraftSqlBridge.ofRows(spark, local)
+    assert(df.schema === StructType(Seq(StructField("k", StringType),
+      StructField("v", LongType, nullable = false))))
     assert(df.as[(String, Long)].collect().sorted.toSeq ===
       Seq(("a", 1L), ("b", 2L)))
     // functionRegistry: a registered builder resolves through
@@ -357,6 +360,15 @@ class ExtensionsSpec extends SparkTestBase {
     GraftSqlBridge.addStrategy(fresh, noop)
     assert(GraftSqlBridge.extraStrategies(fresh).count(_ eq noop) === 1)
     assert(!GraftSqlBridge.extraStrategies(spark).exists(_ eq noop))
+    // addOptimization: the same once-only registration for a rule
+    val rule = new org.apache.spark.sql.catalyst.rules.Rule[
+        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
+      def apply(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) = p
+    }
+    GraftSqlBridge.addOptimization(fresh, rule)
+    GraftSqlBridge.addOptimization(fresh, rule)
+    assert(fresh.experimental.extraOptimizations.count(_ eq rule) === 1)
+    assert(!spark.experimental.extraOptimizations.exists(_ eq rule))
     // normalizeFloats: −0.0 and every NaN bit pattern key as one value
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
     val norm = UnsafeProjection.create(Seq(GraftSqlBridge.normalizeFloats(

@@ -719,56 +719,117 @@ class GlobalScanSpec extends SparkTestBase {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
   }
 
-  test("Caches.release frees the pin of every GlobalScan result and " +
-    "nothing the caller persisted") {
+  // the finish scan (running fraction of total) beside the eleven entry
+  // points: its whole-group operand is a second read of the input
+  private def finishEntryPoint(out: String): (String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
     import graft.aggs.CustomScans
-    import graft.api.Caches
-    import org.apache.spark.sql.types._
-    // a finish scan: its whole-group operand is a second read of the input
     CustomScans.register("cumfrac_rel", CustomScans.ScanSpec(
       agg = v => sum(v),
       finish = Some((run, whole) => run.cast("double") / whole),
-      fold = Some((st, v) =>
-        if (v == null) st else if (st == null) v
-        else java.lang.Long.valueOf(st.asInstanceOf[Long] + v.asInstanceOf[Long])),
-      combine = Some((a, b) =>
-        if (a == null) b else if (b == null) a
-        else java.lang.Long.valueOf(a.asInstanceOf[Long] + b.asInstanceOf[Long]))))
-    val sc = spark.sparkContext
+      fold = Some(CustomScans.addLongs), combine = Some(CustomScans.addLongs)))
+    "groupedCustomScan finish" -> (d => GlobalScan.groupedCustomScan(d,
+      Seq("g"), Seq(col("id")), "n", out, "cumfrac_rel"))
+  }
+
+  /** 300 rows of (g, id, v, n) under the caller's own persisted RDD, and
+    * the caller's own localCheckpoint pin of the same frame. */
+  private def callerInputs(body: (org.apache.spark.sql.DataFrame,
+      org.apache.spark.sql.DataFrame) => Unit): Unit = {
+    import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("g", StringType),
-      StructField("id", IntegerType), StructField("v", LongType)))
-    // the caller's own persisted RDD under a DataFrame, and the caller's
-    // own localCheckpoint pin
-    val callerRdd = sc.parallelize((0 until 300).map(i =>
-      org.apache.spark.sql.Row(s"g${i % 3}", i, (i % 7).toLong)), 3).persist()
+      StructField("id", IntegerType), StructField("v", DoubleType),
+      StructField("n", LongType)))
+    val callerRdd = spark.sparkContext.parallelize((0 until 300).map(i =>
+      org.apache.spark.sql.Row(s"g${i % 3}", i,
+        if (i % 5 == 0) null else (i % 7) * 0.5, (i % 7).toLong)), 3).persist()
     val fromRdd = spark.createDataFrame(callerRdd, schema)
     val callerPin = fromRdd.localCheckpoint()
-    val callers = sc.getPersistentRDDs.keySet
-    assert(callers.size >= 2)
-    val ops: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
-      "prefixSum" -> (d => GlobalScan.prefixSum(d, Seq(col("id")), col("v"), "o")),
-      "groupedRowNumber" -> (d => GlobalScan.groupedRowNumber(d, Seq("g"),
-        Seq(col("id")), "o")),
-      "groupedPrefixSum" -> (d => GlobalScan.groupedPrefixSum(d, Seq("g"),
-        Seq(col("id")), col("v"), "o")),
-      "groupedFfill" -> (d => GlobalScan.groupedFfill(d, Seq("g"),
-        Seq(col("id")), "v", "o")),
-      "groupedCustomScan finish" -> (d => GlobalScan.groupedCustomScan(d,
-        Seq("g"), Seq(col("id")), "v", "o", "cumfrac_rel")))
-    try for ((name, op) <- ops; (in, input) <- Seq("rdd" -> fromRdd,
-        "pin" -> callerPin)) {
-      val before = sc.getPersistentRDDs.keySet
-      val r = op(input)
-      assert(r.count() === 300L)
-      assert((sc.getPersistentRDDs.keySet -- before).nonEmpty, s"$name/$in")
-      Caches.release(r)
-      val now = sc.getPersistentRDDs.keySet
-      assert((now -- before).isEmpty, s"$name/$in still pins ${now -- before}")
-      assert(callers.subsetOf(now), s"$name/$in released a caller RDD")
-    } finally {
-      Caches.release(callerPin)
+    try body(fromRdd, callerPin)
+    finally {
+      graft.api.Caches.release(callerPin)
       callerRdd.unpersist()
     }
+  }
+
+  test("a GlobalScan result holds no pin once its action returns, on " +
+    "every entry point; a second action re-runs it to the same rows, " +
+    "and Caches.release frees nothing the caller persisted") {
+    import graft.api.Caches
+    val sc = spark.sparkContext
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|")).toSeq
+    callerInputs { (fromRdd, callerPin) =>
+      val callers = sc.getPersistentRDDs.keySet
+      assert(callers.size >= 2)
+      for ((name, op) <- entryPoints("o") :+ finishEntryPoint("o");
+           (in, input) <- Seq("rdd" -> fromRdd, "pin" -> callerPin)) {
+        val before = sc.getPersistentRDDs.keySet
+        val r = op(input)
+        val first = rows(r)
+        assert(first.length === 300, s"$name/$in")
+        assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+          s"$name/$in: the first action left ${sc.getPersistentRDDs.keySet -- before}")
+        assert(rows(r) === first, s"$name/$in: the second action")
+        assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+          s"$name/$in: the second action left ${sc.getPersistentRDDs.keySet -- before}")
+        Caches.release(r)
+        assert(callers.subsetOf(sc.getPersistentRDDs.keySet),
+          s"$name/$in released a caller RDD")
+      }
+    }
+  }
+
+  test("rows that tie on the order replay in one total order: every " +
+    "read returns the window tier's result over (order, other columns)") {
+    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      spark.conf.set("spark.sql.shuffle.partitions", "8")
+      // ids tie in runs of 7 with distinct values, nulls among them, so
+      // an ffill's carry depends on which tied row comes last
+      val df = (0 until 700).map { i =>
+        ("g" + (i % 2), i % 50, if (i % 3 == 0) None else Some(i * 0.5), i.toLong)
+      }.toDF("g", "id", "v", "n").repartition(5)
+      val w = Window.partitionBy("g").orderBy("id", "v", "n")
+      def byN(d: org.apache.spark.sql.DataFrame) =
+        d.select("n", "o").collect().map(r => r.getLong(0) -> r.get(1)).toMap
+      val want = byN(df.withColumn("o", last(col("v"), ignoreNulls = true).over(w)))
+      val got = GlobalScan.groupedFfill(df, Seq("g"), Seq(col("id")), "v", "o")
+      assert(byN(got) === want)
+      assert(byN(got) === want, "second action")
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+  }
+
+  test("building a GlobalScan result starts no job, on every entry " +
+    "point and the finish scan") {
+    callerInputs { (fromRdd, callerPin) =>
+      val ops = entryPoints("o") :+ finishEntryPoint("o")
+      val (_, jobs) = org.apache.spark.JobCount(spark.sparkContext) {
+        for ((_, op) <- ops; input <- Seq(fromRdd, callerPin)) op(input)
+      }
+      assert(jobs === 0)
+    }
+  }
+
+  test("a select after the scan shrinks the rows the scan reads to the " +
+    "columns it uses plus the group, order and value columns") {
+    val wide = scanInput.withColumn("pad", lit("x" * 40))
+      .withColumn("w", col("id") * 2)
+    def read(d: org.apache.spark.sql.DataFrame): Set[String] = {
+      d.collect()
+      val scans = graft.api.Layout.planNodes(d).collect {
+        case e: graft.plans.CarryScanExec => e.child.output.map(_.name).toSet
+      }
+      assert(scans.length === 1, d.queryExecution.executedPlan.toString)
+      scans.head
+    }
+    val ffill = GlobalScan.groupedFfill(wide, Seq("g"), Seq(col("id")), "v", "o")
+    assert(read(ffill) === wide.columns.toSet)
+    assert(read(ffill.select("w", "o")) === Set("g", "id", "v", "w"))
+    val cumsum = GlobalScan.groupedPrefixSum(wide, Seq("g"), Seq(col("id")),
+      col("n"), "o")
+    assert(read(cumsum.select("o")) === Set("g", "id", "__scan_v"))
+    assert(read(cumsum.filter(col("o") > 4).select("pad")) ===
+      Set("g", "id", "__scan_v", "pad"))
   }
 
   // every GlobalScan entry point, writing column `out` over the frame

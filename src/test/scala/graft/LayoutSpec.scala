@@ -153,6 +153,50 @@ class LayoutSpec extends SparkTestBase {
     }
   }
 
+  test("at default confs an un-hinted join of two layouts on their " +
+    "bucket keys merges the buckets: no broadcast, no shuffle; rows equal " +
+    "the broadcast plan's, and an explicit broadcast() still wins") {
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    writeBoth()
+    Layout.writeBucketed(
+      sf("lineitem").select(col("l_orderkey").as("k16"), col("l_quantity")),
+      "layoutspec_li16", Seq("k16"), 16, Seq("k16"), Some(s"$root/li16"))
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|")).toSeq
+    def broadcasts(d: org.apache.spark.sql.DataFrame) =
+      Layout.planNodes(d).count(_.isInstanceOf[BroadcastExchangeLike])
+    def join(ord: org.apache.spark.sql.DataFrame) =
+      ord.join(Layout.table(spark, "layoutspec_li"),
+        col("o_orderkey") === col("l_orderkey"))
+    val ord = Layout.table(spark, "layoutspec_ord")
+    val merged = join(ord)
+    val hinted = join(broadcast(ord))
+    val (got, want) = (rows(merged), rows(hinted))
+    assert(broadcasts(merged) === 0, merged.queryExecution.executedPlan)
+    assert(Layout.shuffleExchanges(merged) === 0,
+      merged.queryExecution.executedPlan)
+    assert(Layout.planNodes(merged).exists(_.isInstanceOf[SortMergeJoinExec]))
+    assert(broadcasts(hinted) === 1, hinted.queryExecution.executedPlan)
+    assert(got.nonEmpty && got === want)
+    // 16 ⋈ 8 under bucket coalescing: merged too, so the post-join agg
+    // is the only exchange
+    val coal = spark.conf
+      .get("spark.sql.bucketing.coalesceBucketsInJoin.enabled")
+    try {
+      spark.conf.set("spark.sql.bucketing.coalesceBucketsInJoin.enabled",
+        "true")
+      val j = Layout.table(spark, "layoutspec_li16")
+        .join(Layout.table(spark, "layoutspec_ord"),
+          col("k16") === col("o_orderkey"))
+        .groupBy("o_orderpriority").agg(sum("l_quantity").as("s"))
+      j.collect()
+      assert(broadcasts(j) === 0, j.queryExecution.executedPlan)
+      assert(Layout.shuffleExchanges(j) === 1, j.queryExecution.executedPlan)
+    } finally spark.conf.set(
+      "spark.sql.bucketing.coalesceBucketsInJoin.enabled", coal)
+  }
+
   test("persisted MinHash band index (Dedup.writeBandIndex): the " +
     "incremental-dedup candidate join shuffles ONLY the batch side; " +
     "raw-parquet control shuffles both; candidates identical") {
