@@ -22,12 +22,18 @@ the verdict of the pair rule:
 
 Direction (lower or higher is better) and bounds come from
 BENCHMARK.json; a metric it does not list is taken as lower-is-better
-with no bound. Standard library only.
+with no bound.
+
+Below the metrics it lists every operation named in all runs by a
+`[perfbench] op NAME n=... median_s=...` line: each side's median of the
+runs' per-operation medians and the pairs the change won, so a claim
+shows which operation moved. Standard library only.
 """
 
 import argparse
 import json
 import os
+import re
 import statistics
 import sys
 
@@ -44,6 +50,15 @@ def last_json(path):
                 except ValueError:
                     continue
     sys.exit("%s: no JSON result line" % path)
+
+
+OP_LINE = re.compile(r"\[perfbench\] op (\S+)\s+n=\d+ median_s=([0-9.]+)")
+
+
+def op_medians(path):
+    with open(path) as f:
+        return {m.group(1): float(m.group(2))
+                for m in map(OP_LINE.search, f) if m}
 
 
 def quartiles(xs):
@@ -92,6 +107,19 @@ def main():
         print("%-26s %30s %30s %3d/%-2d  %s" % (
             name, "%.4g/%.4g/%.4g" % (pq1, pmed, pq3),
             "%.4g/%.4g/%.4g" % (cq1, cmed, cq3), wins, n, verdict))
+    parent_ops = [op_medians(p) for p in a.parent]
+    change_ops = [op_medians(c) for c in a.change]
+    ops = sorted(o for o in parent_ops[0]
+                 if all(o in r for r in parent_ops + change_ops))
+    if ops:
+        print("%-26s %30s %30s %6s" % ("operation median_s", "parent median",
+                                       "change median", "wins"))
+    for op in ops:
+        p = [r[op] for r in parent_ops]
+        c = [r[op] for r in change_ops]
+        wins = sum(1 for x, y in zip(p, c) if y < x)
+        print("%-26s %30.4f %30.4f %3d/%-2d" % (
+            op, statistics.median(p), statistics.median(c), wins, n))
 
 
 if __name__ == "__main__":

@@ -1,8 +1,11 @@
 package graft.streaming
 
 import graft.ops.TextAnalysis
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
 
 /** Streaming exact deduplication for ingest pipelines: fingerprint the
   * content, then `dropDuplicatesWithinWatermark` — the state store
@@ -53,29 +56,36 @@ object StreamingDedup {
   /** Within-stream FUZZY near-dup drop — the streaming mirror of
     * [[graft.ops.Dedup.dropNearDups]] at LSH-candidate granularity:
     * each document explodes to its MinHash band keys, each band key is
-    * deduped within the watermark horizon, and a document SURVIVES iff
-    * it was the first claimant of ALL its bands (any band already
-    * claimed ⇒ the doc is an LSH candidate against earlier content ⇒
-    * dropped). Same posture as the streaming contamination family:
-    * over-drops on LSH false positives — there is no stored earlier
-    * text to Jaccard-verify against without unbounded state — but
-    * NEVER leaks a candidate duplicate.
+    * claimed by the first row that meets it within the watermark
+    * horizon, and a document SURVIVES iff it claimed ALL its bands (any
+    * band already claimed ⇒ the doc is an LSH candidate against earlier
+    * content ⇒ dropped). Same posture as the streaming contamination
+    * family: over-drops on LSH false positives — there is no stored
+    * earlier text to Jaccard-verify against without unbounded state —
+    * but NEVER leaks a candidate duplicate.
     *
-    * Two chained stateful operators, both watermark-bounded (the
-    * multi-stateful-operator shape Structured Streaming supports when
-    * every stage is event-time based): (1)
-    * `dropDuplicatesWithinWatermark` over (band_idx, band_hash) —
-    * state = one entry per band key within the horizon; (2) an
-    * append-mode windowed count per document — a doc's band rows all
-    * carry its own event time, so the count arrives complete and the
-    * window emits survivors once the watermark passes. State is
-    * O(band keys in horizon) + O(docs per open window): bounded.
+    * One stateful operator: `flatMapGroupsWithState` keyed by the band
+    * key (band_idx, band_hash) with an event-time timeout. Its state is
+    * the key's claimant: the claimant's (window, id) row is released
+    * when the watermark reaches the window end (the moment an
+    * append-mode window aggregate finalizes the window), and the claim
+    * itself is dropped once the watermark reaches the claimant's
+    * `ts + delay` (the `dropDuplicatesWithinWatermark` horizon), never
+    * before its row was released — so with `delay` shorter than
+    * `windowLen` a key stays claimed until its window end. Every band
+    * row of one (window, id) carries the same window end, so all its
+    * claims are released in the same micro-batch; a stateless
+    * repartition by (window, id) then keeps the documents that released
+    * exactly nBands claims. State is one claim per band key in the
+    * horizon plus the text once per pending document (only band 0's
+    * claim carries it: a document that lost band 0 cannot survive).
+    * Rows older than the watermark are dropped by the operator's
+    * late-row filter.
     *
     * Returns (window, idCol, textCol) of surviving documents; rows
-    * appear AFTER the watermark passes their window end (the price of
-    * the final aggregation — downstream sinks see a delayed but
-    * exactly-once survivor stream). Ties inside one microbatch keep
-    * the dedup operator's first-encountered row (the
+    * appear once the watermark reaches their window end (downstream
+    * sinks see a delayed but exactly-once survivor stream). Ties inside
+    * one micro-batch keep the first row met for the key (the
     * [[dropExactWithinWatermark]] contract). */
   def dropNearDupsWithinWatermark(df: DataFrame, textCol: String,
                                   idCol: String, tsCol: String,
@@ -86,19 +96,88 @@ object StreamingDedup {
     require(numHashes % bandSize == 0, "bandSize must divide numHashes")
     val nBands = numHashes / bandSize
     val sig = graft.ops.Dedup.withMinhashSignature(df, textCol, numHashes, k)
+    // the window is computed before the watermark is declared, so only
+    // tsCol carries the event-time metadata the operator filters on
     val bands = sig.select(
-      col(idCol), col(tsCol), col(textCol),
-      posexplode(array((0 until nBands).map(b =>
-        graft.ops.Dedup.bandHash((0 until bandSize).map(j =>
-          col(s"mh${b * bandSize + j}")))): _*))
-        .as(Seq("band_idx", "band_hash")))
-    bands
+        window(col(tsCol), windowLen).as("window"), col(idCol),
+        col(textCol), col(tsCol),
+        posexplode(array((0 until nBands).map(b =>
+          graft.ops.Dedup.bandHash((0 until bandSize).map(j =>
+            col(s"mh${b * bandSize + j}")))): _*))
+          .as(Seq("band_idx", "band_hash")))
       .withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark("band_idx", "band_hash")
-      .groupBy(window(col(tsCol), windowLen), col(idCol))
-      .agg(count(lit(1)).as("__n_won"), first(col(textCol)).as(textCol))
-      .filter(col("__n_won") === nBands)
-      .drop("__n_won")
+    val delayUs =
+      bands.schema(tsCol).metadata.getLong(EventTimeWatermark.delayKey) * 1000L
+    val claims = bands.select(col("window"), col(idCol),
+      when(col("band_idx") === 0, col(textCol)).as(textCol),
+      unix_micros(col("window.end")).as("__end_us"),
+      (unix_micros(col(tsCol)) + delayUs).as("__expires_us"),
+      col(tsCol), col("band_idx"), col("band_hash"))
+    val out = StructType(claims.schema.take(3))
+    val state = StructType(claims.schema.take(5) :+
+      StructField("__released", BooleanType))
+    claims.groupBy(col("band_idx"), col("band_hash"))
+      .as(Encoders.row(StructType(claims.schema.takeRight(2))),
+        Encoders.row(claims.schema))
+      .flatMapGroupsWithState(OutputMode.Append,
+        GroupStateTimeout.EventTimeTimeout)(claimBand)(
+        Encoders.row(state), Encoders.row(out))
+      .repartition(col("window"), col(idCol))
+      .mapPartitions(wonAllBands(nBands))(Encoders.row(out))
+  }
+
+  /** One band key's turn: the first row met claims an unclaimed key
+    * (the rest are near-dups and dropped), then [[releaseClaim]]. */
+  private def claimBand(key: Row, rows: Iterator[Row],
+                        state: GroupState[Row]): Iterator[Row] = {
+    if (!state.exists) {
+      val r = rows.next()
+      state.update(Row(r.get(0), r.get(1), r.get(2), r.getLong(3),
+        r.getLong(4), false))
+    }
+    releaseClaim(state)
+  }
+
+  /** Emits the claimant's (window, id, text) row once the watermark
+    * reaches its window end, drops the claim once the watermark also
+    * reached `ts + delay`, and otherwise re-arms the timeout at the next
+    * of the two (each call resets it). A moment `us` (micros) is
+    * reached at watermark `wm` (millis) iff `us <= wm * 1000`, which is
+    * how the window aggregate evicts and `dropDuplicatesWithinWatermark`
+    * expires; the timeout fires iff `floorDiv(us - 1, 1000) < wm`, the
+    * same condition, and a moment not yet reached never puts it below
+    * the current watermark. */
+  private def releaseClaim(state: GroupState[Row]): Iterator[Row] = {
+    val s = state.get
+    val wm = state.getCurrentWatermarkMs()
+    def reached(us: Long) = us <= wm * 1000L
+    val endUs = s.getLong(3)
+    val dropUs = math.max(endUs, s.getLong(4))
+    val emit = !s.getBoolean(5) && reached(endUs)
+    if (reached(dropUs)) state.remove()
+    else {
+      // a released claim only blocks its key: its text is not needed
+      if (emit) state.update(Row(s.get(0), s.get(1), null, endUs, s.getLong(4), true))
+      val next = if (emit || s.getBoolean(5)) dropUs else endUs
+      state.setTimeoutTimestamp(Math.floorDiv(next - 1, 1000L))
+    }
+    if (emit) Iterator.single(Row(s.get(0), s.get(1), s.get(2))) else Iterator.empty
+  }
+
+  /** One micro-batch's released claims, co-partitioned by (window, id):
+    * a document survives iff it released exactly nBands claims — the
+    * count the window aggregate made, complete here because all of a
+    * document's claims are released together. The text comes from its
+    * band 0 claim. */
+  private def wonAllBands(nBands: Int)(rows: Iterator[Row]): Iterator[Row] = {
+    val docs = scala.collection.mutable.LinkedHashMap.empty[(Any, Any), (Int, Any)]
+    rows.foreach { r =>
+      val key = (r.get(0), r.get(1))
+      val (n, text) = docs.getOrElse(key, (0, null))
+      docs(key) = (n + 1, if (text == null) r.get(2) else text)
+    }
+    docs.iterator.collect { case ((w, id), (n, text)) if n == nBands =>
+      Row(w, id, text) }
   }
 
   /** Streaming INCREMENTAL dedup against a persisted corpus band index

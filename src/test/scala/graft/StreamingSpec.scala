@@ -149,8 +149,204 @@ class StreamingSpec extends SparkTestBase {
       assert(got === expected, s"got $got expected $expected")
       assert(!got.contains(3L) && !got.contains(5L),
         "near-dups of earlier stream content must be dropped")
-      assert(q.lastProgress.stateOperators.length === 2) // dedup + window agg
+      assert(q.lastProgress.stateOperators.map(_.operatorName).toSeq ===
+        Seq("flatMapGroupsWithState"))
     } finally q.stop()
+  }
+
+  private val Minute = 60000L
+  private val Day = 1440 * Minute
+  private val T0 = 1704067200000L // 2024-01-01 00:00 UTC, in millis
+
+  /** Five tokens no other call's text shares: unrelated documents whose
+    * band keys collide with nothing (n picks the tokens). */
+  private def uniqueText(n: Int) = (0 until 5).map(j => s"tok${n}x$j").mkString(" ")
+
+  /** Runs [[graft.streaming.StreamingDedup.dropNearDupsWithinWatermark]]
+    * (4 bands of 1 hash, 1-minute windows) over a MemoryStream into a
+    * memory sink. `body` gets `feed`, which adds one micro-batch of
+    * (ts millis, id, text) and processes it, and `ids`, which lists the
+    * sink's ids with multiplicity. Returns the query's state operators
+    * after the last batch. */
+  private def nearDupQuery(delay: String, k: Int)(
+      body: (Seq[(Long, Long, String)] => Unit, () => Seq[Long]) => Unit)
+      : Seq[String] = {
+    import graft.streaming.StreamingDedup
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(Timestamp, Long, String)]
+    val name = "near_dup_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val q = StreamingDedup.dropNearDupsWithinWatermark(
+        input.toDF().toDF("ts", "id", "text"), "text", "id", "ts",
+        numHashes = 4, bandSize = 1, k = k, delay = delay,
+        windowLen = "1 minute")
+      .writeStream.outputMode("append").format("memory").queryName(name).start()
+    try {
+      body(rows => {
+        input.addData(rows.map { case (t, id, s) => (new Timestamp(t), id, s) }: _*)
+        q.processAllAvailable()
+      }, () => spark.table(name).select("id").collect().map(_.getLong(0)).toSeq)
+      q.lastProgress.stateOperators.map(_.operatorName).toSeq
+    } finally q.stop()
+  }
+
+  test("streaming fuzzy near-dup drop, seeded fuzz: survivors over many " +
+    "micro-batches equal the batch replay of the claim rule, horizon " +
+    "expiry included") {
+    import graft.ops.Dedup
+    val delayMs = 5 * Minute
+    val rng = new scala.util.Random(20261020L)
+    val vocab = (0 until 60).map(i => s"w$i")
+    def fresh() = Seq.fill(8 + rng.nextInt(5))(vocab(rng.nextInt(vocab.size)))
+    // about a third of the documents are planted near-dups of an earlier
+    // one: a copy with one word replaced, or an exact copy
+    val texts = scala.collection.mutable.ArrayBuffer[Seq[String]]()
+    (0 until 60).foreach { i =>
+      texts += (if (i > 0 && rng.nextInt(3) == 0) {
+        val src = texts(rng.nextInt(i))
+        if (rng.nextBoolean()) src
+        else src.updated(rng.nextInt(src.length), vocab(rng.nextInt(vocab.size)))
+      } else fresh())
+    }
+    val docs = texts.zipWithIndex.map { case (t, i) => (i + 1L, t.mkString(" ")) }
+    val keysOf = Dedup.withMinhashSignature(docs.toSeq.toDF("id", "text"),
+        "text", numHashes = 4, k = 2).collect()
+      .map(r => r.getAs[Long]("id") ->
+        (0 until 4).map(h => (h, r.getAs[Long](s"mh$h"))).toSet).toMap
+    // micro-batches of at most 6 documents in arrival order; a document
+    // sharing a band key with one already in the batch opens the next
+    // batch, so no tie inside a batch leaves the keeper to the engine
+    val batches = docs.foldLeft(Vector(Vector.empty[(Long, String)])) {
+      case (bs, d) =>
+        val cur = bs.last
+        if (cur.size < 6 && cur.forall(o => (keysOf(o._1) & keysOf(d._1)).isEmpty))
+          bs.init :+ (cur :+ d)
+        else bs :+ Vector(d)
+    }
+    // batch b sits at minute 3b; document j of it j seconds later
+    val timed = batches.zipWithIndex.map { case (b, bi) =>
+      b.zipWithIndex.map { case ((id, t), j) => (T0 + bi * 3 * Minute + j * 1000L, id, t) }
+    }
+    // replay: before batch b the watermark is (latest ts so far - delay)
+    // and every claim with ts + delay <= watermark is gone; each band
+    // row claims a free key, and a document survives iff it claimed all
+    val claims = scala.collection.mutable.Map[(Int, Long), Long]() // key -> ts + delay
+    var maxTs = Long.MinValue
+    var readmitted = 0
+    val expected = timed.flatMap { batch =>
+      val wm = if (maxTs == Long.MinValue) 0L else maxTs - delayMs
+      val expired = claims.filter(_._2 <= wm).keySet.toSet
+      claims --= expired
+      val won = batch.flatMap { case (t, id, _) =>
+        val ks = keysOf(id)
+        val wins = ks.forall(key => !claims.contains(key))
+        if (wins && (ks & expired).nonEmpty) readmitted += 1
+        ks.foreach(key => claims.getOrElseUpdate(key, t + delayMs))
+        if (wins) Some(id) else None
+      }
+      maxTs = math.max(maxTs, batch.map(_._1).max)
+      won
+    }
+    assert(expected.size > 10 && expected.size < docs.size - 10 && readmitted > 0,
+      s"fixture must exercise survive, drop and horizon expiry: " +
+        s"${expected.size}/${docs.size} survive, $readmitted readmitted")
+    val ops = nearDupQuery("5 minutes", k = 2) { (feed, ids) =>
+      timed.foreach(feed)
+      feed(Seq((T0 + 400 * Day, -1L, "flush")))
+      val got = ids()
+      assert(got.sorted === expected.sorted)
+    }
+    assert(ops === Seq("flatMapGroupsWithState"))
+  }
+
+  test("streaming fuzzy near-dup drop releases a survivor exactly when " +
+    "the watermark reaches its window end; a window that never closes " +
+    "is never emitted (bench shape: k = 3, delay 1 day)") {
+    nearDupQuery("1 day", k = 3) { (feed, ids) =>
+      feed(Seq((T0 + 10000L, 1L, uniqueText(1)), (T0 + 20000L, 2L, uniqueText(2))))
+      assert(ids().isEmpty)
+      // watermark one millisecond below the window end T0 + 1 minute
+      feed(Seq((T0 + Day + Minute - 1, 100L, uniqueText(100))))
+      assert(ids().isEmpty, "released before the watermark reached the window end")
+      feed(Seq((T0 + Day + Minute, 101L, uniqueText(101))))
+      assert(ids().sorted === Seq(1L, 2L))
+      feed(Seq((T0 + 400 * Day, 999L, uniqueText(999))))
+      assert(ids().sorted === Seq(1L, 2L, 100L, 101L),
+        "the far-future row's window never closes")
+    }
+  }
+
+  test("streaming fuzzy near-dup drop holds a claim until the watermark " +
+    "passes ts + delay, even after its claimant was released") {
+    val text = uniqueText(1)
+    nearDupQuery("10 minutes", k = 3) { (feed, ids) =>
+      feed(Seq((T0, 1L, text)))
+      feed(Seq((T0 + 11 * Minute, 101L, uniqueText(101)))) // watermark T0 + 1 min
+      assert(ids() === Seq(1L))
+      feed(Seq((T0 + 20 * Minute - 1, 102L, uniqueText(102)))) // T0 + 10 min - 1 ms
+      feed(Seq((T0 + 12 * Minute, 2L, text))) // claim still held: dropped
+      feed(Seq((T0 + 20 * Minute, 103L, uniqueText(103)))) // T0 + 10 min: expired
+      feed(Seq((T0 + 13 * Minute, 3L, text))) // claims the keys again
+      feed(Seq((T0 + 30 * Minute, 104L, uniqueText(104)))) // closes 3's window
+      val got = ids()
+      assert(got.count(_ == 1L) === 1 && !got.contains(2L) && got.contains(3L),
+        got.toString)
+    }
+  }
+
+  test("streaming fuzzy near-dup drop drops rows older than the watermark") {
+    nearDupQuery("10 minutes", k = 3) { (feed, ids) =>
+      feed(Seq((T0 + 20 * Minute, 101L, uniqueText(101)))) // watermark T0 + 10 min
+      feed(Seq((T0 + 5 * Minute, 1L, uniqueText(1)), // late
+        (T0 + 10 * Minute, 2L, uniqueText(2)), // at the watermark: late
+        (T0 + 15 * Minute, 3L, uniqueText(3))))
+      feed(Seq((T0 + 60 * Minute, 999L, uniqueText(999))))
+      assert(ids().sorted === Seq(3L, 101L))
+    }
+  }
+
+  test("streaming fuzzy near-dup drop counts one (window, id) fed in two " +
+    "micro-batches as one document") {
+    nearDupQuery("10 minutes", k = 3) { (feed, ids) =>
+      feed(Seq((T0 + 10000L, 7L, uniqueText(7)), (T0 + 10000L, 8L, uniqueText(8))))
+      // same window: 7 again (its rows all lose, 4 claims in all), 8
+      // with other text (4 more claims, 8 in all: not one text's bands)
+      feed(Seq((T0 + 40000L, 7L, uniqueText(7)), (T0 + 40000L, 8L, uniqueText(80))))
+      feed(Seq((T0 + 60 * Minute, 999L, uniqueText(999))))
+      assert(ids() === Seq(7L))
+    }
+  }
+
+  test("streaming fuzzy near-dup drop resumes from its checkpoint: a " +
+    "pending claim still drops its near-dup and is released exactly once") {
+    import graft.streaming.StreamingDedup
+    implicit val sqlCtx = spark.sqlContext
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_neardup_ck")
+    val sink = java.nio.file.Files.createTempDirectory("graft_neardup_sink")
+    val input = MemoryStream[(Timestamp, Long, String)]
+    val out = StreamingDedup.dropNearDupsWithinWatermark(
+      input.toDF().toDF("ts", "id", "text"), "text", "id", "ts",
+      numHashes = 4, bandSize = 1, k = 3, delay = "10 minutes",
+      windowLen = "1 minute")
+    // file sink: the memory sink refuses to recover from a checkpoint
+    def start() = out.writeStream.outputMode("append")
+      .option("checkpointLocation", ckpt.toString)
+      .format("parquet").option("path", sink.toString).start()
+    def ids() = spark.read.schema(out.schema).parquet(sink.toString)
+      .select("id").collect().map(_.getLong(0)).toSeq
+    def feed(q: org.apache.spark.sql.streaming.StreamingQuery,
+             rows: (Long, Long, String)*): Unit = {
+      input.addData(rows.map { case (t, id, s) => (new Timestamp(t), id, s) }: _*)
+      q.processAllAvailable()
+    }
+    val q1 = start()
+    try feed(q1, (T0, 1L, uniqueText(1))) finally q1.stop()
+    assert(ids().isEmpty, "the claim must still be pending at the stop")
+    val q2 = start()
+    try {
+      feed(q2, (T0 + 30000L, 2L, uniqueText(1)))
+      feed(q2, (T0 + 60 * Minute, 999L, uniqueText(999)))
+      assert(ids() === Seq(1L))
+    } finally q2.stop()
   }
 
   test("streaming incremental dedup against a static band index: " +
