@@ -20,6 +20,12 @@ the verdict of the pair rule:
               wider than that bound, so a move within it cannot show;
   no change   neither, and the spread is within the bound.
 
+Above the metrics it prints, per side, how many runs reported
+`correct: true` and the share of operations that failed (`failed` over
+`attempted`, summed over the runs), and it flags a larger failed share
+on the change. A verdict that rests on a run that was not correct carries
+the numbers of those runs (1-based, in the order given).
+
 Direction (lower or higher is better) and bounds come from
 BENCHMARK.json; a metric it does not list is taken as lower-is-better
 with no bound.
@@ -61,6 +67,14 @@ def op_medians(path):
                 for m in map(OP_LINE.search, f) if m}
 
 
+def health(results):
+    """(correct runs, failed ops, attempted ops, numbers of incorrect runs)."""
+    bad = [i + 1 for i, r in enumerate(results) if r.get("correct") is not True]
+    failed = sum(r.get("failed", 0) for r in results)
+    attempted = sum(r.get("attempted", 0) for r in results)
+    return len(results) - len(bad), failed, attempted, bad
+
+
 def quartiles(xs):
     if len(xs) == 1:
         return xs[0], xs[0], xs[0]
@@ -78,11 +92,26 @@ def main():
         sys.exit("need as many parent runs as change runs (one pair each)")
     cfg = json.load(open(os.path.join(ROOT, "BENCHMARK.json")))
     spec = {m["name"]: m for m in cfg["end_to_end"] + cfg["per_layer"]}
-    parent = [last_json(p)["metrics"] for p in a.parent]
-    change = [last_json(c)["metrics"] for c in a.change]
+    parent_runs = [last_json(p) for p in a.parent]
+    change_runs = [last_json(c) for c in a.change]
+    parent = [r["metrics"] for r in parent_runs]
+    change = [r["metrics"] for r in change_runs]
     names = [n for n in parent[0] if all(n in r for r in parent + change)]
     n = len(parent)
     print("== %s: %d pairs" % (a.workload or "workload", n))
+    shares = []
+    flags = []
+    for side, runs in (("parent", parent_runs), ("change", change_runs)):
+        ok, failed, attempted, bad = health(runs)
+        shares.append(failed / attempted if attempted else 0.0)
+        print("%-6s runs correct %d/%d, operations failed %d/%d (%.2f%%)%s" % (
+            side, ok, n, failed, attempted, 100 * shares[-1],
+            "; incorrect runs: %s" % ", ".join(map(str, bad)) if bad else ""))
+        if bad:
+            flags.append("%s run %s" % (side, ", ".join(map(str, bad))))
+    if shares[1] > shares[0]:
+        print("!! the change's failed share is larger than the parent's")
+    flag = "  [not correct: %s]" % "; ".join(flags) if flags else ""
     print("%-26s %30s %30s %6s  %s" % ("metric", "parent q1/median/q3",
                                        "change q1/median/q3", "wins", "verdict"))
     for name in names:
@@ -104,9 +133,9 @@ def main():
             verdict = "unresolved (parent spread %.1f%% > bound)" % (100 * spread)
         else:
             verdict = "no change"
-        print("%-26s %30s %30s %3d/%-2d  %s" % (
+        print("%-26s %30s %30s %3d/%-2d  %s%s" % (
             name, "%.4g/%.4g/%.4g" % (pq1, pmed, pq3),
-            "%.4g/%.4g/%.4g" % (cq1, cmed, cq3), wins, n, verdict))
+            "%.4g/%.4g/%.4g" % (cq1, cmed, cq3), wins, n, verdict, flag))
     parent_ops = [op_medians(p) for p in a.parent]
     change_ops = [op_medians(c) for c in a.change]
     ops = sorted(o for o in parent_ops[0]

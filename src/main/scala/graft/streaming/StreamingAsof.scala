@@ -50,6 +50,7 @@ object StreamingAsof {
                   right: org.apache.spark.sql.DataFrame,
                   keyCol: String, tsCol: String,
                   valueCol: String): Dataset[AsofEvent] = {
+    StreamingCheckpoints.install(left.sparkSession)
     import org.apache.spark.sql.functions.{col, lit}
     import org.apache.spark.sql.types._
     import left.sparkSession.implicits._
@@ -122,6 +123,7 @@ object StreamingAsof {
   /** Backward as-of over the tagged union stream. Append-mode output:
     * one row per LEFT event; right events only update state. */
   def asofBackward(events: Dataset[AsofEvent]): Dataset[AsofMatch] = {
+    StreamingCheckpoints.install(events.sparkSession)
     import events.sparkSession.implicits._
     events
       .groupByKey(_.key)
@@ -167,6 +169,7 @@ object StreamingAsof {
     * than `horizon`, so it is O(#keys x lefts-per-horizon-window).
     */
   def asofForward(events: Dataset[AsofEvent], horizon: Long): Dataset[AsofMatch] = {
+    StreamingCheckpoints.install(events.sparkSession)
     require(horizon >= 0, "horizon must be >= 0")
     import events.sparkSession.implicits._
     events
@@ -224,6 +227,7 @@ object StreamingAsof {
     * Same ordering contract and state bounds as [[asofForward]].
     */
   def asofNearest(events: Dataset[AsofEvent], horizon: Long): Dataset[AsofMatch] = {
+    StreamingCheckpoints.install(events.sparkSession)
     require(horizon >= 0, "horizon must be >= 0")
     import events.sparkSession.implicits._
     events

@@ -46,8 +46,10 @@ object StreamingContamination {
     * static benchmark — stateless stream-static left_anti broadcast
     * join, the streaming mirror of [[Selection.decontaminate]]. */
   def decontaminateExact(stream: DataFrame, benchmark: DataFrame,
-                         textCol: String): DataFrame =
+                         textCol: String): DataFrame = {
+    StreamingCheckpoints.install(stream.sparkSession)
     Selection.decontaminate(stream, benchmark, textCol)
+  }
 
   /** Per-band hash column b over signature columns mh0..mh{H-1},
     * bit-identical to the band key [[Dedup.lshCandidates]] and
@@ -84,6 +86,7 @@ object StreamingContamination {
                          textCol: String, threshold: Double = 0.8,
                          numHashes: Int = 6, bandSize: Int = 1,
                          k: Int = 3, useMd5: Boolean = false): DataFrame = {
+    StreamingCheckpoints.install(stream.sparkSession)
     require(numHashes % bandSize == 0, "bandSize must divide numHashes")
     val nBands = numHashes / bandSize
     val withSig = Dedup.withMinhashSignature(stream, textCol, numHashes, k, useMd5)
@@ -117,6 +120,7 @@ object StreamingContamination {
                          threshold: Double = 0.8, numHashes: Int = 6,
                          bandSize: Int = 1, k: Int = 3,
                          useMd5: Boolean = false): DataFrame = {
+    StreamingCheckpoints.install(stream.sparkSession)
     require(numHashes % bandSize == 0, "bandSize must divide numHashes")
     val nBands = numHashes / bandSize
     val streamBands = Dedup.withMinhashSignature(

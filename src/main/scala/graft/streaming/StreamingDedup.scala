@@ -21,11 +21,13 @@ object StreamingDedup {
     * watermark is declared on. */
   def dropExactWithinWatermark(df: DataFrame, textCol: String,
                                tsCol: String,
-                               delay: String = "10 minutes"): DataFrame =
+                               delay: String = "10 minutes"): DataFrame = {
+    StreamingCheckpoints.install(df.sparkSession)
     df.withColumn("__fp", TextAnalysis.fingerprint(col(textCol)))
       .withWatermark(tsCol, delay)
       .dropDuplicatesWithinWatermark("__fp")
       .drop("__fp")
+  }
 
   /** Streaming SEMANTIC dedup: drop documents whose embedding
     * product-quantizes to the SAME code word as earlier stream content
@@ -42,6 +44,7 @@ object StreamingDedup {
                                   tsCol: String, cb: Array[Double],
                                   m: Int, codesPerSub: Int,
                                   delay: String = "10 minutes"): DataFrame = {
+    StreamingCheckpoints.install(df.sparkSession)
     val subDim = cb.length / (m * codesPerSub)
     df.withColumn("__pq",
         graft.functions.VectorExprs.pqEncode(
@@ -93,6 +96,7 @@ object StreamingDedup {
                                   k: Int = 3,
                                   delay: String = "10 minutes",
                                   windowLen: String = "1 minute"): DataFrame = {
+    StreamingCheckpoints.install(df.sparkSession)
     require(numHashes % bandSize == 0, "bandSize must divide numHashes")
     val nBands = numHashes / bandSize
     val sig = graft.ops.Dedup.withMinhashSignature(df, textCol, numHashes, k)
@@ -227,6 +231,7 @@ object StreamingDedup {
                              lookup: Either[DataFrame, graft.ops.Dedup.BandKeyBloom],
                              textCol: String, numHashes: Int, bandSize: Int,
                              k: Int, useMd5: Boolean): DataFrame = {
+    StreamingCheckpoints.install(stream.sparkSession)
     require(numHashes % bandSize == 0, "bandSize must divide numHashes")
     val cfg = graft.ops.Dedup.minhashCfg(numHashes, bandSize, k, useMd5)
     val sig = graft.ops.Dedup.withMinhashSignature(
@@ -295,10 +300,12 @@ object StreamingDedup {
   private def hammingKeyHits(stream: DataFrame,
                              lookup: Either[DataFrame, graft.ops.Dedup.BandKeyBloom],
                              sigCol: String, sigBits: Int,
-                             maxHamming: Int): DataFrame =
+                             maxHamming: Int): DataFrame = {
+    StreamingCheckpoints.install(stream.sparkSession)
     graft.ops.PersistedIndex.dropKeyHits(stream,
       graft.ops.Dedup.hammingBandKeyCols(col(sigCol), sigBits, maxHamming),
       graft.ops.Dedup.hammingCfg(sigBits, maxHamming), lookup)
+  }
 
   /** Streaming INCREMENTAL SEMANTIC dedup against a persisted cell
     * index ([[graft.ops.Similarity.semanticCellIndex]]) — the third
@@ -316,9 +323,11 @@ object StreamingDedup {
     * time via the cfg stamp. */
   def dropSemanticAgainstCellIndex(stream: DataFrame, index: DataFrame,
                                    vecCol: String, centroids: DataFrame,
-                                   threshold: Double): DataFrame =
+                                   threshold: Double): DataFrame = {
+    StreamingCheckpoints.install(stream.sparkSession)
     graft.ops.Similarity.semanticDropAgainstIndexPlan(
       stream, vecCol, index.localCheckpoint(), centroids, threshold, None)
+  }
 
   /** Streaming semantic dedup against the PQ-CODED cell index
     * ([[graft.ops.Similarity.semanticCellIndexPq]]) — the corpus-scale
@@ -340,10 +349,12 @@ object StreamingDedup {
                                      vecCol: String, centroids: DataFrame,
                                      cb: Array[Double], m: Int,
                                      codesPerSub: Int, threshold: Double,
-                                     margin: Double = 0.0): DataFrame =
+                                     margin: Double = 0.0): DataFrame = {
+    StreamingCheckpoints.install(stream.sparkSession)
     graft.ops.Similarity.semanticDropAgainstIndexPqPlan(
       stream, vecCol, indexPq.localCheckpoint(), centroids, cb, m,
       codesPerSub, threshold, margin, None)
+  }
 
   /** [[dropNearDupsAgainstHammingIndex]] via the map-only bloom plan
     * constant ([[graft.ops.Dedup.hammingBandKeyBloom]]) — the

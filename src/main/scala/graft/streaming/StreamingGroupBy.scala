@@ -50,6 +50,7 @@ object StreamingGroupBy {
                      slideDuration: Option[String] = None,
                      watermarkDelay: String = "10 minutes",
                      opts: ReduceOptions = ReduceOptions()): DataFrame = {
+    StreamingCheckpoints.install(df.sparkSession)
     reductions.foreach { case (_, func, _) =>
       require(streamable(func) || (sketchable(func) && opts.approxQuantile),
         s"'$func' is not incrementally computable; streamable: $streamable; " +

@@ -36,6 +36,7 @@ object StreamingRangeJoin {
                 payload: Seq[String],
                 watermarkDelay: String = "10 minutes",
                 prefix: String = "rj_"): DataFrame = {
+    StreamingCheckpoints.install(left.sparkSession)
     require(upperSec >= lowerSec, "upperSec must be >= lowerSec")
     require(payload.nonEmpty, "payload must be non-empty")
     val w = math.max(upperSec - lowerSec, 1L)

@@ -52,6 +52,7 @@ object StreamingRolling {
     * event. */
   def rollingAgg(events: Dataset[RollEvent],
                  span: Long): Dataset[RollResult] = {
+    StreamingCheckpoints.install(events.sparkSession)
     require(span >= 0, "span must be >= 0")
     import events.sparkSession.implicits._
     events

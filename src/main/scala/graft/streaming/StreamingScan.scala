@@ -40,6 +40,7 @@ object StreamingScan {
     * result row per input event, in idx order within each micro-batch.
     */
   def ffillCumsum(events: Dataset[ScanEvent]): Dataset[ScanResult] = {
+    StreamingCheckpoints.install(events.sparkSession)
     import events.sparkSession.implicits._
     events
       .groupByKey(_.key)

@@ -35,6 +35,7 @@ object StreamingSessionize {
 
   /** Assign 1-based gap-session ids to a keyed event stream. */
   def sessionize(events: Dataset[SessionEvent], gap: Long): Dataset[SessionedEvent] = {
+    StreamingCheckpoints.install(events.sparkSession)
     require(gap >= 0, "gap must be >= 0")
     import events.sparkSession.implicits._
     events
